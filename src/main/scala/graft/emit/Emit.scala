@@ -1,7 +1,6 @@
 package graft.emit
 
 import graft.model._
-import graft.util.SaltedJoin
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -9,8 +8,12 @@ import org.apache.spark.sql.functions._
   *
   * Triple vocabulary mirrors the reference's edge set (SURVEY.md §7.0):
   * contains ≙ CONTAINS, mentions ≙ DEFINES, links_to ≙ INCLUDES,
-  * relates_to ≙ CALLS. All dedup via dropDuplicates — the Spark analog of
-  * Cypher MERGE idempotency (SURVEY.md Appendix B #5).
+  * relates_to ≙ CALLS. Every triple branch is distinct by construction
+  * (a distinct, a semi-join + distinct, or an explode of one sorted set
+  * per url, each under its own fixed `pred`), so the triple union is
+  * distinct on (subj, pred, obj) — the Spark analog of Cypher MERGE
+  * idempotency (SURVEY.md Appendix B #5) — and adjacency, a reorder of
+  * it, needs no further dedup.
   */
 object Emit {
 
@@ -30,35 +33,12 @@ object Emit {
     * entities come from that dictionary) — so the right join is a
     * BROADCAST of canon (guide §3.1: broadcast the side that fits): the
     * Zipf-skewed mention stream is then never shuffled at all, which
-    * dominates any skew mitigation (round 6; the salted shuffle join it
-    * replaces exchanged every mention AND exploded canon 32×, and is
-    * retained as [[saltedCanonicalMentions]] — the A4 skew shape for
-    * genuinely non-broadcastable dimensions, still spec-pinned equal). */
+    * dominates any skew mitigation (round 6 replaced a salted shuffle
+    * join that exchanged every mention AND exploded canon 32×). */
   def canonicalMentions(
       linked: Dataset[LinkedMention],
       canon: Dataset[CanonRow]): DataFrame =
     linked.toDF().join(broadcast(canon.toDF()), Seq("entity_id"), "inner")
-
-  /** Explicit salted-join shape (A4) for a canon-like dimension too big
-    * to broadcast — agreement reference for [[canonicalMentions]]. */
-  private[graft] def saltedCanonicalMentions(
-      linked: Dataset[LinkedMention],
-      canon: Dataset[CanonRow]): DataFrame = {
-    SaltedJoin.inner(
-      skewed = linked.toDF(),
-      dim = canon.toDF(),
-      key = "entity_id",
-      saltSource = col("url"))
-  }
-
-  /** Distinct (url, canon_id) page-entity pairs. Still used by the
-    * incremental updater's bucket-scoped rebuilds and the phase probes;
-    * the full pipeline consumes [[pageEntitySets]] instead (round 6). */
-  def pageEntities(
-      linked: Dataset[LinkedMention],
-      canon: Dataset[CanonRow]): DataFrame =
-    canonicalMentions(linked, canon)
-      .select(col("url"), col("canon_id")).distinct()
 
   /** Per-url SORTED-DISTINCT canonical entity ids — ONE url-keyed
     * aggregation shared by the mentions branch (explode) and the
@@ -76,8 +56,8 @@ object Emit {
       .groupBy(col("url"))
       .agg(array_sort(collect_set(col("canon_id"))).as("es"))
 
-  /** (url, canon_id) exploded view of [[pageEntitySets]] — row-equal to
-    * [[pageEntities]] (per-url sets are distinct by construction). */
+  /** (url, canon_id) exploded view of [[pageEntitySets]] — the distinct
+    * page-entity pairs (per-url sets are distinct by construction). */
   def explodePageEntitySets(sets: DataFrame): DataFrame =
     sets.select(col("url"), explode(col("es")).as("canon_id"))
 
@@ -239,12 +219,16 @@ object Emit {
     nodes.join(endpoints, Seq("node_id"), "left_semi").as[NodeRow]
   }
 
+  /** Adjacency is the triple table reordered to (src, dst, pred): a
+    * narrow projection with no shuffle. Triples are already distinct on
+    * (subj, pred, obj) — see the object doc; PipelineSpec pins it — and
+    * the incremental updater writes the same shape
+    * (Incremental.adjacencyFor). */
   def adjacency(triples: Dataset[TripleRow]): Dataset[AdjacencyRow] = {
     val spark = triples.sparkSession
     import spark.implicits._
     triples.toDF()
       .select(col("subj").as("src"), col("obj").as("dst"), col("pred"))
-      .dropDuplicates("src", "dst", "pred")
       .as[AdjacencyRow]
   }
 }

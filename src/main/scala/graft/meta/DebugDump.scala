@@ -14,10 +14,11 @@ import org.apache.spark.sql.functions._
 object DebugDump {
 
   def dump(g: Pipeline.Graph, dir: String): Unit = {
-    // triples/nodes are derived (not persisted) plans — cache them for
-    // the duration of the dump so its multiple actions don't re-run the
-    // emit joins each time
-    val triples = g.triples.toDF().persist()
+    // the Graph already caches triples (Pipeline.run persists it, and
+    // the caller owns that cache); nodes is a derived plan — cache it for
+    // the duration of the dump so its two actions don't re-run the emit
+    // joins each time
+    val triples = g.triples.toDF()
     val nodes = g.nodes.toDF().persist()
     try {
       triples.orderBy("subj", "pred", "obj").coalesce(1)
@@ -36,9 +37,6 @@ object DebugDump {
       java.nio.file.Files.write(p,
         summary.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       ()
-    } finally {
-      triples.unpersist()
-      nodes.unpersist()
-    }
+    } finally nodes.unpersist()
   }
 }

@@ -47,22 +47,35 @@ object Pipeline {
       candidates: Dataset[CandidateRow]) {
     /** (url, canon_id) exploded view of [[pageEntitySets]]. */
     def pageEntities: DataFrame = Emit.explodePageEntitySets(pageEntitySets)
-    /** Release the intermediate caches `run` installed. */
+    /** Release the caches `run` installed. */
     def unpersist(): Unit = {
       extracted.unpersist()
       candidates.unpersist()
       linked.unpersist()
       canon.unpersist()
       pageEntitySets.unpersist()
+      triples.unpersist()
     }
   }
 
-  /** In-memory dataflow. `extracted`, `linked` and `canon` are persisted
-    * (MEMORY_AND_DISK): triples fans out into 4 branches and nodes /
-    * adjacency re-consume them, so without a cache one action re-extracts
-    * every page up to 4× (extraction dominates cost at any scale). Call
-    * `Graph.unpersist()` when done. */
-  /** @param keepOrphans skip the degree-0 node cleanup (≙ the
+  /** In-memory dataflow. Every frame read by more than one consumer is
+    * persisted (MEMORY_AND_DISK, filled lazily by the first action that
+    * reads it); call `Graph.unpersist()` when done:
+    *  - `extracted`: triples, nodes and enrichment all re-read it, and
+    *    without a cache each read re-extracts every page (extraction
+    *    dominates cost at any scale);
+    *  - `candidates`: Link.resolve reads it twice (alias-df broadcast
+    *    and the linking pass);
+    *  - `linked` and `canon`: Graph outputs that the page-entity sets
+    *    re-read (canon also feeds the node table);
+    *  - `pageEntitySets`: the mentions and relates_to triple branches;
+    *  - `triples`: the output itself, and also the input of orphan
+    *    cleanup in `nodes` and of `adjacency` — without the cache each
+    *    of those re-runs all four triple branches (the contains distinct,
+    *    the links_to semi-join + distinct, the relates_to pair distinct
+    *    and the union).
+    *
+    * @param keepOrphans skip the degree-0 node cleanup (≙ the
     *        reference's --keep-orphans escape hatch,
     *        clangd_graph_rag_builder.py:200-207): canonical entities
     *        nothing mentions stay in the node table. */
@@ -92,21 +105,19 @@ object Pipeline {
       spark.sessionState.conf.numShufflePartitions)
     val extracted = Extract.run(pages).coalesce(cacheParts)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // persisted because resolve() consumes candidates twice: once to
-    // build the lazy alias-df broadcast and again in the linking pass
-    // (both inside the first action that touches `linked` — round 6
-    // removed the eager driver collect that used to run here)
+    // both resolve() reads of candidates happen inside the first action
+    // that touches `linked` (round 6 removed the eager driver collect
+    // that used to run here)
     val cands = Mention.detect(extracted, aliases)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val linked = Link.resolve(cands, nPages).persist(StorageLevel.MEMORY_AND_DISK)
     val entities = aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
     val canon = ConnectedComponents.canonMap(entities, sameas)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // shared by the mentions and relates_to branches: the canon join +
-    // per-url aggregation run once per action, not once per branch
     val pe = Emit.pageEntitySets(linked, canon)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val triples = Emit.triples(extracted, linked, canon, Some(pe))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val nodesAll = Emit.nodes(extracted, canon)
     val nodes =
       if (keepOrphans) nodesAll else Emit.dropOrphans(nodesAll, triples)

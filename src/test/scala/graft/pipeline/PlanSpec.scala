@@ -4,6 +4,10 @@ import graft.SparkSpec
 import graft.mention.Mention
 import graft.ops.{AnnOps, TextOps}
 import graft.synth.{Synth, SynthConfig}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions — the ".explain and iterate" review frozen
@@ -15,6 +19,21 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every node of a physical plan, descending into AQE's current plan,
+    * its query stages and reused exchanges — but not into a cached
+    * relation's own plan, which the scan reads instead of running. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case r: ReusedExchangeExec => r +: planNodes(r.child)
+    case o => o +: o.children.flatMap(planNodes)
+  }
+
+  /** The caches an executed plan scans (their builders, compared by
+    * identity). */
+  private def cacheScans(p: SparkPlan): Seq[AnyRef] =
+    planNodes(p).collect { case s: InMemoryTableScanExec => s.relation.cacheBuilder }
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -140,16 +159,47 @@ class PlanSpec extends SparkSpec {
       // triples fans out into 4 branches over extracted/linked/canon; each
       // branch must scan the cache — a SerializeFromObject in the triples
       // plan (outside the cached relation itself) would mean the
-      // extraction map runs again per branch. The logical tree does not
-      // descend into InMemoryRelation.cachedPlan, so collect() sees only
-      // the live plan.
-      val lp = g.triples.toDF().queryExecution.optimizedPlan
-      lp.collect {
-        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
-      } should not be empty
-      lp.collect {
-        case s: org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject => s
+      // extraction map runs again per branch. Triples is itself cached,
+      // so its live plan is one scan of that cache, and the plan that
+      // fills it is the cached relation's own; planNodes does not descend
+      // into the nested caches that plan reads.
+      val fill = g.triples.toDF().queryExecution.optimizedPlan match {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation =>
+          planNodes(r.cacheBuilder.cachedPlan)
+        case other => fail(s"triples is not cached: $other")
+      }
+      fill.collect { case s: InMemoryTableScanExec => s } should not be empty
+      fill.collect {
+        case s: org.apache.spark.sql.execution.SerializeFromObjectExec => s
       } shouldBe empty
+    } finally g.unpersist()
+  }
+
+  test("emit outputs read the cached triples: nodes and adjacency scan it, adjacency shuffle-free") {
+    val cfg = SynthConfig(nPages = 50L)
+    val g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
+      Synth.sameAs(spark, cfg), cfg.nPages)
+    try {
+      g.triples.count()
+      // once materialized, triples' own plan is a single scan of its cache
+      val own = cacheScans(g.triples.toDF().queryExecution.executedPlan)
+      own should have size 1
+      // orphan cleanup and adjacency read that cache instead of re-running
+      // the four triple branches; plans are read after collect(), so AQE's
+      // final plan is the one inspected (same QueryExecution object)
+      val nodes = g.nodes.toDF()
+      nodes.collect()
+      withClue("nodes: ") {
+        cacheScans(nodes.queryExecution.executedPlan).exists(_ eq own.head) shouldBe true
+      }
+      val adj = g.adjacency.toDF()
+      adj.collect()
+      val adjPlan = adj.queryExecution.executedPlan
+      withClue("adjacency: ") {
+        cacheScans(adjPlan).exists(_ eq own.head) shouldBe true
+        // a plain reorder of distinct triples: no dedup shuffle
+        planNodes(adjPlan).collect { case e: ShuffleExchangeExec => e } shouldBe empty
+      }
     } finally g.unpersist()
   }
 
@@ -252,9 +302,15 @@ class PlanSpec extends SparkSpec {
     val cfg = SynthConfig(nPages = 120L)
     Synth.pages(spark, cfg).repartition(60).write.mode("overwrite").parquet(dir)
     // one split per file (bin-packing would fold 60 tiny files into a
-    // handful of splits and the test would assert nothing)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1")
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    // handful of splits and the test would assert nothing): with both
+    // the split size and the per-file open cost equal to the largest
+    // file, no file is cut and no two files share a split. (A 1-byte
+    // split size also gives >= 60 partitions, but cuts every file into
+    // byte-sized splits and cost minutes of task dispatch.)
+    val largest = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length()).max
+    spark.conf.set("spark.sql.files.maxPartitionBytes", largest.toString)
+    spark.conf.set("spark.sql.files.openCostInBytes", largest.toString)
     try {
       val pages = spark.read.parquet(dir).as[graft.model.PageRow]
       assert(pages.rdd.getNumPartitions >= 60)
