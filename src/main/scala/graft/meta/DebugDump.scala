@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
 object DebugDump {
 
   def dump(g: Pipeline.Graph, dir: String): Unit = {
-    // the Graph already caches triples (Pipeline.run persists it, and
-    // the caller owns that cache); nodes is a derived plan — cache it for
-    // the duration of the dump so its two actions don't re-run the emit
-    // joins each time
+    // triples is cached by the Graph, whose caller releases it; nodes is
+    // a derived plan — cache it for the dump so its two actions don't
+    // re-run the emit joins each time
     val triples = g.triples.toDF()
     val nodes = g.nodes.toDF().persist()
     try {

@@ -47,14 +47,17 @@ object Pipeline {
       candidates: Dataset[CandidateRow]) {
     /** (url, canon_id) exploded view of [[pageEntitySets]]. */
     def pageEntities: DataFrame = Emit.explodePageEntitySets(pageEntitySets)
-    /** Release the caches `run` installed. */
+    /** Release the caches `run` installed, dependents first: releasing
+      * a cache re-plans every not-yet-filled cache built on top of it
+      * (Spark's CacheManager), so upstream-first order would re-plan
+      * `pageEntitySets` and `triples` once per upstream release. */
     def unpersist(): Unit = {
-      extracted.unpersist()
-      candidates.unpersist()
-      linked.unpersist()
-      canon.unpersist()
-      pageEntitySets.unpersist()
       triples.unpersist()
+      pageEntitySets.unpersist()
+      canon.unpersist()
+      linked.unpersist()
+      candidates.unpersist()
+      extracted.unpersist()
     }
   }
 

@@ -304,9 +304,8 @@ class PlanSpec extends SparkSpec {
     // one split per file (bin-packing would fold 60 tiny files into a
     // handful of splits and the test would assert nothing): with both
     // the split size and the per-file open cost equal to the largest
-    // file, no file is cut and no two files share a split. (A 1-byte
-    // split size also gives >= 60 partitions, but cuts every file into
-    // byte-sized splits and cost minutes of task dispatch.)
+    // file, no file is cut and no two files share a split (a smaller
+    // split size would cut every file into many splits, each a task)
     val largest = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length()).max
     spark.conf.set("spark.sql.files.maxPartitionBytes", largest.toString)
