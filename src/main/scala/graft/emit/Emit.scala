@@ -1,7 +1,7 @@
 package graft.emit
 
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Stage 5: materialize the graph — triple, node, adjacency tables.
@@ -42,13 +42,13 @@ object Emit {
 
   /** Per-url SORTED-DISTINCT canonical entity ids — ONE url-keyed
     * aggregation shared by the mentions branch (explode) and the
-    * relates_to branch (capped pairs). Round 6: the previous shape ran
-    * a (url, canon_id) distinct exchange AND a second groupBy(url)
-    * exchange inside relatesPairs over the same stream; this folds both
-    * into one exchange, and the explode view is distinct by
-    * construction. The collect_set buffer is bounded by the page's own
-    * distinct-entity count, which is bounded by its token count (same
-    * bound relatesPairs always had). */
+    * relates_to branch (capped pairs), in the full build and the
+    * incremental updater alike. Round 6: the previous shape ran a
+    * (url, canon_id) distinct exchange AND a second groupBy(url)
+    * exchange over the same stream; this folds both into one exchange,
+    * and the explode view is distinct by construction. The collect_set
+    * buffer is bounded by the page's own distinct-entity count, which is
+    * bounded by its token count. */
   def pageEntitySets(
       linked: Dataset[LinkedMention],
       canon: Dataset[CanonRow]): DataFrame =
@@ -61,6 +61,28 @@ object Emit {
   def explodePageEntitySets(sets: DataFrame): DataFrame =
     sets.select(col("url"), explode(col("es")).as("canon_id"))
 
+  // ---- per-predicate (subj, obj) tables: `triples` is their union under
+  // the fixed pred literals, and the incremental updater writes each one
+  // from the same function over its bucket scope
+
+  /** mentions: (page url, canonical entity) from [[pageEntitySets]]. The
+    * per-url sets are distinct by construction — the explode IS the
+    * distinct (url, canon_id) stream, no extra exchange. */
+  def mentionsFromSets(sets: DataFrame): DataFrame =
+    explodePageEntitySets(sets)
+      .select(col("url").as("subj"),
+        concat(lit("ent:"), col("canon_id")).as("obj"))
+
+  /** links_to from `pages` (url, links) to urls present in `urls` — the
+    * MATCH-must-exist FK semantics of the reference's INCLUDES ingest
+    * (neo4j_manager.py:180-205). `pages` may be any subset of the url
+    * set; validity is always checked against the whole of `urls`. */
+  def linksTo(pages: DataFrame, urls: DataFrame): DataFrame =
+    pages.select(col("url").as("subj"), explode(col("links")).as("obj"))
+      .join(urls.select(col("url").as("obj")), Seq("obj"), "left_semi")
+      .distinct()
+      .select(col("subj"), col("obj"))
+
   /** FROZEN relates_to policy: co-mention pairs on a page are generated
     * among at most this many distinct entities — the RelatesCap SMALLEST
     * canon ids on the page (deterministic under any parallelism). A
@@ -72,40 +94,19 @@ object Emit {
     * NaiveKg and the DuckDB q29 oracle encode the identical rule. */
   val RelatesCap = 64
 
-  /** Distinct (subj, obj) relates_to pairs from the (url, canon_id)
-    * page-entity table: per url, sorted-distinct canon ids capped at
-    * RelatesCap, pairs generated from the capped ARRAY (never a
-    * quadratic self-join — the per-row output is bounded by
-    * construction). The collect_set buffer is bounded by the page's own
-    * distinct-entity count, which is bounded by its token count. */
-  def relatesPairs(perPage: DataFrame): DataFrame = {
-    val capped = perPage.groupBy(col("url"))
-      .agg(slice(array_sort(collect_set(col("canon_id"))), 1, RelatesCap)
-        .as("es"))
-    relatesFromCapped(capped.select(col("es")))
-  }
-
-  /** relates_to pairs from an already-aggregated per-url entity-set
-    * frame ([[pageEntitySets]]) — the pipeline path: no second
-    * groupBy(url) over the mention stream. Identical policy: pairs
-    * among the RelatesCap SMALLEST canon ids per page. */
+  /** relates_to: co-mention on a page → distinct (subj, obj) pairs
+    * between canonical entities (≙ CALLS: MERGE collapses multi-site
+    * pairs to one edge; self-pairs excluded — a page mentioning one
+    * entity twice is not a relation). Pairs come from the RelatesCap-
+    * capped sorted ARRAY of [[pageEntitySets]], never a quadratic
+    * self-join: the per-row output is bounded by construction. */
   def relatesFromSets(sets: DataFrame): DataFrame =
-    relatesFromCapped(sets.select(slice(col("es"), 1, RelatesCap).as("es")))
-
-  private def relatesFromCapped(capped: DataFrame): DataFrame =
-    capped
+    sets.select(slice(col("es"), 1, RelatesCap).as("es"))
       .select(explode(graft.functions.ArrayPairs.array_pairs(col("es")))
         .as("p"))
       .select(concat(lit("ent:"), col("p.x")).as("subj"),
         concat(lit("ent:"), col("p.y")).as("obj"))
       .distinct()
-
-  /** Built-ins-only reference for ArrayPairs (nested interpreted
-    * transforms; spec-pinned equal to the native expression). */
-  def pairsHof(es: Column): Column =
-    flatten(transform(es, (a, i) =>
-      transform(slice(es, i + 2, size(es)),
-        b => struct(a.as("x"), b.as("y")))))
 
   /** @param pageEntitySetsPre optional pre-computed (and ideally
     *        persisted — Pipeline.run/build do) [[pageEntitySets]] frame
@@ -119,35 +120,19 @@ object Emit {
     val spark = extracted.sparkSession
     import spark.implicits._
     val ex = extracted.toDF()
+    val sets = pageEntitySetsPre.getOrElse(pageEntitySets(linked, canon))
+    def withPred(pred: String)(edges: DataFrame) =
+      edges.select($"subj", lit(pred).as("pred"), $"obj")
 
     // full path hierarchy: root → host → …sections… → page (the FOLDER
     // chain, clangd_symbol_nodes_builder.py:416-424,502-522)
-    val contains = Hierarchy.containsEdges(ex.select($"url"))
-      .select($"subj", lit(Pred.Contains).as("pred"), $"obj")
+    val contains =
+      withPred(Pred.Contains)(Hierarchy.containsEdges(ex.select($"url")))
+    val mentions = withPred(Pred.Mentions)(mentionsFromSets(sets))
+    val links = withPred(Pred.LinksTo)(linksTo(ex, ex))
+    val relates = withPred(Pred.RelatesTo)(relatesFromSets(sets))
 
-    val sets = pageEntitySetsPre.getOrElse(pageEntitySets(linked, canon))
-
-    // per-url sets are distinct by construction — the explode IS the
-    // distinct (url, canon_id) stream, no extra exchange
-    val mentions = explodePageEntitySets(sets)
-      .select($"url".as("subj"), lit(Pred.Mentions).as("pred"),
-        concat(lit("ent:"), $"canon_id").as("obj"))
-
-    // links only to pages that exist — the MATCH-must-exist FK semantics
-    // of the reference's INCLUDES ingest (neo4j_manager.py:180-205).
-    val linksTo = ex.select($"url".as("subj"), explode($"links").as("obj"))
-      .join(ex.select($"url".as("obj")), Seq("obj"), "left_semi")
-      .distinct()
-      .select($"subj", lit(Pred.LinksTo).as("pred"), $"obj")
-
-    // co-mention on a page → relates_to between canonical entities
-    // (≙ CALLS: MERGE collapses multi-site pairs to one edge; self-pairs
-    // excluded — a page mentioning one entity twice is not a relation).
-    val relates = relatesFromSets(sets)
-      .select($"subj", lit(Pred.RelatesTo).as("pred"), $"obj")
-
-    contains.union(mentions).union(linksTo)
-      .union(relates).as[TripleRow]
+    contains.union(mentions).union(links).union(relates).as[TripleRow]
   }
 
   /** Node table BEFORE orphan cleanup. Entity rows cover EVERY canonical

@@ -1,14 +1,12 @@
 package graft.incr
 
-import graft.extract.{Extract, HtmlText}
+import graft.extract.Extract
 import graft.link.Link
 import graft.mention.Mention
 import graft.meta.Snapshot
 import graft.model._
 import graft.pipeline.Pipeline
-import graft.canon.ConnectedComponents
 import graft.emit.Emit
-import graft.util.SaltedJoin
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,13 +31,17 @@ import org.apache.spark.sql.functions._
   *    exact). Relinks score against the corpus-wide df, never the
   *    dirty-scope df.
   *  - triples/adjacency live as one sub-table per predicate, bucketed by
-  *    subj hash: mentions (url-local given canon) rebuild per relink
-  *    bucket — or globally when the canon map changed (checksum-compared);
-  *    links_to rebuilds for dirty buckets ∪ buckets linking to an
-  *    added/deleted url (edge validity depends on target existence);
-  *    contains rebuilds only when the url set changed; relates_to is
-  *    global by nature (cross-page co-mention dedup), recomputed from
-  *    column-pruned linked+canon — no html/text is ever re-read.
+  *    subj hash. Each predicate is built by the Emit function the full
+  *    build unions in Emit.triples (contains by Hierarchy.containsEdges),
+  *    applied to the update's scope: mentions (url-local given canon)
+  *    rebuild per relink bucket — or globally when the canon map changed
+  *    (checksum-compared); links_to rebuilds for dirty buckets ∪ buckets
+  *    linking to an added/deleted url (edge validity depends on target
+  *    existence, checked against the full url set); contains rebuilds
+  *    only when the url set changed; relates_to is global by nature
+  *    (cross-page co-mention dedup). mentions and relates_to share one
+  *    Emit.pageEntitySets frame over column-pruned linked + canon — no
+  *    html/text is ever re-read.
   *  - enriched: PAGE rows rebuild for dirty buckets ∪ link-neighbor
   *    buckets (old and new edges — context summaries read neighbors);
   *    clean pages' summaries are REUSED from the stored table, so no
@@ -169,15 +171,7 @@ object Incremental {
     // base survives any crash point before it, but the crashed run's
     // partial extracted overwrites need not be dirty vs THIS run's
     // snapshot, hence the full extraction scope).
-    val stageVersions = Seq(
-      "urlhash" -> "diff-v1", "extracted" -> Extract.StageVersion,
-      "candidates" -> "mention-v1", "aliasdf" -> "link-v1",
-      "linked" -> "link-v1", "canon" -> "canon-v1",
-      "triples" -> Pipeline.EmitVersion, "nodes" -> Pipeline.EmitVersion,
-      "adjacency" -> Pipeline.EmitVersion,
-      "enriched" -> Pipeline.EnrichVersion,
-      "ann_ivf" -> graft.ops.AnnOps.ivfVersion(
-        Pipeline.AnnSeed, Pipeline.AnnCells, Pipeline.AnnDim))
+    val stageVersions = Pipeline.StageVersions
     // version guard (mirrors Snapshot.stage's (snapshotId, version)
     // match): a manifest committed under a DIFFERENT stage version means
     // the stored table carries old semantics or an old schema — an
@@ -300,11 +294,7 @@ object Incremental {
     if (candidatesChanged) {
       overwriteBuckets(spark, candidatesDirty, candDir, dirty)
       // aliasdf: same dirty buckets (df_b is bucket-local)
-      overwriteBuckets(spark,
-        candidatesDirty.select(col("bucket"), col("url"), col("alias"))
-          .distinct()
-          .groupBy(col("bucket"), col("alias"))
-          .agg(count(lit(1)).as("df_b")),
+      overwriteBuckets(spark, Pipeline.bucketAliasDf(candidatesDirty),
         adfDir, dirty)
     }
     candidatesDirty.unpersist()
@@ -361,38 +351,45 @@ object Incremental {
 
     // ---- canon: recompute; a changed map moves mentions/relates rows in
     // every bucket, so compare before deciding the mentions scope
-    val entities = aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-    val canonNew = ConnectedComponents.canonMap(entities, sameas).toDF()
-      .localCheckpoint()
+    val canonNew = Pipeline.canonOf(aliases, sameas).toDF().localCheckpoint()
     val canonChanged = force ||
       checksumOf(canonNew, Seq("entity_id", "canon_id")) != oldCanonCk
     canonNew.write.mode(SaveMode.Overwrite).parquet(s"$outDir/canon/data")
 
     val ex = spark.read.parquet(exDir)
-    val lk = spark.read.schema(linkedSchema).parquet(s"$outDir/linked/data")
     val canon = spark.read.parquet(s"$outDir/canon/data")
-
-    def cmOf(linked: DataFrame): DataFrame =
-      SaltedJoin.inner(linked.select(col("url"), col("entity_id")),
-          canon, "entity_id", col("url"))
-        .select(col("url"), col("canon_id")).distinct()
 
     // each derived table rebuilds only if its inputs changed
     val mentionsNeeded = canonChanged || linkedChanged
     val linksChanged =
       force || existenceChanged || linksArrCk(dirty) != preLinksArrCk
 
-    // ---- triples: pred=mentions (url-local given canon)
-    val mentionScope: Seq[Long] =
-      if (canonChanged) (0L until nBuckets.toLong).toSeq else relink
-    if (mentionsNeeded) overwriteBuckets(spark,
-      cmOf(lk.filter(col("bucket").isin(mentionScope: _*)))
-        .select(col("url").as("subj"),
-          concat(lit("ent:"), col("canon_id")).as("obj"))
-        .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-      s"$triplesDir/pred=mentions", mentionScope)
+    // ---- triples: pred=mentions (url-local given canon) and
+    // pred=relates_to (global by nature: cross-page co-mention dedup),
+    // both from ONE page-entity-set frame over the stored linked + canon
+    // tables, as Pipeline.build shares it; a pure function of (linked,
+    // canon), so skipped when neither changed. Column-pruned, no text.
+    val mentionScope: Seq[Long] = if (canonChanged) allBuckets else relink
+    if (mentionsNeeded) {
+      // one materialization feeds both writes
+      val sets = Emit.pageEntitySets(
+          spark.read.schema(linkedSchema).parquet(s"$outDir/linked/data")
+            .drop("bucket").as[LinkedMention],
+          canon.as[CanonRow])
+        .localCheckpoint()
+      overwriteBuckets(spark,
+        Emit.mentionsFromSets(sets.filter(
+            Pipeline.bucketOf(col("url"), nBuckets).isin(mentionScope: _*)))
+          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
+        s"$triplesDir/pred=mentions", mentionScope)
+      replaceSubtree(
+        Emit.relatesFromSets(sets)
+          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
+        s"$triplesDir/pred=relates_to")
+    }
 
-    // ---- triples: pred=links_to (validity depends on target existence)
+    // ---- triples: pred=links_to (validity depends on target existence:
+    // the scoped pages' links are checked against the full url set)
     val linkScope: Seq[Long] =
       if (force) allBuckets
       else if (!existenceChanged) dirty
@@ -405,12 +402,8 @@ object Incremental {
           .distinct().collect().map(_.getLong(0)).toSeq
         (dirty ++ affected).distinct.sorted
       }
-    val urlSet = ex.select(col("url").as("obj"))
     if (linksChanged) overwriteBuckets(spark,
-      ex.filter(col("bucket").isin(linkScope: _*))
-        .select(col("url").as("subj"), explode(col("links")).as("obj"))
-        .join(urlSet, Seq("obj"), "left_semi").distinct()
-        .select(col("subj"), col("obj"))
+      Emit.linksTo(ex.filter(col("bucket").isin(linkScope: _*)), ex)
         .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
       s"$triplesDir/pred=links_to", linkScope)
 
@@ -423,18 +416,6 @@ object Incremental {
         graft.emit.Hierarchy.containsEdges(ex.select(col("url")))
           .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
         s"$triplesDir/pred=contains")
-    }
-
-    // ---- triples: pred=relates_to — global by nature (cross-page
-    // co-mention dedup) and a pure function of (linked, canon), so it is
-    // skipped when neither changed; column-pruned, no text
-    if (mentionsNeeded) {
-      // capped sorted-array pair generation (Emit.RelatesCap policy) —
-      // never the quadratic per-url self-join
-      replaceSubtree(
-        Emit.relatesPairs(cmOf(lk))
-          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-        s"$triplesDir/pred=relates_to")
     }
 
     // ---- adjacency mirrors the triples writes 1:1 (each pred sub-table

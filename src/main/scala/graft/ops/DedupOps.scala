@@ -306,8 +306,8 @@ object DedupOps {
     * replaced self-join (retained as [[simhashPairsJoin]]) computed
     * every signature twice and exchanged the chunk stream twice. The
     * struct pairs come from the native generic ArrayPairs (guide §4 —
-    * the interpreted pairsHof lambda tree it replaces stays the
-    * agreement reference in the fuzz spec). */
+    * the interpreted lambda tree it replaces stays the agreement
+    * reference, ArrayPairsRef.pairsHof, in the specs). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "4-band pigeonhole only covers radius 3")
     simhashChunks(df, idCol, textCol)

@@ -11,6 +11,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import scala.collection.immutable.ListMap
+
 /** End-to-end KG construction (the Spark shape of the reference's
   * GraphBuilder.build, clangd_graph_rag_builder.py:48-76):
   *
@@ -35,6 +37,25 @@ object Pipeline {
     * (Hierarchy.QueryFragRe), so stores committed under v2 may hold
     * SECTION nodes / roll-up parents that v3 never emits. */
   val EnrichVersion = "enrich-v3"
+
+  /** IVF codebook parameters of the pipeline's ann_ivf stage (ONE
+    * frozen set — they are part of the stage version). */
+  val AnnSeed = 42L
+  val AnnCells = 16
+  val AnnDim = 384
+
+  /** Every committed stage of `build` with its version string, in build
+    * order — the one list both `build` (its manifests) and the
+    * incremental updater (its crash / version guard and re-stamp) read.
+    * ann_ivf's version is derived from its codebook parameters inside
+    * AnnOps.buildIvfIndex; it is listed so the updater guards it too. */
+  val StageVersions: ListMap[String, String] = ListMap(
+    "extracted" -> Extract.StageVersion, "urlhash" -> "diff-v1",
+    "candidates" -> "mention-v1", "aliasdf" -> "link-v1",
+    "linked" -> "link-v1", "canon" -> "canon-v1",
+    "triples" -> EmitVersion, "nodes" -> EmitVersion,
+    "adjacency" -> EmitVersion, "enriched" -> EnrichVersion,
+    "ann_ivf" -> graft.ops.AnnOps.ivfVersion(AnnSeed, AnnCells, AnnDim))
 
   final case class Graph(
       extracted: Dataset[ExtractedPage],
@@ -114,9 +135,7 @@ object Pipeline {
     val cands = Mention.detect(extracted, aliases)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val linked = Link.resolve(cands, nPages).persist(StorageLevel.MEMORY_AND_DISK)
-    val entities = aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-    val canon = ConnectedComponents.canonMap(entities, sameas)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val canon = canonOf(aliases, sameas).persist(StorageLevel.MEMORY_AND_DISK)
     val pe = Emit.pageEntitySets(linked, canon)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val triples = Emit.triples(extracted, linked, canon, Some(pe))
@@ -133,6 +152,26 @@ object Pipeline {
     * (e.g. 2^14 buckets for 10^12 docs); locally small. */
   def bucketOf(c: org.apache.spark.sql.Column, nBuckets: Int) =
     pmod(xxhash64(c), lit(nBuckets.toLong))
+
+  /** Canonical map over every entity of the alias dictionary (identity
+    * for entities no same-as edge touches). */
+  def canonOf(
+      aliases: Dataset[AliasRow],
+      sameas: Dataset[SameAsEdge]): Dataset[CanonRow] = {
+    val spark = aliases.sparkSession
+    import spark.implicits._
+    ConnectedComponents.canonMap(
+      aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct(), sameas)
+  }
+
+  /** Per-bucket alias document frequency (bucket, alias, df_b) from a
+    * bucketed candidates table: urls are bucket-disjoint, so the global
+    * df is the exact per-bucket sum ([[globalAliasDf]]) and a bucket's
+    * rows change only when its own candidates do. */
+  def bucketAliasDf(candidates: DataFrame): DataFrame =
+    candidates.select(col("bucket"), col("url"), col("alias")).distinct()
+      .groupBy(col("bucket"), col("alias"))
+      .agg(count(lit(1)).as("df_b"))
 
   /** Global (alias, alias_df) from the per-bucket aliasdf table — exact
     * because urls are bucket-disjoint. */
@@ -153,9 +192,12 @@ object Pipeline {
       nBuckets: Int = 32,
       keepOrphans: Boolean = false): Unit = {
     import spark.implicits._
+    def stage(name: String, partitionCols: Seq[String] = Nil)(
+        body: => DataFrame): DataFrame =
+      Snapshot.stage(spark, outDir, name, snapshotId, StageVersions(name),
+        partitionCols)(body)
 
-    val extracted = Snapshot.stage(spark, outDir, "extracted", snapshotId,
-      Extract.StageVersion, Seq("bucket")) {
+    val extracted = stage("extracted", Seq("bucket")) {
       Extract.run(pages).toDF()
         .withColumn("bucket", bucketOf(col("url"), nBuckets))
         .repartition(col("bucket"))
@@ -169,8 +211,7 @@ object Pipeline {
     // extracted.html_xxh64 IS the winning hash — value-identical to
     // Incremental.urlHashes(pages) without a second full corpus scan
     // (the scan+hash was ~12% of the 20k build by lineage wall_ms).
-    Snapshot.stage(spark, outDir, "urlhash", snapshotId, "diff-v1",
-      Seq("bucket")) {
+    stage("urlhash", Seq("bucket")) {
       extracted.select(col("url"), col("html_xxh64").as("h"), col("bucket"))
     }
 
@@ -179,8 +220,7 @@ object Pipeline {
     // linked stages (detection previously ran twice) and by the
     // incremental updater, whose relink-only buckets read their stored
     // candidates instead of re-detecting
-    val candidates = Snapshot.stage(spark, outDir, "candidates", snapshotId,
-      "mention-v1", Seq("bucket")) {
+    val candidates = stage("candidates", Seq("bucket")) {
       val ex = extracted.drop("bucket").as[ExtractedPage]
       Mention.detect(ex, aliases).toDF()
         .withColumn("bucket", bucketOf(col("url"), nBuckets))
@@ -191,16 +231,11 @@ object Pipeline {
     // the global df is the exact per-bucket sum — the incremental updater
     // maintains this table per dirty bucket and detects which aliases'
     // global df changed (those buckets must relink)
-    val aliasdf = Snapshot.stage(spark, outDir, "aliasdf", snapshotId,
-      "link-v1", Seq("bucket")) {
-      candidates.select(col("bucket"), col("url"), col("alias")).distinct()
-        .groupBy(col("bucket"), col("alias"))
-        .agg(count(lit(1)).as("df_b"))
-        .repartition(col("bucket"))
+    val aliasdf = stage("aliasdf", Seq("bucket")) {
+      bucketAliasDf(candidates).repartition(col("bucket"))
     }
 
-    val linked = Snapshot.stage(spark, outDir, "linked", snapshotId, "link-v1",
-      Seq("bucket")) {
+    val linked = stage("linked", Seq("bucket")) {
       val cands = candidates.drop("bucket").as[CandidateRow]
       Link.resolve(cands, nPages,
         Some(Link.collectAliasDf(globalAliasDf(aliasdf)))).toDF()
@@ -208,10 +243,7 @@ object Pipeline {
         .repartition(col("bucket"))
     }
 
-    val canon = Snapshot.stage(spark, outDir, "canon", snapshotId, "canon-v1") {
-      val entities = aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-      ConnectedComponents.canonMap(entities, sameas).toDF()
-    }
+    val canon = stage("canon")(canonOf(aliases, sameas).toDF())
 
     // triples live as one sub-table per predicate, bucketed by subj hash:
     // mentions/links_to are url-local (their partition = the url's
@@ -224,8 +256,7 @@ object Pipeline {
     val peShared = Emit.pageEntitySets(
         linked.drop("bucket").as[LinkedMention], canon.as[CanonRow])
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val triples = Snapshot.stage(spark, outDir, "triples", snapshotId,
-      EmitVersion, Seq("pred", "bucket")) {
+    val triples = stage("triples", Seq("pred", "bucket")) {
       val ex = extracted.drop("bucket").as[ExtractedPage]
       val lk = linked.drop("bucket").as[LinkedMention]
       Emit.triples(ex, lk, canon.as[CanonRow], Some(peShared)).toDF()
@@ -236,8 +267,7 @@ object Pipeline {
 
     // partitioned by label so the incremental updater can refresh the
     // one-row PROJECT leaf (snapshot stamp) without rewriting the rest
-    Snapshot.stage(spark, outDir, "nodes", snapshotId, EmitVersion,
-      Seq("label")) {
+    stage("nodes", Seq("label")) {
       val ex = extracted.drop("bucket").as[ExtractedPage]
       val all = Emit.nodes(ex, canon.as[CanonRow], Some(snapshotId))
       if (keepOrphans) all.toDF()
@@ -248,8 +278,7 @@ object Pipeline {
       }
     }
 
-    Snapshot.stage(spark, outDir, "adjacency", snapshotId, EmitVersion,
-      Seq("pred", "bucket")) {
+    stage("adjacency", Seq("pred", "bucket")) {
       val td = triples.select(col("subj"), col("pred"), col("obj")).as[TripleRow]
       Emit.adjacency(td).toDF()
         .withColumn("bucket", bucketOf(col("src"), nBuckets))
@@ -261,8 +290,7 @@ object Pipeline {
     // onto FUNCTION/FILE/FOLDER/PROJECT nodes. PAGE rows are bucketed by
     // url hash (incrementally maintainable); SITE/PROJECT roll-up rows
     // live in bucket -1.
-    Snapshot.stage(spark, outDir, "enriched", snapshotId, EnrichVersion,
-      Seq("bucket")) {
+    stage("enriched", Seq("bucket")) {
       val ex = extracted.drop("bucket").as[ExtractedPage]
       val lt = triples
         .filter(col("pred") === Pred.LinksTo).select(col("subj"), col("obj"))
@@ -285,12 +313,6 @@ object Pipeline {
       seed = AnnSeed, nCells = AnnCells, dim = AnnDim)
     ()
   }
-
-  /** IVF codebook parameters of the pipeline's ann_ivf stage (ONE
-    * frozen set — they are part of the stage version). */
-  val AnnSeed = 42L
-  val AnnCells = 16
-  val AnnDim = 384
 
   /** (id = url, emb = content embedding) rows for the ann_ivf stage —
     * deterministic FakeEmbedder over the extracted text (swap for a

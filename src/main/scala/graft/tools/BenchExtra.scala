@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.canon.ConnectedComponents
 import graft.extract.Extract
 import graft.link.Link
 import graft.mention.Mention
@@ -116,9 +115,7 @@ object BenchExtra {
           }
           var canon: org.apache.spark.sql.Dataset[graft.model.CanonRow] = null
           t("cc+persist") {
-            val entities = Synth.aliases(spark, cfg)
-              .map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-            canon = ConnectedComponents.canonMap(entities, Synth.sameAs(spark, cfg))
+            canon = Pipeline.canonOf(Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg))
               .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             canon.foreachPartition { (_: Iterator[graft.model.CanonRow]) => () }
           }

@@ -1,10 +1,10 @@
 package graft.tools
 
-import graft.canon.ConnectedComponents
 import graft.emit.Emit
 import graft.extract.Extract
 import graft.link.Link
 import graft.mention.Mention
+import graft.pipeline.Pipeline
 import graft.synth.Synth
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
@@ -93,9 +93,7 @@ object ClusterPhaseBench {
       l.count(); l
     }
     val canon = t("cc canon") {
-      val entities = Synth.aliases(spark, cfg)
-        .map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-      val c = ConnectedComponents.canonMap(entities, Synth.sameAs(spark, cfg))
+      val c = Pipeline.canonOf(Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg))
         .persist(StorageLevel.MEMORY_AND_DISK)
       c.count(); c
     }

@@ -1,10 +1,10 @@
 package graft.tools
 
-import graft.canon.ConnectedComponents
 import graft.emit.Emit
 import graft.extract.Extract
 import graft.link.Link
 import graft.mention.Mention
+import graft.pipeline.Pipeline
 import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.sql.SparkSession
 
@@ -47,9 +47,8 @@ object PhaseBench {
       l.count(); l
     }
     val canon = t("cc") {
-      val entities = Synth.aliases(spark, cfg)
-        .map(a => java.lang.Long.valueOf(a.entity_id)).distinct()
-      val c = ConnectedComponents.canonMap(entities, Synth.sameAs(spark, cfg)).persist()
+      val c = Pipeline.canonOf(Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg))
+        .persist()
       c.count(); c
     }
     t("emit") {

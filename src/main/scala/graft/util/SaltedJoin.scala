@@ -8,35 +8,13 @@ import org.apache.spark.sql.functions._
   * isolation knob, clangd_symbol_nodes_builder.py:259-307, whose Spark
   * translation is shuffle-skew management, SURVEY.md §4).
   *
-  * AQE's skew-join rule only splits SORT-MERGE join partitions; a
-  * deliberately skewed key (one entity on 20%+ of rows) on a
-  * non-broadcastable build side still hot-spots one task. Salting fixes
-  * it structurally: the skewed (probe) side gets a deterministic salt in
-  * [0, S) derived from a high-cardinality column it already carries; the
-  * small(er) build side is replicated S times. The join key becomes
-  * (key, salt) → the hot key spreads over S tasks.
+  * The skewed side gets a deterministic salt in [0, S) derived from a
+  * high-cardinality column it already carries, so a hot key spreads over
+  * S tasks. The pipeline's own skewed joins need no salt: canon and the
+  * alias dictionary are vocabulary-bounded and broadcast, so the mention
+  * stream is never shuffled on the entity key.
   */
 object SaltedJoin {
-
-  /** Inner-join `skewed` with `dim` on `key`, spreading each key over
-    * `salt` shuffle partitions.
-    *
-    * @param saltSource a column of `skewed` with high cardinality
-    *                   (e.g. url) — salt = pmod(xxhash64(saltSource), S),
-    *                   deterministic under any parallelism. */
-  def inner(
-      skewed: DataFrame,
-      dim: DataFrame,
-      key: String,
-      saltSource: Column,
-      salt: Int = 32): DataFrame = {
-    require(salt > 0)
-    val saltCol = "__graft_salt"
-    val l = skewed.withColumn(saltCol, pmod(xxhash64(saltSource), lit(salt)))
-    val r = dim.withColumn(
-      saltCol, explode(array((0 until salt).map(i => lit(i.toLong)): _*)))
-    l.join(r, Seq(key, saltCol), "inner").drop(saltCol)
-  }
 
   /** Two-phase salted aggregation: count rows per `key` where one key may
     * dominate. Phase 1 pre-aggregates on (key, salt); phase 2 sums.

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** Pins that the q29 oracle corpus actually EXERCISES the RelatesCap
   * policy: at least one page carries more distinct canonical entities
   * than the cap, so the oracle SQL's `rn <= cap` branch filters rows
-  * and cap drift between Emit.relatesPairs, NaiveKg and the DuckDB
+  * and cap drift between Emit.relatesFromSets, NaiveKg and the DuckDB
   * oracle cannot pass the cross-engine check silently. */
 class KgOracleCfgSpec extends SparkSpec {
 
@@ -26,8 +26,8 @@ class KgOracleCfgSpec extends SparkSpec {
       maxDistinct should be > Emit.RelatesCap.toLong
       // and the emitted pairs per head page stay bounded at C(cap, 2)
       val headUrl = perUrl.orderBy(col("n").desc).head().getString(0)
-      val headPairs = Emit.relatesPairs(
-        g.pageEntities.filter(col("url") === headUrl)).count()
+      val headPairs = Emit.relatesFromSets(
+        g.pageEntitySets.filter(col("url") === headUrl)).count()
       val k = Emit.RelatesCap.toLong
       headPairs shouldBe k * (k - 1) / 2
     } finally g.unpersist()

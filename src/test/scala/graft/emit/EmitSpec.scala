@@ -49,7 +49,7 @@ class EmitSpec extends SparkSpec {
       .toDF("es")
     val rows = arrays.select(
         graft.functions.ArrayPairs.array_pairs(col("es")).as("native"),
-        Emit.pairsHof(col("es")).as("ref"))
+        graft.functions.ArrayPairsRef.pairsHof(col("es")).as("ref"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[org.apache.spark.sql.Row](0) ==

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.emit.{Emit, Hierarchy}
+import graft.emit.Hierarchy
 import graft.ops.{AnnOps, DedupOps, TextOps}
 import graft.util.Det
 import org.apache.spark.sql.functions._
@@ -124,7 +124,7 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     }.toDF("id", "es")
     val rows = arrays.select(col("id"),
         ArrayPairs.array_pairs(col("es")).as("n"),
-        Emit.pairsHof(col("es")).as("r"))
+        ArrayPairsRef.pairsHof(col("es")).as("r"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[org.apache.spark.sql.Row](1) ==
@@ -144,7 +144,7 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     }.toDF("id", "es")
     ll.select(col("id"),
         ArrayPairs.array_pairs(col("es")).as("n"),
-        Emit.pairsHof(col("es")).as("r"))
+        ArrayPairsRef.pairsHof(col("es")).as("r"))
       .collect().foreach { r =>
         assert(r.getSeq[org.apache.spark.sql.Row](1) ==
           r.getSeq[org.apache.spark.sql.Row](2), s"ll id=${r.getLong(0)}")
@@ -157,7 +157,7 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     }.toDF("id", "es")
     se.select(col("id"),
         ArrayPairs.array_pairs(col("es")).as("n"),
-        Emit.pairsHof(col("es")).as("r"))
+        ArrayPairsRef.pairsHof(col("es")).as("r"))
       .collect().foreach { r =>
         assert(r.getSeq[org.apache.spark.sql.Row](1) ==
           r.getSeq[org.apache.spark.sql.Row](2), s"se id=${r.getLong(0)}")

@@ -41,6 +41,26 @@ class IncrementalSpec extends SparkSpec {
     base.union(added)
   }
 
+  /** Default full builds of the old and the new snapshot. Most tests
+    * start from the first or compare against the second, so each is
+    * built once per spec and copied into every test's own directory. */
+  private lazy val oldStore = buildStore(oldPages, "snap-old")
+  private lazy val newStore = buildStore(newPages, "snap-new")
+
+  private def buildStore(pages: Dataset[PageRow], snapshotId: String) = {
+    val dir = Files.createTempDirectory(s"graft-$snapshotId")
+    Pipeline.build(spark, pages, Synth.aliases(spark, cfg),
+      Synth.sameAs(spark, cfg), cfg.nPages, dir.toString, snapshotId, N)
+    dir
+  }
+
+  /** A fresh directory holding a copy of `store`. */
+  private def copyOf(store: java.nio.file.Path, prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    copyTree(store, dir)
+    dir.toString
+  }
+
   test("diff classifies added/deleted/changed/unchanged") {
     val d = Incremental.diff(oldPages, newPages)
       .groupBy("status").count().collect()
@@ -52,12 +72,8 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("incremental update == fresh full build of the new snapshot") {
-    val incDir = Files.createTempDirectory("graft-inc").toString
-    val fullDir = Files.createTempDirectory("graft-full").toString
-
     // full build of OLD snapshot, then incremental to NEW
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-inc")
     val dirty = Incremental.update(spark, oldPages, newPages,
       Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages,
       incDir, "snap-new", N)
@@ -65,8 +81,18 @@ class IncrementalSpec extends SparkSpec {
     dirty.size should be < N.toLong.toInt + 1 // sanity: subset of buckets
 
     // fresh full build of NEW snapshot
-    Pipeline.build(spark, newPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, fullDir, "snap-new", N)
+    val fullDir = copyOf(newStore, "graft-full")
+
+    // every stage the build commits is one the updater's crash/version
+    // guard knows, under the same version string
+    val committed = new java.io.File(fullDir).listFiles()
+      .filter(d => new java.io.File(d, "_graft_manifest.json").exists())
+      .map(_.getName).toSet
+    committed shouldBe Pipeline.StageVersions.keySet
+    for ((stage, version) <- Pipeline.StageVersions) withClue(s"$stage: ") {
+      graft.meta.Snapshot.readManifest(s"$fullDir/$stage").get.version shouldBe
+        version
+    }
 
     def triplesOf(dir: String) = spark.read.parquet(s"$dir/triples/data")
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
@@ -117,9 +143,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("text-only change rewrites ONLY the dirty bucket's url-local partitions") {
-    val dir = Files.createTempDirectory("graft-gran").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, dir, "snap-old", N)
+    val dir = copyOf(oldStore, "graft-gran")
 
     // scenario A: append NON-alias filler to one page — its bucket is
     // dirty, but candidates/links are byte-identical, so every derived
@@ -216,10 +240,8 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("a bucket whose urls are ALL deleted loses its partitions entirely") {
-    val incDir = Files.createTempDirectory("graft-del").toString
+    val incDir = copyOf(oldStore, "graft-del")
     val fullDir = Files.createTempDirectory("graft-del-full").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
 
     val b = oldPages.toDF()
       .select(Pipeline.bucketOf(col("url"), N).as("b"))
@@ -279,10 +301,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("updateFromStored: diff against the persisted urlhash stage, no old corpus") {
-    val incDir = Files.createTempDirectory("graft-stored").toString
-    val fullDir = Files.createTempDirectory("graft-stored-full").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-stored")
 
     // old pages never passed in — only the new snapshot
     val dirty = Incremental.updateFromStored(spark, newPages,
@@ -290,8 +309,7 @@ class IncrementalSpec extends SparkSpec {
       incDir, "snap-new", N)
     dirty should not be empty
 
-    Pipeline.build(spark, newPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, fullDir, "snap-new", N)
+    val fullDir = copyOf(newStore, "graft-stored-full")
     def triplesOf(dir: String) = spark.read.parquet(s"$dir/triples/data")
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
     triplesOf(incDir) shouldBe triplesOf(fullDir)
@@ -305,9 +323,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("extraction-invariant html edit: ONLY extracted rewritten; nodes root restamped") {
-    val dir = Files.createTempDirectory("graft-inv").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, dir, "snap-old", N)
+    val dir = copyOf(oldStore, "graft-inv")
 
     // edit INSIDE an html comment: the html hash changes (dirty bucket)
     // but extracted text, links, and sha are all byte-identical
@@ -360,17 +376,13 @@ class IncrementalSpec extends SparkSpec {
     spark.read.parquet(s"$incDir/nodes/data")
       .filter(col("label") === "ENTITY").count() shouldBe canonIds
     // default build drops the never-mentioned ones (fixture has some)
-    val dropDir = Files.createTempDirectory("graft-orph-drop").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, dropDir, "snap-old", N)
+    val dropDir = copyOf(oldStore, "graft-orph-drop")
     spark.read.parquet(s"$dropDir/nodes/data")
       .filter(col("label") === "ENTITY").count() should be < canonIds
   }
 
   test("crashed update + empty diff: force-mode rebuilds full scope instead of 'nothing to do'") {
-    val incDir = Files.createTempDirectory("graft-crash-empty").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-crash-empty")
     // simulate a prior update that died mid-way: its first act is
     // invalidating every stage manifest; forge mixed derived state too
     graft.meta.Snapshot.invalidate(s"$incDir/linked")
@@ -399,9 +411,7 @@ class IncrementalSpec extends SparkSpec {
     // buckets where B == old keep A's residue and every globally rebuilt
     // derived table bakes it in permanently. Force must widen extraction
     // to all buckets.
-    val incDir = Files.createTempDirectory("graft-crash-b").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-crash-b")
     // crashed update to snapshot A (= newPages): forge its partial state
     // — A's extraction fully written, manifests invalidated, urlhash
     // still old (it is written last)
@@ -433,9 +443,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("version-mismatched store: refuse the in-place update, demand a full build") {
-    val incDir = Files.createTempDirectory("graft-verm").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-verm")
     // forge a store committed by an OLDER engine: same snapshot id,
     // different stage version string
     graft.meta.Snapshot.stamp(spark, incDir, "triples", "snap-old", "emit-v1")
@@ -449,10 +457,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("crashed update rerun: force-mode converges despite mixed derived state") {
-    val incDir = Files.createTempDirectory("graft-crash-rerun").toString
-    val fullDir = Files.createTempDirectory("graft-crash-full").toString
-    Pipeline.build(spark, oldPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, incDir, "snap-old", N)
+    val incDir = copyOf(oldStore, "graft-crash-rerun")
 
     // snapshot the OLD linked table, then complete an update to NEW
     val savedLinked = Files.createTempDirectory("graft-crash-saved")
@@ -480,8 +485,7 @@ class IncrementalSpec extends SparkSpec {
       Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages,
       incDir, "snap-new-rerun", N)
 
-    Pipeline.build(spark, newPages, Synth.aliases(spark, cfg),
-      Synth.sameAs(spark, cfg), cfg.nPages, fullDir, "snap-new", N)
+    val fullDir = copyOf(newStore, "graft-crash-full")
     def triplesOf(dir: String) = spark.read.parquet(s"$dir/triples/data")
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
     def linkedOf(dir: String) = spark.read.parquet(s"$dir/linked/data")
