@@ -394,11 +394,9 @@ object Incremental {
       if (force) allBuckets
       else if (!existenceChanged) dirty
       else {
-        val affected = ex
-          .select(col("url"), explode(col("links")).as("obj"))
-          .join(changedUrls.withColumnRenamed("url", "obj"), Seq("obj"),
-            "left_semi")
-          .select(Pipeline.bucketOf(col("url"), nBuckets).as("b"))
+        // pages holding a link to an added/deleted url
+        val affected = Emit.linksTo(ex, changedUrls)
+          .select(Pipeline.bucketOf(col("subj"), nBuckets).as("b"))
           .distinct().collect().map(_.getLong(0)).toSeq
         (dirty ++ affected).distinct.sorted
       }
