@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   *
   * Triple vocabulary mirrors the reference's edge set (SURVEY.md §7.0):
   * contains ≙ CONTAINS, mentions ≙ DEFINES, links_to ≙ INCLUDES,
-  * relates_to ≙ CALLS. Every triple branch is distinct by construction
-  * (a distinct, a semi-join + distinct, or an explode of one sorted set
-  * per url, each under its own fixed `pred`), so the triple union is
-  * distinct on (subj, pred, obj) — the Spark analog of Cypher MERGE
-  * idempotency (SURVEY.md Appendix B #5) — and adjacency, a reorder of
-  * it, needs no further dedup.
+  * relates_to ≙ CALLS. Every triple branch is distinct by construction,
+  * each under its own fixed `pred`: contains and relates_to end in a
+  * distinct; mentions explodes one sorted set per url; links_to
+  * explodes one array_distinct link array per url of a url-unique page
+  * table. So the triple union is distinct on (subj, pred, obj) — the
+  * Spark analog of Cypher MERGE idempotency (SURVEY.md Appendix B #5) —
+  * and adjacency, a reorder of it, needs no further dedup.
   */
 object Emit {
 
@@ -76,11 +77,18 @@ object Emit {
   /** links_to from `pages` (url, links) to urls present in `urls` — the
     * MATCH-must-exist FK semantics of the reference's INCLUDES ingest
     * (neo4j_manager.py:180-205). `pages` may be any subset of the url
-    * set; validity is always checked against the whole of `urls`. */
+    * set; validity is always checked against the whole of `urls`.
+    *
+    * Precondition: `pages` holds at most one row per url (and no null
+    * url). Every caller passes extracted pages, which Extract dedups by
+    * url (and Extract.site fails on a null url), so the array_distinct
+    * per row already yields distinct (subj, obj) pairs: no global
+    * distinct exchange. The semi join keeps or drops rows, never
+    * duplicates them. */
   def linksTo(pages: DataFrame, urls: DataFrame): DataFrame =
-    pages.select(col("url").as("subj"), explode(col("links")).as("obj"))
+    pages.select(col("url").as("subj"),
+        explode(array_distinct(col("links"))).as("obj"))
       .join(urls.select(col("url").as("obj")), Seq("obj"), "left_semi")
-      .distinct()
       .select(col("subj"), col("obj"))
 
   /** FROZEN relates_to policy: co-mention pairs on a page are generated
@@ -139,8 +147,8 @@ object Emit {
     * entity in the canon map — the reference creates a node per symbol
     * and only afterwards prunes the unreferenced ones (pass 8,
     * clangd_graph_rag_builder.py:200-207, skippable via
-    * --keep-orphans) — so `dropOrphans` is a real, separately-skippable
-    * pass, not a no-op.
+    * --keep-orphans). This is the `keepOrphans` table; the default
+    * orphan-free table is [[connectedNodes]].
     *
     * @param snapshotId stamped onto the PROJECT root node's props —
     *        ≙ PROJECT.commit_hash (clangd_graph_rag_builder.py:112-122).
@@ -152,27 +160,65 @@ object Emit {
     val spark = extracted.sparkSession
     import spark.implicits._
     val ex = extracted.toDF()
-
-    val root = rootNode(spark, snapshotId)
-
-    // hosts are SITE, deeper path prefixes SECTION (≙ FOLDER nodes)
-    val internals = Hierarchy.internalNodes(ex.select($"url"))
-      .filter($"depth" >= 1)
-      .select($"node".as("node_id"),
-        when($"depth" === 1, Label.Site).otherwise(Label.Section).as("label"),
-        map(lit("name"), $"node").as("props"))
-
-    val pages = ex.select($"url".as("node_id"), lit(Label.Page).as("label"),
-      map(lit("lang"), $"lang", lit("text_sha256"), $"text_sha256").as("props"))
-
-    val ents = canon.toDF()
-      .select(concat(lit("ent:"), $"canon_id").as("node_id")).distinct()
-      .select($"node_id", lit(Label.Entity).as("label"),
-        map(lit("canon"), $"node_id").as("props"))
-
-    // dropOrphans removes the root again if there are no sites at all
-    root.union(internals).union(pages).union(ents).as[NodeRow]
+    rootNode(spark, snapshotId)
+      .union(hierarchyNodes(ex)).union(pageNodes(ex))
+      .union(entityNodes(canon.toDF().select($"canon_id")))
+      .as[NodeRow]
   }
+
+  /** The orphan-free node table, built from its sources: the same rows
+    * as `dropOrphans(nodes(extracted, canon, snapshotId), triples)`
+    * (EmitSpec pins the agreement, props included) without reading the
+    * triple set. Every row kept is a triple endpoint by construction:
+    *  - the root is the subj of every root → host contains edge, so it
+    *    is kept iff some url exists (every url has a host prefix);
+    *  - each SITE/SECTION prefix is the obj of a contains edge;
+    *  - each page is the obj of its deepest-prefix contains edge;
+    *  - an entity is an endpoint iff it is in some page-entity set: the
+    *    mentions objs are exactly those ids, and relates_to pairs are
+    *    drawn from the same sets.
+    * Node-id namespaces are assumed disjoint (an `ent:` id is never a
+    * url or path prefix), as they are in the full node table.
+    *
+    * @param pageEntitySets the [[pageEntitySets]] frame the mentions and
+    *        relates_to branches read (persisted by Pipeline.run/build). */
+  def connectedNodes(
+      extracted: Dataset[ExtractedPage],
+      pageEntitySets: DataFrame,
+      snapshotId: Option[String] = None): Dataset[NodeRow] = {
+    val spark = extracted.sparkSession
+    import spark.implicits._
+    val ex = extracted.toDF()
+    // an uncorrelated EXISTS: planned as a one-row scalar subquery, not
+    // a join, so the root row needs no exchange
+    val root = rootNode(spark, snapshotId).filter(ex.select($"url").exists())
+    root.union(hierarchyNodes(ex)).union(pageNodes(ex))
+      .union(entityNodes(explodePageEntitySets(pageEntitySets)
+        .select($"canon_id")))
+      .as[NodeRow]
+  }
+
+  /** SITE rows for hosts, SECTION rows for deeper path prefixes
+    * (≙ FOLDER nodes). */
+  private def hierarchyNodes(ex: DataFrame): DataFrame =
+    Hierarchy.internalNodes(ex.select(col("url")))
+      .filter(col("depth") >= 1)
+      .select(col("node").as("node_id"),
+        when(col("depth") === 1, Label.Site).otherwise(Label.Section)
+          .as("label"),
+        map(lit("name"), col("node")).as("props"))
+
+  private def pageNodes(ex: DataFrame): DataFrame =
+    ex.select(col("url").as("node_id"), lit(Label.Page).as("label"),
+      map(lit("lang"), col("lang"), lit("text_sha256"), col("text_sha256"))
+        .as("props"))
+
+  /** One ENTITY row per distinct id of a `canon_id` column. */
+  private def entityNodes(canonIds: DataFrame): DataFrame =
+    canonIds.distinct()
+      .select(concat(lit("ent:"), col("canon_id")).as("node_id"))
+      .select(col("node_id"), lit(Label.Entity).as("label"),
+        map(lit("canon"), col("node_id")).as("props"))
 
   /** The single PROJECT root row, snapshot-stamped — separable so the
     * incremental updater can refresh ONLY the root's stamp when every
@@ -191,9 +237,11 @@ object Emit {
       .toDF("node_id", "label", "props")
   }
 
-  /** Degree-0 node cleanup, run last (reference pass 8,
-    * clangd_graph_rag_builder.py:200-207) — left_anti against the set of
-    * triple endpoints. */
+  /** Degree-0 node cleanup as the reference runs it, last (pass 8,
+    * clangd_graph_rag_builder.py:200-207): a left semi join of `nodes`
+    * against the distinct triple endpoints. The pipelines build the
+    * orphan-free table directly with [[connectedNodes]]; this literal
+    * form is the agreement reference it is checked against. */
   def dropOrphans(
       nodes: Dataset[NodeRow],
       triples: Dataset[TripleRow]): Dataset[NodeRow] = {

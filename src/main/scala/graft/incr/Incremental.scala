@@ -370,13 +370,15 @@ object Incremental {
     // tables, as Pipeline.build shares it; a pure function of (linked,
     // canon), so skipped when neither changed. Column-pruned, no text.
     val mentionScope: Seq[Long] = if (canonChanged) allBuckets else relink
+    // one materialization feeds the mentions and relates_to writes and the
+    // orphan-free node table's ENTITY rows; built on first use, after the
+    // linked and canon writes above
+    lazy val sets = Emit.pageEntitySets(
+        spark.read.schema(linkedSchema).parquet(s"$outDir/linked/data")
+          .drop("bucket").as[LinkedMention],
+        canon.as[CanonRow])
+      .localCheckpoint()
     if (mentionsNeeded) {
-      // one materialization feeds both writes
-      val sets = Emit.pageEntitySets(
-          spark.read.schema(linkedSchema).parquet(s"$outDir/linked/data")
-            .drop("bucket").as[LinkedMention],
-          canon.as[CanonRow])
-        .localCheckpoint()
       overwriteBuckets(spark,
         Emit.mentionsFromSets(sets.filter(
             Pipeline.bucketOf(col("url"), nBuckets).isin(mentionScope: _*)))
@@ -435,21 +437,20 @@ object Incremental {
     if (linksChanged) adjacencyFor("links_to", Some(linkScope))
     if (existenceChanged) adjacencyFor("contains", None)
 
-    // ---- nodes: global but column-pruned (urls/props + canon ids +
-    // endpoints). Skipped when every input is provably unchanged — a
-    // same-text re-crawl (html differs, extraction doesn't) rewrites
-    // extracted but leaves nodes alone; only the one-row PROJECT leaf is
-    // refreshed with the new snapshot stamp (the table is partitioned by
-    // label for exactly this).
+    // ---- nodes: global but column-pruned (url/props scan + the
+    // page-entity sets; no stored triple is read). Skipped when every
+    // input is provably unchanged — a same-text re-crawl (html differs,
+    // extraction doesn't) rewrites extracted but leaves nodes alone; only
+    // the one-row PROJECT leaf is refreshed with the new snapshot stamp
+    // (the table is partitioned by label for exactly this).
     val nodesNeeded = force || existenceChanged || canonChanged ||
       mentionsNeeded || linksChanged || postNodePropsCk != preNodePropsCk
     if (nodesNeeded) {
-      val tAll = spark.read.parquet(triplesDir)
-        .select(col("subj"), col("pred"), col("obj")).as[TripleRow]
       val exAll = ex.drop("bucket").as[ExtractedPage]
-      val all = Emit.nodes(exAll, canon.as[CanonRow], Some(newSnapshotId))
-      val out = if (keepOrphans) all.toDF()
-        else Emit.dropOrphans(all, tAll).toDF()
+      val out =
+        if (keepOrphans)
+          Emit.nodes(exAll, canon.as[CanonRow], Some(newSnapshotId)).toDF()
+        else Emit.connectedNodes(exAll, sets, Some(newSnapshotId)).toDF()
       out.write.mode(SaveMode.Overwrite).partitionBy("label")
         .parquet(s"$outDir/nodes/data")
     } else withDynamicOverwrite(spark) {

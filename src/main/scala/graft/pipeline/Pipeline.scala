@@ -91,13 +91,14 @@ object Pipeline {
     *  - `candidates`: Link.resolve reads it twice (alias-df broadcast
     *    and the linking pass);
     *  - `linked` and `canon`: Graph outputs that the page-entity sets
-    *    re-read (canon also feeds the node table);
-    *  - `pageEntitySets`: the mentions and relates_to triple branches;
-    *  - `triples`: the output itself, and also the input of orphan
-    *    cleanup in `nodes` and of `adjacency` — without the cache each
-    *    of those re-runs all four triple branches (the contains distinct,
-    *    the links_to semi-join + distinct, the relates_to pair distinct
-    *    and the union).
+    *    re-read (canon also feeds the `keepOrphans` node table);
+    *  - `pageEntitySets`: the mentions and relates_to triple branches,
+    *    and the ENTITY rows of the orphan-free node table
+    *    (Emit.connectedNodes), which reads no triples;
+    *  - `triples`: the output itself, and also the input of `adjacency`
+    *    — without the cache adjacency re-runs all four triple branches
+    *    (the contains distinct, the links_to semi join, the relates_to
+    *    pair distinct and the union).
     *
     * @param keepOrphans skip the degree-0 node cleanup (≙ the
     *        reference's --keep-orphans escape hatch,
@@ -140,9 +141,9 @@ object Pipeline {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val triples = Emit.triples(extracted, linked, canon, Some(pe))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodesAll = Emit.nodes(extracted, canon)
     val nodes =
-      if (keepOrphans) nodesAll else Emit.dropOrphans(nodesAll, triples)
+      if (keepOrphans) Emit.nodes(extracted, canon)
+      else Emit.connectedNodes(extracted, pe)
     Graph(extracted, linked, canon, triples, nodes, Emit.adjacency(triples),
       pe, cands)
   }
@@ -251,8 +252,9 @@ object Pipeline {
     // (pred, bucket) leaves; queries touching one predicate get partition
     // pruning for free
     // shared by the mentions and relates_to branches inside the triples
-    // stage write (run() persists the same frame for the same reason);
-    // never materialized at all when the stage resumes from its manifest
+    // stage write and by the orphan-free nodes stage (run() persists the
+    // same frame for the same reason); never materialized at all when
+    // both stages resume from their manifests
     val peShared = Emit.pageEntitySets(
         linked.drop("bucket").as[LinkedMention], canon.as[CanonRow])
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -263,20 +265,15 @@ object Pipeline {
         .withColumn("bucket", bucketOf(col("subj"), nBuckets))
         .repartition(col("pred"), col("bucket"))
     }
-    peShared.unpersist()
 
     // partitioned by label so the incremental updater can refresh the
     // one-row PROJECT leaf (snapshot stamp) without rewriting the rest
     stage("nodes", Seq("label")) {
       val ex = extracted.drop("bucket").as[ExtractedPage]
-      val all = Emit.nodes(ex, canon.as[CanonRow], Some(snapshotId))
-      if (keepOrphans) all.toDF()
-      else {
-        val td = triples.select(col("subj"), col("pred"), col("obj"))
-          .as[TripleRow]
-        Emit.dropOrphans(all, td).toDF()
-      }
+      if (keepOrphans) Emit.nodes(ex, canon.as[CanonRow], Some(snapshotId)).toDF()
+      else Emit.connectedNodes(ex, peShared, Some(snapshotId)).toDF()
     }
+    peShared.unpersist()
 
     stage("adjacency", Seq("pred", "bucket")) {
       val td = triples.select(col("subj"), col("pred"), col("obj")).as[TripleRow]

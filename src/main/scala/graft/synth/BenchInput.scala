@@ -38,9 +38,13 @@ object BenchInput {
   def partFiles: Int =
     sys.env.get("SPARK_GRAFT_PARTFILES").map(_.toInt).getOrElse(PartFiles)
 
+  /** Directory holding the bench input tables: `/dev/shm` unless
+    * `SPARK_GRAFT_BENCH_INPUT_ROOT` names another. */
+  def root: String = sys.env.getOrElse("SPARK_GRAFT_BENCH_INPUT_ROOT", "/dev/shm")
+
   def dirFor(nPages: Long): String = {
     val suffix = if (partFiles == PartFiles) "" else s"-f$partFiles"
-    s"/dev/shm/graft-bench-input-$nPages$suffix"
+    s"$root/graft-bench-input-$nPages$suffix"
   }
 
   /** Path of a valid (committed AND PartFiles-count) bench input table

@@ -6,7 +6,11 @@ import graft.link.Link
 import graft.mention.Mention
 import graft.pipeline.Pipeline
 import graft.synth.Synth
+import graft.util.Checksum
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, to_json}
 
 /** Round-6 optimization instrument (spark_optimization_guide.md §1) —
   * NOT part of the frozen driver contract (Bench.scala is the graded
@@ -20,7 +24,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (guide §1.4 — times the computation, not the count() shortcut).
   *  - `phases [nPages]`: per-stage wall breakdown of the KG pipeline
   *    exactly as Pipeline.run composes it (cache-materializing action
-  *    per stage, jobs labelled for the UI).
+  *    per stage, jobs labelled for the UI), the end-to-end kg leg, and
+  *    an outputs leg: Pipeline.run, then all-column checksums of
+  *    triples, nodes and adjacency (the ones perfbench's run_dense
+  *    takes), each with its wall time and Spark job count.
   *
   * Session setup mirrors graft.Bench (same master/shuffle conf) so the
   * numbers are comparable to BENCH_r*.json legs.
@@ -149,6 +156,27 @@ object BenchExtra {
         }
         val es = (1 to 3).map(_ => kgOnce())
         println(f"[phase] end-to-end min=${es.min}%.2f s runs=${es.map(t => f"$t%.2f").mkString(",")}")
+        // outputs leg: wall and job count of each output action
+        val jobs = new JobCounter(spark.sparkContext)
+        (1 to 3).foreach { round =>
+          val g = Pipeline.run(
+            spark.read.parquet(inputDir).as[graft.model.PageRow],
+            Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
+          try Seq(
+            "triples" -> (() => Checksum.of(g.triples.toDF(),
+              Seq("subj", "pred", "obj"))),
+            "nodes" -> (() => Checksum.of(g.nodes.toDF()
+              .withColumn("props_json", to_json(col("props"))),
+              Seq("node_id", "label", "props_json"))),
+            "adjacency" -> (() => Checksum.of(g.adjacency.toDF(),
+              Seq("src", "dst", "pred")))
+          ).foreach { case (name, ck) =>
+            val n0 = jobs.sync()
+            val s = time(ck())
+            println(f"[outputs] round $round $name $s%.2f s jobs=${jobs.sync() - n0}")
+          } finally g.unpersist()
+        }
+        jobs.close()
 
       case "q29probe" =>
         // where do q29's seconds go? construction (eager jobs) vs the
@@ -219,4 +247,38 @@ object BenchExtra {
     }
     spark.stop()
   }
+}
+
+/** Counts the Spark jobs an action runs. Listener events arrive
+  * asynchronously, in order: `sync()` runs a one-task marker job and
+  * waits until the listener has seen it start, so every job submitted
+  * before the marker has been counted. The jobs of an action are the
+  * difference of the counts `sync()` returns around it; marker jobs are
+  * not counted. */
+final class JobCounter(sc: SparkContext) extends SparkListener {
+  private val Marker = "graft-job-counter-marker-"
+  @volatile private var jobs = 0L
+  private val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
+  private var nMarkers = 0
+  sc.addSparkListener(this)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+      .filter(_.startsWith(Marker)) match {
+      case Some(m) => markers.put(m)
+      case None => jobs += 1
+    }
+
+  /** Jobs counted so far, once every earlier job has been seen. */
+  def sync(): Long = {
+    nMarkers += 1
+    val tag = s"$Marker$nMarkers"
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(tag)
+    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
+    while (markers.take() != tag) ()
+    jobs
+  }
+
+  def close(): Unit = sc.removeSparkListener(this)
 }

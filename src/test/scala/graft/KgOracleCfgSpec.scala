@@ -32,4 +32,15 @@ class KgOracleCfgSpec extends SparkSpec {
       headPairs shouldBe k * (k - 1) / 2
     } finally g.unpersist()
   }
+
+  test("q29 releases its caches: three calls leave the cache manager empty") {
+    // suites share one session; drop what earlier suites left cached so
+    // the check can be absolute
+    spark.catalog.clearCache()
+    val q29 = SparkEntry.queries("q29_kg_triples")
+    val counts = (1 to 3).map(_ => q29(spark, "").count())
+    counts.distinct should have size 1
+    counts.head should be > 0L
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
 }

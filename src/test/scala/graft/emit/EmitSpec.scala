@@ -4,6 +4,9 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 import graft.model._
+import graft.pipeline.Pipeline
+import graft.synth.{Synth, SynthConfig}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 
 class EmitSpec extends SparkSpec {
@@ -160,5 +163,65 @@ class EmitSpec extends SparkSpec {
         .select(Hierarchy.prefixesOf(col("url"))(0)).head().getString(0)
       graft.extract.Extract.site(u) shouldBe firstPrefix
     }
+  }
+
+  test("links_to: a page linking one url twice yields one edge, no dedup exchange") {
+    // linksTo relies on one row per url and dedups each link array
+    // itself (array_distinct) instead of running a global distinct
+    val a = "https://h.example/a"
+    val b = "https://h.example/b"
+    val ex = spark.createDataset(Seq(
+      ExtractedPage(a, "h.example", ts, "t", "en",
+        Seq(b, "https://gone.example/x", b, a, b), "s1"),
+      ExtractedPage(b, "h.example", ts, "t", "en", Seq(a, a), "s2")))
+    val lt = Emit.linksTo(ex.toDF(), ex.toDF())
+    lt.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted shouldBe
+      Seq((a, a), (a, b), (b, a))
+    // the triple branch stays distinct by construction
+    val t = Emit.triples(ex, spark.emptyDataset[LinkedMention],
+      spark.emptyDataset[CanonRow]).toDF().filter(col("pred") === Pred.LinksTo)
+    t.count() shouldBe 3L
+    t.distinct().count() shouldBe 3L
+  }
+
+  test("connectedNodes equals dropOrphans(nodes, triples): row multiset, props included") {
+    // a collected multiset: duplicate rows or a wrong props map must show
+    def rows(ds: Dataset[NodeRow]): Seq[(String, String, String)] =
+      ds.collect().toSeq.map(n =>
+        (n.node_id, n.label, n.props.toSeq.sorted.mkString(","))).sorted
+    val fixture = SynthConfig(seed = 42L, nPages = 300L, nSites = 7, nEntities = 60)
+    def check(name: String, cfg: SynthConfig,
+        pages: Option[Dataset[PageRow]] = None): Unit = withClue(s"$name: ") {
+      val g = Pipeline.run(pages.getOrElse(Synth.pages(spark, cfg)),
+        Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
+      try {
+        Seq(None, Some("snap-1")).foreach { sid =>
+          val want = rows(Emit.dropOrphans(
+            Emit.nodes(g.extracted, g.canon, sid), g.triples))
+          rows(Emit.connectedNodes(g.extracted, g.pageEntitySets, sid)) shouldBe want
+        }
+        rows(g.nodes) shouldBe
+          rows(Emit.dropOrphans(Emit.nodes(g.extracted, g.canon), g.triples))
+      } finally g.unpersist()
+    }
+    check("fixture", fixture)
+    check("messy urls", fixture.copy(messyUrlEvery = 5))
+    check("KgOracleCfg", graft.SparkEntry.KgOracleCfg)
+    // many more canonical entities than the pages mention: the cleanup
+    // must really drop ENTITY rows here
+    val sparse = SynthConfig(seed = 7L, nPages = 20L, nSites = 3, nEntities = 400)
+    val sg = Pipeline.run(Synth.pages(spark, sparse), Synth.aliases(spark, sparse),
+      Synth.sameAs(spark, sparse), sparse.nPages)
+    try {
+      val ents = sg.nodes.collect().count(_.label == Label.Entity)
+      ents should be > 0
+      ents should be < sg.canon.toDF().select("canon_id").distinct().count().toInt
+    } finally sg.unpersist()
+    check("unmentioned canonical entities", sparse)
+    // no pages at all: every node is an orphan, the root included
+    check("empty corpus", fixture, Some(spark.emptyDataset[PageRow]))
+    val eg = Pipeline.run(spark.emptyDataset[PageRow], Synth.aliases(spark, fixture),
+      Synth.sameAs(spark, fixture), fixture.nPages)
+    try eg.nodes.count() shouldBe 0L finally eg.unpersist()
   }
 }

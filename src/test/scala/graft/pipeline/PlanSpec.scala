@@ -175,7 +175,7 @@ class PlanSpec extends SparkSpec {
     } finally g.unpersist()
   }
 
-  test("emit outputs read the cached triples: nodes and adjacency scan it, adjacency shuffle-free") {
+  test("emit outputs: nodes skip the triple set, adjacency scans its cache") {
     val cfg = SynthConfig(nPages = 50L)
     val g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
       Synth.sameAs(spark, cfg), cfg.nPages)
@@ -184,14 +184,21 @@ class PlanSpec extends SparkSpec {
       // once materialized, triples' own plan is a single scan of its cache
       val own = cacheScans(g.triples.toDF().queryExecution.executedPlan)
       own should have size 1
-      // orphan cleanup and adjacency read that cache instead of re-running
-      // the four triple branches; plans are read after collect(), so AQE's
-      // final plan is the one inspected (same QueryExecution object)
+      // plans are read after collect(), so AQE's final plan is the one
+      // inspected (same QueryExecution object)
       val nodes = g.nodes.toDF()
       nodes.collect()
+      val nodesPlan = nodes.queryExecution.executedPlan
       withClue("nodes: ") {
-        cacheScans(nodes.queryExecution.executedPlan).exists(_ eq own.head) shouldBe true
+        // the orphan-free table is built from its sources: no scan of the
+        // triple set, and only the hierarchy and entity-id distincts
+        // shuffle (no endpoint explode + distinct + semi join)
+        cacheScans(nodesPlan).exists(_ eq own.head) shouldBe false
+        planNodes(nodesPlan).collect { case e: ShuffleExchangeExec => e }
+          .size should be <= 2
       }
+      // adjacency reads the triples cache instead of re-running the four
+      // triple branches
       val adj = g.adjacency.toDF()
       adj.collect()
       val adjPlan = adj.queryExecution.executedPlan
