@@ -165,7 +165,7 @@ class EmitSpec extends SparkSpec {
     }
   }
 
-  test("links_to: a page linking one url twice yields one edge, no dedup exchange") {
+  test("links_to: a page linking one url twice yields one edge") {
     // linksTo relies on one row per url and dedups each link array
     // itself (array_distinct) instead of running a global distinct
     val a = "https://h.example/a"
@@ -189,39 +189,34 @@ class EmitSpec extends SparkSpec {
     def rows(ds: Dataset[NodeRow]): Seq[(String, String, String)] =
       ds.collect().toSeq.map(n =>
         (n.node_id, n.label, n.props.toSeq.sorted.mkString(","))).sorted
-    val fixture = SynthConfig(seed = 42L, nPages = 300L, nSites = 7, nEntities = 60)
-    def check(name: String, cfg: SynthConfig,
-        pages: Option[Dataset[PageRow]] = None): Unit = withClue(s"$name: ") {
+    /** Pipeline.run's node table (connectedNodes, unstamped) and a
+      * snapshot-stamped connectedNodes, each against dropOrphans; returns
+      * the former's rows and the canon map's distinct canon id count. */
+    def check(name: String, cfg: SynthConfig, pages: Option[Dataset[PageRow]] = None)
+        : (Seq[(String, String, String)], Long) = withClue(s"$name: ") {
       val g = Pipeline.run(pages.getOrElse(Synth.pages(spark, cfg)),
         Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
       try {
-        Seq(None, Some("snap-1")).foreach { sid =>
-          val want = rows(Emit.dropOrphans(
-            Emit.nodes(g.extracted, g.canon, sid), g.triples))
-          rows(Emit.connectedNodes(g.extracted, g.pageEntitySets, sid)) shouldBe want
-        }
-        rows(g.nodes) shouldBe
-          rows(Emit.dropOrphans(Emit.nodes(g.extracted, g.canon), g.triples))
+        val got = rows(g.nodes)
+        got shouldBe rows(Emit.dropOrphans(Emit.nodes(g.extracted, g.canon), g.triples))
+        val sid = Some("snap-1")
+        rows(Emit.connectedNodes(g.extracted, g.pageEntitySets, sid)) shouldBe
+          rows(Emit.dropOrphans(Emit.nodes(g.extracted, g.canon, sid), g.triples))
+        (got, g.canon.toDF().select("canon_id").distinct().count())
       } finally g.unpersist()
     }
+    val fixture = SynthConfig(seed = 42L, nPages = 300L, nSites = 7, nEntities = 60)
     check("fixture", fixture)
     check("messy urls", fixture.copy(messyUrlEvery = 5))
     check("KgOracleCfg", graft.SparkEntry.KgOracleCfg)
     // many more canonical entities than the pages mention: the cleanup
     // must really drop ENTITY rows here
-    val sparse = SynthConfig(seed = 7L, nPages = 20L, nSites = 3, nEntities = 400)
-    val sg = Pipeline.run(Synth.pages(spark, sparse), Synth.aliases(spark, sparse),
-      Synth.sameAs(spark, sparse), sparse.nPages)
-    try {
-      val ents = sg.nodes.collect().count(_.label == Label.Entity)
-      ents should be > 0
-      ents should be < sg.canon.toDF().select("canon_id").distinct().count().toInt
-    } finally sg.unpersist()
-    check("unmentioned canonical entities", sparse)
+    val (sparse, canonIds) = check("unmentioned canonical entities",
+      SynthConfig(seed = 7L, nPages = 20L, nSites = 3, nEntities = 400))
+    val ents = sparse.count(_._2 == Label.Entity)
+    ents should be > 0
+    ents.toLong should be < canonIds
     // no pages at all: every node is an orphan, the root included
-    check("empty corpus", fixture, Some(spark.emptyDataset[PageRow]))
-    val eg = Pipeline.run(spark.emptyDataset[PageRow], Synth.aliases(spark, fixture),
-      Synth.sameAs(spark, fixture), fixture.nPages)
-    try eg.nodes.count() shouldBe 0L finally eg.unpersist()
+    check("empty corpus", fixture, Some(spark.emptyDataset[PageRow]))._1 shouldBe empty
   }
 }

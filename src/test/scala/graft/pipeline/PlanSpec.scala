@@ -192,7 +192,7 @@ class PlanSpec extends SparkSpec {
       withClue("nodes: ") {
         // the orphan-free table is built from its sources: no scan of the
         // triple set, and only the hierarchy and entity-id distincts
-        // shuffle (no endpoint explode + distinct + semi join)
+        // shuffle
         cacheScans(nodesPlan).exists(_ eq own.head) shouldBe false
         planNodes(nodesPlan).collect { case e: ShuffleExchangeExec => e }
           .size should be <= 2
