@@ -25,9 +25,9 @@ import org.apache.spark.sql.functions.{col, to_json}
   *  - `phases [nPages]`: per-stage wall breakdown of the KG pipeline
   *    exactly as Pipeline.run composes it (cache-materializing action
   *    per stage, jobs labelled for the UI), the end-to-end kg leg, and
-  *    an outputs leg: Pipeline.run, then all-column checksums of
-  *    triples, nodes and adjacency (the ones perfbench's run_dense
-  *    takes), each with its wall time and Spark job count.
+  *    an outputs leg: Pipeline.run's construction, then all-column
+  *    checksums of triples, nodes and adjacency (the ones perfbench's
+  *    run_dense takes), each with its wall time and Spark job count.
   *
   * Session setup mirrors graft.Bench (same master/shuffle conf) so the
   * numbers are comparable to BENCH_r*.json legs.
@@ -156,24 +156,33 @@ object BenchExtra {
         }
         val es = (1 to 3).map(_ => kgOnce())
         println(f"[phase] end-to-end min=${es.min}%.2f s runs=${es.map(t => f"$t%.2f").mkString(",")}")
-        // outputs leg: wall and job count of each output action
+        // outputs leg: wall and job count of Pipeline.run's construction
+        // and of each output action
         val jobs = new JobCounter(spark.sparkContext)
         (1 to 3).foreach { round =>
-          val g = Pipeline.run(
-            spark.read.parquet(inputDir).as[graft.model.PageRow],
-            Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
-          try Seq(
-            "triples" -> (() => Checksum.of(g.triples.toDF(),
-              Seq("subj", "pred", "obj"))),
-            "nodes" -> (() => Checksum.of(g.nodes.toDF()
-              .withColumn("props_json", to_json(col("props"))),
-              Seq("node_id", "label", "props_json"))),
-            "adjacency" -> (() => Checksum.of(g.adjacency.toDF(),
-              Seq("src", "dst", "pred")))
-          ).foreach { case (name, ck) =>
+          def measured(name: String)(body: => Unit): Unit = {
             val n0 = jobs.sync()
-            val s = time(ck())
+            val s = time(body)
             println(f"[outputs] round $round $name $s%.2f s jobs=${jobs.sync() - n0}")
+          }
+          var g: Pipeline.Graph = null
+          measured("construct") {
+            g = Pipeline.run(
+              spark.read.parquet(inputDir).as[graft.model.PageRow],
+              Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
+          }
+          try {
+            measured("triples") {
+              Checksum.of(g.triples.toDF(), Seq("subj", "pred", "obj"))
+            }
+            measured("nodes") {
+              Checksum.of(g.nodes.toDF()
+                .withColumn("props_json", to_json(col("props"))),
+                Seq("node_id", "label", "props_json"))
+            }
+            measured("adjacency") {
+              Checksum.of(g.adjacency.toDF(), Seq("src", "dst", "pred"))
+            }
           } finally g.unpersist()
         }
         jobs.close()
