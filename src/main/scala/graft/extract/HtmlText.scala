@@ -54,15 +54,14 @@ object HtmlText {
   def extractFromString(raw: String): String =
     scanSteps(exciseSteps(raw))
 
-  /** Steps 2-3 (comment / script-style excision), exposed for
-    * step-level profiling. Both are hand scans as of round 4 —
-    * value-identical to the original `(?s)<!--.*?-->` and
+  /** Steps 2-3 (comment / script-style excision). Both are hand scans
+    * as of round 4 — value-identical to the original `(?s)<!--.*?-->` and
     * `(?is)<(script|style)\b[^>]*>.*?</\1\s*>` regex passes, whose
     * reference implementations are retained in test scope
     * (HtmlTextReference) and fuzz-compared (HtmlTextEquivalenceSpec:
     * corpus + 500 adversarial tag-soup cases incl. unterminated
     * openers, nested other-kind openers, case-mixed close tags). */
-  def exciseSteps(raw: String): String =
+  private def exciseSteps(raw: String): String =
     stripScriptStyle(stripComments(raw))
 
   /** Scan equivalent of `(?s)<!--.*?-->` → "": each `<!--` opener
@@ -155,15 +154,14 @@ object HtmlText {
     else { sb.append(s, from, n); sb.toString }
   }
 
-  /** Steps 4-7 (the fused scanners), exposed for step-level profiling.
-    * Implementation detail: the four tag/entity passes run on two
-    * ping-pong char buffers (every pass SHRINKS its input, so two
-    * n-sized arrays cover the whole cascade) — this halves the memory
-    * traffic of the previous one-StringBuilder-and-toString-per-pass
-    * shape with byte-identical output (golden sha256 fixtures + the
-    * 500-case equivalence fuzz against the retained v1 reference
-    * implementation pin it). */
-  def scanSteps(raw: String): String = {
+  /** Steps 4-7 (the fused scanners). Implementation detail: the four
+    * tag/entity passes run on two ping-pong char buffers (every pass
+    * SHRINKS its input, so two n-sized arrays cover the whole cascade)
+    * — this halves the memory traffic of the previous
+    * one-StringBuilder-and-toString-per-pass shape with byte-identical
+    * output (golden sha256 fixtures + the 500-case equivalence fuzz
+    * against the retained v1 reference implementation pin it). */
+  private def scanSteps(raw: String): String = {
     val n = raw.length
     if (n == 0) return raw
     var src = new Array[Char](n)

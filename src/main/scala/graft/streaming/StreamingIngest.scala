@@ -146,14 +146,13 @@ object StreamingIngest {
             // TTL anchored to the key's max EVENT time, not the
             // watermark: the watermark lags a whole batch, and anchoring
             // there evicts one trigger too early. Clamped to stay above
-            // the current watermark: flatMapGroupsWithState does NOT
-            // pre-filter late rows (unlike aggregations), so a
-            // re-arrival more than ttl older than the watermark would
-            // otherwise compute a timeout in the past and the engine
-            // rejects it (found by the 100k-corpus StreamGateBench —
-            // the MemoryStream specs replay within the lateness window
-            // and never hit it). Such a key is evictable at the very
-            // next trigger, which the +1 encodes.
+            // the current watermark: a re-arrival more than ttl older
+            // than the watermark would otherwise compute a timeout in
+            // the past and the engine rejects it (found by the
+            // 100k-corpus StreamGateBench; in the MemoryStream specs
+            // such a row arrives below the watermark and is dropped as
+            // late before the gate). Such a key is evictable at the
+            // very next trigger, which the +1 encodes.
             if (rs.nonEmpty)
               state.setTimeoutTimestamp(
                 math.max(rs.map(_.warc_ts.getTime).max + ttlMs,
@@ -175,8 +174,12 @@ object StreamingIngest {
     * clock, so nothing ever evicted — the measured 106 vs 52 MB state
     * at 109k docs (BENCH/BASELINE.md) was a state blow-up in the
     * making. Requires the RocksDB state store provider.
-    * Admission semantics within a batch are identical to nearDupGate
-    * (first-seen-wins by the frozen tie-break) and spec-compared.
+    * Admission is identical to nearDupGate for rows at or above the
+    * watermark (first-seen-wins by the frozen tie-break). A first-seen
+    * row that arrives below the watermark is dropped as late, before
+    * the processor sees it — and nearDupGate, whose
+    * flatMapGroupsWithState runs with an event-time timeout, drops it
+    * too. StreamingSpec pins both, with one such row per gate.
     *
     * Operational caveats (measured, Spark 4.1):
     *  - event-time timers only fire as the watermark advances, so the

@@ -3,8 +3,9 @@ package graft.synth
 import org.apache.spark.sql.SparkSession
 
 /** The ONE bench-corpus contract shared by every benchmark generator
-  * (Bench, ScalingBench, ClusterScalingBench, IncrementalBench, phase
-  * probes — BENCH/BASELINE.md):
+  * (Bench, ScalingBench, ClusterScalingBench, ClusterPhaseBench,
+  * ClusterExtractProbe, IncrementalBench, BenchExtra phases —
+  * BENCH/BASELINE.md):
   *
   *  - realistic page shape (tens of KB html, ~6 mentions/page) — the
   *    fixture defaults are deliberately light and would make the KG

@@ -1,14 +1,9 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.extract.Extract
-import graft.link.Link
-import graft.mention.Mention
 import graft.pipeline.Pipeline
 import graft.synth.Synth
 import graft.util.Checksum
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, to_json}
 
@@ -22,12 +17,13 @@ import org.apache.spark.sql.functions.{col, to_json}
   *    declared query to plans/r06/<qname>_<tag>.txt (default: all).
   *  - `queries [qname...]`: noop-sink-isolated min-of-3 per query
   *    (guide §1.4 — times the computation, not the count() shortcut).
-  *  - `phases [nPages]`: per-stage wall breakdown of the KG pipeline
-  *    exactly as Pipeline.run composes it (cache-materializing action
-  *    per stage, jobs labelled for the UI), the end-to-end kg leg, and
-  *    an outputs leg: Pipeline.run's construction, then all-column
-  *    checksums of triples, nodes and adjacency (the ones perfbench's
-  *    run_dense takes), each with its wall time and Spark job count.
+  *  - `phases [nPages]`: per-stage wall time and Spark job count of
+  *    `Pipeline.run` itself — its construction, then each of its six
+  *    caches filled in dependency order ([[Harness.timeStages]]) — the
+  *    end-to-end kg leg, and an outputs leg: Pipeline.run's
+  *    construction, then all-column checksums of triples, nodes and
+  *    adjacency (the ones perfbench's run_dense takes), each with its
+  *    wall time and Spark job count.
   *
   * Session setup mirrors graft.Bench (same master/shuffle conf) so the
   * numbers are comparable to BENCH_r*.json legs.
@@ -93,51 +89,14 @@ object BenchExtra {
         val cfg = graft.synth.BenchInput.cfg(nPages)
         val inputDir = graft.synth.BenchInput.ensure(spark, nPages)
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
+        def construct(): Pipeline.Graph = Pipeline.run(
+          spark.read.parquet(inputDir).as[graft.model.PageRow],
+          Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
+        val jobs = new JobCounter(spark.sparkContext)
         def leg(): Unit = {
-          def t(name: String)(body: => Unit): Unit = {
-            spark.sparkContext.setJobDescription(s"phase:$name")
-            println(f"[phase] $name ${time(body)}%.2f s")
-            spark.sparkContext.setJobDescription(null)
-          }
-          val pages = spark.read.parquet(inputDir).as[graft.model.PageRow]
-          val cacheParts = math.max(spark.sparkContext.defaultParallelism * 3,
-            spark.sessionState.conf.numShufflePartitions)
-          var extracted: org.apache.spark.sql.Dataset[graft.model.ExtractedPage] = null
-          t("extract+persist") {
-            extracted = Extract.run(pages).coalesce(cacheParts)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            extracted.foreachPartition { (_: Iterator[graft.model.ExtractedPage]) => () }
-          }
-          var cands: org.apache.spark.sql.Dataset[graft.model.CandidateRow] = null
-          t("mention+persist") {
-            cands = Mention.detect(extracted, Synth.aliases(spark, cfg))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            cands.foreachPartition { (_: Iterator[graft.model.CandidateRow]) => () }
-          }
-          var linked: org.apache.spark.sql.Dataset[graft.model.LinkedMention] = null
-          t("link+persist") {
-            linked = Link.resolve(cands, cfg.nPages)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            linked.foreachPartition { (_: Iterator[graft.model.LinkedMention]) => () }
-          }
-          var canon: org.apache.spark.sql.Dataset[graft.model.CanonRow] = null
-          t("cc+persist") {
-            canon = Pipeline.canonOf(Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            canon.foreachPartition { (_: Iterator[graft.model.CanonRow]) => () }
-          }
-          var pe: DataFrame = null
-          t("pageEntitySets+persist") {
-            pe = graft.emit.Emit.pageEntitySets(linked, canon)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pe.foreachPartition { (_: Iterator[org.apache.spark.sql.Row]) => () }
-          }
-          t("triples count") {
-            val n = graft.emit.Emit.triples(extracted, linked, canon, Some(pe)).count()
-            println(s"[phase]   triples=$n")
-          }
-          extracted.unpersist(); cands.unpersist(); linked.unpersist()
-          canon.unpersist(); pe.unpersist()
+          val g = Harness.timeStages(jobs, s => println(s"[phase] $s"))(construct())
+          try println(s"[phase]   triples=${g.triples.count()}")
+          finally g.unpersist()
         }
         // warm-up leg then two measured legs (Bench protocol shape)
         println("[phase] === warm-up leg ===")
@@ -147,30 +106,23 @@ object BenchExtra {
         println("[phase] === measured leg 2 ===")
         leg()
         // end-to-end, exactly as Bench times it
+        var triples = 0L
         def kgOnce(): Double = time {
-          val g = Pipeline.run(
-            spark.read.parquet(inputDir).as[graft.model.PageRow],
-            Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
-          g.triples.count()
+          val g = construct()
+          triples = g.triples.count()
           g.unpersist()
         }
         val es = (1 to 3).map(_ => kgOnce())
-        println(f"[phase] end-to-end min=${es.min}%.2f s runs=${es.map(t => f"$t%.2f").mkString(",")}")
+        println(f"[phase] end-to-end min=${es.min}%.2f s runs=${es.map(t => f"$t%.2f").mkString(",")} triples=$triples")
         // outputs leg: wall and job count of Pipeline.run's construction
         // and of each output action
-        val jobs = new JobCounter(spark.sparkContext)
         (1 to 3).foreach { round =>
-          def measured(name: String)(body: => Unit): Unit = {
-            val n0 = jobs.sync()
-            val s = time(body)
-            println(f"[outputs] round $round $name $s%.2f s jobs=${jobs.sync() - n0}")
+          def measured[T](name: String)(body: => T): T = {
+            val (r, step) = Harness.measure(jobs, name)(body)
+            println(s"[outputs] round $round $step")
+            r
           }
-          var g: Pipeline.Graph = null
-          measured("construct") {
-            g = Pipeline.run(
-              spark.read.parquet(inputDir).as[graft.model.PageRow],
-              Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages)
-          }
+          val g = measured("construct")(construct())
           try {
             measured("triples") {
               Checksum.of(g.triples.toDF(), Seq("subj", "pred", "obj"))
@@ -187,107 +139,10 @@ object BenchExtra {
         }
         jobs.close()
 
-      case "q29probe" =>
-        // where do q29's seconds go? construction (eager jobs) vs the
-        // count action, per pipeline stage, on the tiny oracle corpus
-        import spark.implicits._
-        val cfg = SparkEntry.KgOracleCfg
-        def leg(tag: String): Unit = {
-          def t(name: String)(body: => Unit): Unit = {
-            spark.sparkContext.setJobDescription(s"q29:$name")
-            println(f"[q29:$tag] $name ${time(body)}%.3f s")
-            spark.sparkContext.setJobDescription(null)
-          }
-          var g: Pipeline.Graph = null
-          t("extract.run construction") {
-            val e = graft.extract.Extract.run(Synth.pages(spark, cfg))
-            g = null; val _ = e
-          }
-          t("Pipeline.run construction") {
-            g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
-              Synth.sameAs(spark, cfg), cfg.nPages)
-          }
-          t("triples count") { g.triples.count() }
-          t("second count (caches warm)") { g.triples.count() }
-          g.unpersist()
-        }
-        leg("warm0"); leg("a"); leg("b")
-
-      case "linkprobe" =>
-        // where does the link stage's wall go? alias-df aggregation vs
-        // the url-shuffle + typed scorer, on the bench corpus
-        import spark.implicits._
-        val nPages = if (args.length > 1) args(1).toLong else 20000L
-        val cfg = graft.synth.BenchInput.cfg(nPages)
-        val inputDir = graft.synth.BenchInput.ensure(spark, nPages)
-        spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
-        val pages = spark.read.parquet(inputDir).as[graft.model.PageRow]
-        val extracted = Extract.run(pages)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        extracted.count()
-        val cands = Mention.detect(extracted, Synth.aliases(spark, cfg))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        cands.count()
-        def leg(tag: String): Unit = {
-          def t(name: String)(body: => Unit): Unit = {
-            spark.sparkContext.setJobDescription(s"link:$name")
-            println(f"[link:$tag] $name ${time(body)}%.3f s")
-            spark.sparkContext.setJobDescription(null)
-          }
-          var m: Map[String, Long] = null
-          t("aliasDf agg + collect") {
-            m = Link.collectAliasDf(Link.aliasDf(cands.toDF()))
-          }
-          t("resolve w/ precomputed map (shuffle + scorer only)") {
-            noop(Link.resolve(cands, cfg.nPages, Some(m)).toDF())
-          }
-          t("resolve full (lazy broadcast df)") {
-            noop(Link.resolve(cands, cfg.nPages).toDF())
-          }
-          t("resolveTyped reference") {
-            noop(Link.resolveTyped(cands, cfg.nPages).toDF())
-          }
-        }
-        leg("warm"); leg("a"); leg("b")
-
       case other =>
         System.err.println(s"unknown mode $other")
         sys.exit(2)
     }
     spark.stop()
   }
-}
-
-/** Counts the Spark jobs an action runs. Listener events arrive
-  * asynchronously, in order: `sync()` runs a one-task marker job and
-  * waits until the listener has seen it start, so every job submitted
-  * before the marker has been counted. The jobs of an action are the
-  * difference of the counts `sync()` returns around it; marker jobs are
-  * not counted. */
-final class JobCounter(sc: SparkContext) extends SparkListener {
-  private val Marker = "graft-job-counter-marker-"
-  @volatile private var jobs = 0L
-  private val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
-  private var nMarkers = 0
-  sc.addSparkListener(this)
-
-  override def onJobStart(e: SparkListenerJobStart): Unit =
-    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-      .filter(_.startsWith(Marker)) match {
-      case Some(m) => markers.put(m)
-      case None => jobs += 1
-    }
-
-  /** Jobs counted so far, once every earlier job has been seen. */
-  def sync(): Long = {
-    nMarkers += 1
-    val tag = s"$Marker$nMarkers"
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(tag)
-    try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(prev)
-    while (markers.take() != tag) ()
-    jobs
-  }
-
-  def close(): Unit = sc.removeSparkListener(this)
 }

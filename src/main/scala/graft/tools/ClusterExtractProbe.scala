@@ -1,14 +1,13 @@
 package graft.tools
 
 import graft.extract.Extract
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Attribution probe for the extract leg under REAL separate executor
   * JVMs: times the key-width dedup (round 5), the wide-shuffle plan it
   * replaced, and their components (pass-1 key aggregation alone; a
   * no-dedup extract-everything scan as the lower bound) on the shared
-  * bench input.
+  * bench input, on the shared [[Harness.clusterSession]].
   *
   *   sbt package && sbt "runMain graft.tools.ClusterExtractProbe <workers> <coresPerWorker> <nPages>"
   */
@@ -17,39 +16,8 @@ object ClusterExtractProbe {
     val nWorkers = args(0).toInt
     val coresPerWorker = args(1).toInt
     val nPages = if (args.length > 2) args(2).toLong else 50000L
-    val totalCores = nWorkers * coresPerWorker
-
-    val jar = new java.io.File(
-      "target/scala-2.13/clangdtoneo4jspark_2.13-0.1.0.jar").getAbsolutePath
-    require(new java.io.File(jar).exists(), s"run `sbt package` first: $jar")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ") +
-      // same ActiveProcessorCount policy (and A/B toggle) as
-      // ClusterScalingBench so probe numbers compose with bench numbers
-      (if (sys.env.get("SPARK_GRAFT_APC").contains("off")) ""
-       else s" -XX:ActiveProcessorCount=$coresPerWorker")
-    val execMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "4096").toInt
-    val spark = SparkSession.builder()
-      .master(s"local-cluster[$nWorkers, $coresPerWorker, $execMb]")
-      .appName(s"graft-extract-probe-$nWorkers-x-$coresPerWorker")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", totalCores.toString))
-      .config("spark.jars", jar)
-      .config("spark.executor.memory", s"${execMb}m")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.clusterSession(nWorkers, coresPerWorker,
+      "graft-extract-probe")
     import spark.implicits._
 
     val inputDir = graft.synth.BenchInput.ensure(spark, nPages)

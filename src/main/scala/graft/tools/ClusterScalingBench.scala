@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.pipeline.Pipeline
-import graft.synth.{Synth, SynthConfig}
-import org.apache.spark.sql.SparkSession
+import graft.synth.Synth
 
 /** Scaling-efficiency evidence with REAL separate executor JVMs:
   * `local-cluster[N, cores, mem]` launches N worker processes on this
@@ -13,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt package && sbt "runMain graft.tools.ClusterScalingBench <workers> <coresPerWorker> <nPages>"
   *
-  * Same protocol as ScalingBench: materialized parquet input shared
-  * across runs, warm-up out of the window, min-of-3 trials, one JSON
+  * Session recipe: [[Harness.clusterSession]]. Same protocol as
+  * ScalingBench: materialized parquet input shared across runs, the
+  * shared warm-up out of the window, min-of-3 trials, one JSON
   * line out. Compare workers=2 vs workers=8 at equal coresPerWorker for
   * the N→4N story.
   */
@@ -23,60 +23,18 @@ object ClusterScalingBench {
     val nWorkers = args(0).toInt
     val coresPerWorker = args(1).toInt
     val nPages = if (args.length > 2) args(2).toLong else 50000L
-    val totalCores = nWorkers * coresPerWorker
-
-    val jar = new java.io.File(
-      "target/scala-2.13/clangdtoneo4jspark_2.13-0.1.0.jar").getAbsolutePath
-    require(new java.io.File(jar).exists(), s"run `sbt package` first: $jar")
-    // executor JVMs are forked by the worker and need the same JDK17
-    // --add-opens set build.sbt gives the driver
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ") +
-      // a real cluster caps each executor's visible CPUs (cgroups); a
-      // local-cluster executor JVM sees all 32 host cores and sizes its
-      // GC/JIT/netty pools for them. Cap to the granted cores — unless
-      // SPARK_GRAFT_APC=off (A/B: the cap also shrinks GC worker pools,
-      // which costs alloc-heavy legs; both settings are reported).
-      (if (sys.env.get("SPARK_GRAFT_APC").contains("off")) ""
-       else s" -XX:ActiveProcessorCount=$coresPerWorker")
-
-    // per-executor memory (MB): same on every config so the N→4N story
-    // compares equal executors, only more of them
-    val execMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MB", "4096").toInt
-    val spark = SparkSession.builder()
-      .master(s"local-cluster[$nWorkers, $coresPerWorker, $execMb]")
-      .appName(s"graft-cluster-scaling-$nWorkers-x-$coresPerWorker")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", totalCores.toString))
-      .config("spark.jars", jar)
-      .config("spark.executor.memory", s"${execMb}m")
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.clusterSession(nWorkers, coresPerWorker,
+      "graft-cluster-scaling")
     import spark.implicits._
 
     val cfg = graft.synth.BenchInput.cfg(nPages)
-    // one fixed 64-file layout regardless of generating session: a table
+    // one fixed BenchInput.PartFiles layout regardless of generating session: a table
     // written by a 2-core session would otherwise cap scan parallelism at
     // a handful of row-group splits and silently wreck the scaling story
     val inputDir = graft.synth.BenchInput.ensure(spark, nPages)
     def readPages() = spark.read.parquet(inputDir).as[graft.model.PageRow]
 
-    val warm = Pipeline.run(readPages().limit(1000),
-      Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), 1000L)
-    warm.triples.count()
-    warm.unpersist()
+    Harness.warmUp(readPages(), cfg)
 
     val trials = (1 to 3).map { _ =>
       val t0 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.pipeline.Pipeline
-import graft.synth.{Synth, SynthConfig}
+import graft.synth.Synth
 import org.apache.spark.sql.SparkSession
 
 /** Scaling-efficiency evidence (north_rule: throughput efficiency >= 0.8
@@ -46,13 +46,9 @@ object ScalingBench {
     val inputDir = graft.synth.BenchInput.ensure(spark, nPages)
     def readPages() = spark.read.parquet(inputDir).as[graft.model.PageRow]
 
-    // warm-up: JIT + codegen compile out of the measured window
-    // (both parallelism levels get the same treatment)
-    val warm = Pipeline.run(
-      readPages().limit(1000),
-      Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), 1000L)
-    warm.triples.count()
-    warm.unpersist()
+    // warm-up out of the measured window (both parallelism levels get
+    // the same treatment)
+    Harness.warmUp(readPages(), cfg)
 
     val trials = (1 to 3).map { _ =>
       val t0 = System.nanoTime()

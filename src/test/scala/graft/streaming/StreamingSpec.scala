@@ -185,19 +185,26 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     mem.addData(page("u7", 122 * m, textA))
     q.processAllAvailable()
+    // a first-seen signature arriving below the watermark (112 min now)
+    // is dropped as late, exactly as the transformWithState gate drops it
+    mem.addData(page("u8", 30 * m, "an unseen page about late event-time rows"))
+    q.processAllAvailable()
     val urls = spark.table("neardup_gate").collect().map(_.getString(0)).toSet
     q.stop()
     urls should contain("u7") // signature re-admitted after eviction
+    (urls should not).contain("u8")
     (urls should not).contain("u2")
     (urls should not).contain("u4")
   }
 
   test("near-dup gate survives a re-arrival far older than the watermark") {
-    // flatMapGroupsWithState does NOT pre-filter late rows: a replayed
-    // WARC drop can deliver a row more than ttl older than the current
-    // watermark, whose naive event-time+ttl timeout lies in the past —
-    // the engine rejects past timeouts, so the gate must clamp
-    // (regression: found by StreamGateBench at 100k, crashed the query)
+    // a replayed WARC drop can deliver a row more than ttl older than
+    // the current watermark, whose naive event-time+ttl timeout lies in
+    // the past — the engine rejects past timeouts, so the gate must
+    // clamp (regression: found by StreamGateBench at 100k, crashed the
+    // query). Here the old row arrives below the watermark and is
+    // dropped as late before the gate, so this pins only that the query
+    // survives it.
     import java.sql.Timestamp
     import graft.model.ExtractedPage
     implicit val sqlCtx = spark.sqlContext
@@ -292,6 +299,14 @@ class StreamingSpec extends SparkSpec {
       awaitRows(5)
       spark.table("neardup_tws").collect().map(_.getString(0)).toSet shouldBe
         Set("u1", "u3", "u5", "u6", "u7")
+      // a first-seen signature below the watermark (290m after u7) is
+      // dropped as late, as the event-time gate drops it; u9 rides in the
+      // same batch, so once u9 lands u8 has been decided
+      mem.addData(page("u8", 100 * m, "an unseen page about late event-time rows"),
+        page("u9", 330 * m, "a last fresh page on broadcast hash joins"))
+      awaitRows(6)
+      spark.table("neardup_tws").collect().map(_.getString(0)).toSet shouldBe
+        Set("u1", "u3", "u5", "u6", "u7", "u9")
       q.stop()
     } finally {
       prevProvider match {
