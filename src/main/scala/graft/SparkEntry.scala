@@ -609,7 +609,7 @@ object SparkEntry {
         |FROM m ORDER BY doc_id""".stripMargin,
     // SimHash brute-force re-derivation: md5-derived 64-bit token hash
     // ((hi-signed)*2^32+lo assembles the first 8 md5 bytes big-endian,
-    // matching DedupOps.md5Hash64), per-bit majority vote, all-pairs
+    // matching SimHash64's token hash), per-bit majority vote, all-pairs
     // hamming <= 3 — the banding in simhashPairs is exhaustive for
     // radius 3 (pigeonhole), so the sets must be equal.
     "q23_simhash_pairs" ->

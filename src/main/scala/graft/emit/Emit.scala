@@ -148,7 +148,8 @@ object Emit {
     * and only afterwards prunes the unreferenced ones (pass 8,
     * clangd_graph_rag_builder.py:200-207, skippable via
     * --keep-orphans). This is the `keepOrphans` table; the default
-    * orphan-free table is [[connectedNodes]].
+    * orphan-free table is [[connectedNodes]]. perfbench's composed
+    * run and build also pass it to [[dropOrphans]].
     *
     * @param snapshotId stamped onto the PROJECT root node's props —
     *        ≙ PROJECT.commit_hash (clangd_graph_rag_builder.py:112-122).
@@ -241,7 +242,9 @@ object Emit {
     * clangd_graph_rag_builder.py:200-207): a left semi join of `nodes`
     * against the distinct triple endpoints. The pipelines build the
     * orphan-free table directly with [[connectedNodes]]; this literal
-    * form is the agreement reference it is checked against. */
+    * form is the agreement reference it is checked against. It stays
+    * in src/main because perfbench's composed run and build still call
+    * it. */
   def dropOrphans(
       nodes: Dataset[NodeRow],
       triples: Dataset[TripleRow]): Dataset[NodeRow] = {

@@ -17,40 +17,25 @@ import org.apache.spark.sql.functions._
   * depth 0. host (depth 1) carries the SITE label, deeper prefixes
   * SECTION (≙ FOLDER). Everything here is pure column expressions —
   * codegen-friendly, an A3-style explode feeding the A11 depth loop.
+  *
+  * FROZEN messy-url policy (applied by the native PathPrefixes scan):
+  * the query string and fragment are NOT path segments —
+  * `https://h/p?x=1/2` must not mint a SECTION node `h/p?x=1`. Real-web
+  * corpora carry `?`/`#` on a large fraction of urls; keeping them
+  * would explode the SECTION space with per-query-string nodes and
+  * pollute the roll-up.
   */
 object Hierarchy {
-
-  private val SchemeRe = "^[a-zA-Z][a-zA-Z0-9+.-]*://"
-  /** FROZEN messy-url policy: the query string and fragment are NOT path
-    * segments — `https://h/p?x=1/2` must not mint a SECTION node
-    * `h/p?x=1`. Real-web corpora carry `?`/`#` on a large fraction of
-    * urls; keeping them would explode the SECTION space with
-    * per-query-string nodes and pollute the roll-up. `(?s)` so a
-    * (pathological) newline after `?` cannot resurrect a suffix. */
-  private val QueryFragRe = "(?s)[?#].*"
-
-  /** url with its scheme, query string and fragment stripped (the path
-    * key space). */
-  def pathOf(url: Column): Column =
-    regexp_replace(regexp_replace(url, SchemeRe, ""), QueryFragRe, "")
 
   /** Ancestor prefixes of a url, shallowest first: [host, host/s1, ...,
     * deepest-dir]. The final path segment is the page's own leaf name and
     * is NOT a prefix; a url with no path ("https://host") is its own
     * single-prefix host. prefixes(url)[0] == Extract.site(url) by
-    * construction. Native single-scan expression; the declarative shape
-    * below is the spec-pinned agreement reference. */
+    * construction. Native single-scan expression; the specs pin it equal
+    * to the declarative shape it replaced,
+    * HierarchyReference.prefixesOfSql. */
   def prefixesOf(url: Column): Column =
     graft.functions.PathPrefixes.path_prefixes(url)
-
-  /** Built-ins-only reference for PathPrefixes (regexp_replace + split +
-    * interpreted transform/slice/array_join per row). */
-  def prefixesOfSql(url: Column): Column = {
-    val segs = split(pathOf(url), "/")
-    when(size(segs) <= 1, array(pathOf(url)))
-      .otherwise(transform(sequence(lit(1), size(segs) - 1),
-        k => array_join(slice(segs, lit(1), k), "/")))
-  }
 
   /** The page's direct parent: its deepest ancestor prefix. */
   def parentOf(url: Column): Column = element_at(prefixesOf(url), -1)

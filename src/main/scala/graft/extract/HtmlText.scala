@@ -2,7 +2,6 @@ package graft.extract
 
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
-import scala.util.matching.Regex
 
 /** Deterministic HTML → text extraction — THE per-row invariant.
   *
@@ -364,9 +363,9 @@ object HtmlText {
   /** Outgoing links: ordered, de-duplicated href="..." / href='...' values.
     * (≙ include-edge extraction, reference: compilation_parser.py:106-111)
     *
-    * Single-pass scanner, value-identical to the retained regex
-    * reference [[extractLinksRef]] INCLUDING its backtracking
-    * semantics, which are part of the frozen v1 policy:
+    * Single-pass scanner, value-identical to the regex reference
+    * (HtmlTextReference.extractLinksRef in the specs) INCLUDING its
+    * backtracking semantics, which are part of the frozen v1 policy:
     *  - `<a\b`: 'a'/'A' followed by a non-word char;
     *  - `[^>]*\bhref`: the RIGHTMOST word-boundary "href" before the
     *    tag's first '>' wins (greedy + backtrack), falling back left
@@ -418,19 +417,6 @@ object HtmlText {
           i = matchedEnd
         } else i += 1
       } else i += 1
-    }
-    seen.toSeq
-  }
-
-  /** Retained regex reference for extractLinks (spec-pinned; the
-    * scanner must agree value-for-value, order included). */
-  private val hrefRe: Regex = "(?i)<a\\b[^>]*\\bhref\\s*=\\s*(\"([^\"]*)\"|'([^']*)')".r
-  def extractLinksRef(html: Array[Byte]): Seq[String] = {
-    val s = decodeUtf8(html)
-    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-    hrefRe.findAllMatchIn(s).foreach { m =>
-      val v = if (m.group(2) != null) m.group(2) else m.group(3)
-      if (v != null && v.nonEmpty) seen += v
     }
     seen.toSeq
   }

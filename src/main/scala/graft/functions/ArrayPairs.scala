@@ -10,8 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native unordered-pair generation over an array column: all
   * (x = a(i), y = a(j)) with i < j, in (i, j) order — value-identical to
-  * the nested-transform shape it replaces (kept in the specs as the
-  * `ArrayPairsRef.pairsHof` agreement reference):
+  * the nested-transform shape it replaces (`ArrayPairsRef.pairsHof` in
+  * the specs):
   * `flatten(transform(es, (a, i) => transform(slice(es, i+2, size(es)),
   * b => struct(a AS x, b AS y))))`.
   *

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native marker-word language ID, value-identical to the declarative
-  * shape it replaces (kept as [[TextOps.langIdSql]] and agreement-
-  * spec'd): per language, count `\b(w1|…|w5)\b` matches in
+  * shape it replaces (`OpsReference.langIdSql` in the specs): per
+  * language, count `\b(w1|…|w5)\b` matches in
   * lower(text); predict the first language in [[TextOps.Markers]] order
   * whose count is positive and maximal, else "und".
   *

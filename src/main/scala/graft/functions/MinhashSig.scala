@@ -9,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native k-slot MinHash signature over a shingle-array column.
   *
-  * Byte-identical to the declarative shape it replaces (kept as
-  * [[graft.ops.DedupOps.minhashSigHof]] and agreement-spec'd):
+  * Byte-identical to the declarative shape it replaces
+  * (`OpsReference.minhashSigHof` in the specs):
   * per seed i in [0, k): min over shingles s of
   * lower-hex(md5(utf8(s) ++ utf8("#" + i))), with "g" as the empty-set
   * sentinel (sorts above every hex digit). Unsigned-byte comparison on

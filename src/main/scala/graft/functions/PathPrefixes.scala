@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native ancestor-prefix derivation for the url-path hierarchy,
-  * value-identical to the declarative shape in
-  * [[graft.emit.Hierarchy.prefixesOfSql]] (spec-pinned): strip the
+  * value-identical to the declarative shape it replaced
+  * (HierarchyReference.prefixesOfSql in the specs): strip the
   * scheme (`^[a-zA-Z][a-zA-Z0-9+.-]*://`, ASCII letters only), drop the
   * query string / fragment (everything from the first '?' or '#' —
   * FROZEN messy-url policy: `https://h/p?x=1/2` contributes no

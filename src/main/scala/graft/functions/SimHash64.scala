@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
 /** Native 64-bit SimHash over a token-array column, value-identical to
-  * [[graft.ops.DedupOps.simhash64]] (the Scala function stays as the
-  * UDF reference, spec-pinned): token hash = first 8 bytes of
+  * the Scala UDF it replaces (`OpsReference.simhashUdf` in the specs):
+  * token hash = first 8 bytes of
   * md5(utf8), big-endian signed; per-bit majority vote, ties → 0.
   * One loop with a thread-local digest instead of a Scala UDF paying
   * the codegen-boundary Seq[String] conversion per row; doGenCode keeps

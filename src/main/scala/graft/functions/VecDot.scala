@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native dot product of two numeric array columns, value-identical to
   * `aggregate(zip_with(a, b, (x, y) => x.cast(double) * y.cast(double)),
-  * 0.0, (acc, x) => acc + x)` (kept as [[graft.ops.AnnOps.dotHof]] and
-  * agreement-spec'd), including its null semantics: zip_with pads the
+  * 0.0, (acc, x) => acc + x)` (`OpsReference.dotHof` in the specs),
+  * including its null semantics: zip_with pads the
   * shorter side with null and `+` propagates it, so unequal lengths or
   * any null element yield NULL; the empty dot is 0.0. Summation is the
   * same left-to-right IEEE order, so results are bit-identical.

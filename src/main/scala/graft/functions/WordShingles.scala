@@ -9,8 +9,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native distinct word-n-gram shingles over a token-array column.
   *
-  * Byte-identical to the declarative shape it replaces (kept as
-  * [[graft.ops.DedupOps.shinglesHof]] and agreement-spec'd):
+  * Byte-identical to the declarative shape it replaces
+  * (`OpsReference.shinglesHof` in the specs):
   * for token arrays of size >= n, all windows of n consecutive tokens
   * joined by a single space (concat_ws semantics: null tokens are
   * skipped), deduplicated keeping FIRST occurrence order

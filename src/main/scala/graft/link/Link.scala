@@ -34,24 +34,11 @@ import org.apache.spark.sql.functions._
   * within-partition sort — no groupByKey re-shuffle. (A fully-SQL
   * window+min_by scorer was measured and REJECTED this round: the
   * support window's sort cost more than the typed object boundary —
-  * 2.4–2.5 s vs 1.9–2.0 s at 20k/local[32].) The round-5 eager
-  * collect-a-map shape is retained as [[resolveTyped]], the spec-pinned
-  * agreement reference.
+  * 2.4–2.5 s vs 1.9–2.0 s at 20k/local[32].) MentionLinkSpec pins it
+  * value-identical to the round-5 eager collect-a-map shape,
+  * LinkReference.resolveTyped.
   */
 object Link {
-
-  /** Per-alias document frequency: #distinct urls containing the alias.
-    * Output is dictionary-sized. distinct's (url, alias) exchange
-    * already spreads the head alias (20%+ of pages) across partitions,
-    * and the groupBy's map-side partial aggregation collapses each
-    * partition's rows to one per alias BEFORE the alias exchange — the
-    * distinct shuffle is structurally the salt, so the previous explicit
-    * two-phase salted count paid one extra exchange for nothing
-    * (round 6; SaltedJoin.saltedCount remains for aggregates whose
-    * upstream partitioning is not already key-spreading). */
-  def aliasDf(cands: DataFrame): DataFrame =
-    cands.select(col("url"), col("alias")).distinct()
-      .groupBy(col("alias")).agg(count(lit(1)).as("alias_df"))
 
   /** Collect a (alias, alias_df) table to the driver map `resolve`
     * broadcasts — dictionary-sized by construction. */
@@ -199,48 +186,6 @@ object Link {
           }
         }
         LinkedMention(url, s, l, best.alias, best.entity_id, bestScore)
-    }
-  }
-
-  /** The pre-round-6 typed shape (groupByKey(url) → one Scala pass per
-    * page) — agreement reference for [[resolve]], value-identical by
-    * MentionLinkSpec. */
-  private[graft] def resolveTyped(
-      cands: Dataset[CandidateRow],
-      nPages: Long,
-      precomputedDf: Option[Map[String, Long]] = None): Dataset[LinkedMention] = {
-    val spark = cands.sparkSession
-    import spark.implicits._
-    val dfMap: Map[String, Long] =
-      precomputedDf.getOrElse(collectAliasDf(aliasDf(cands.toDF())))
-    val dfB = spark.sparkContext.broadcast(dfMap)
-    val n = nPages.toDouble
-    cands.groupByKey(_.url).flatMapGroups { (url, it) =>
-      val rows = it.toArray
-      val m = dfB.value
-      // per-page entity support
-      val support = new scala.collection.mutable.HashMap[Long, Int]()
-      rows.foreach(c => support.update(c.entity_id,
-        support.getOrElse(c.entity_id, 0) + 1))
-      // per-mention argmax (score, then lowest entity_id)
-      rows.groupBy(c => (c.tok_start, c.tok_len)).iterator.map {
-        case ((s, l), cs) =>
-          var best: CandidateRow = null
-          var bestScore = Double.NegativeInfinity
-          cs.foreach { c =>
-            val df = m.getOrElse(c.alias, throw new IllegalStateException(
-              s"alias '${c.alias}' missing from the alias-df table — " +
-                "stale aliasdf snapshot? (dictionary changed under an " +
-                "unchanged snapshot id)"))
-            val sc = c.prior * math.log(1.0 + n / df) +
-              0.01 * support(c.entity_id)
-            if (best == null || sc > bestScore ||
-              (sc == bestScore && c.entity_id < best.entity_id)) {
-              best = c; bestScore = sc
-            }
-          }
-          LinkedMention(url, s, l, best.alias, best.entity_id, bestScore)
-      }
     }
   }
 }

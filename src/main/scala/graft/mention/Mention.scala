@@ -3,8 +3,7 @@ package graft.mention
 import java.util.Locale
 
 import graft.model.{AliasRow, CandidateRow, ExtractedPage}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 /** Stage 2: mention detection + candidate generation.
   *
@@ -22,10 +21,10 @@ import org.apache.spark.sql.functions._
   * position, so a candidate costs a hash probe per token instead of a
   * materialized n-gram string + broadcast-hash-join probe (round 6 —
   * the n-gram explode built T×maxLen surface strings per page and was
-  * ~60% of the cost of extraction at 2 cores, BENCH/BASELINE.md). The
-  * previous explode→broadcast-join shape is retained as
-  * [[detectJoin]], the spec-pinned agreement reference, same discipline
-  * as every scanner rewrite. ≙ reference span-lookup probe
+  * ~60% of the cost of extraction at 2 cores, BENCH/BASELINE.md).
+  * MentionLinkSpec fuzz-compares it with the previous
+  * explode→broadcast-join shape, MentionReference.detectJoin, same
+  * discipline as every scanner rewrite. ≙ reference span-lookup probe
   * (function_span_provider.py:35-82), where the spans dict is the
   * broadcast side.
   */
@@ -40,16 +39,16 @@ object Mention {
   val MaxDictRows: Int = 8 * 1000 * 1000
 
   /** Frozen tokenizer, scanner form: maximal runs of [a-z0-9] from the
-    * Locale.ROOT-lowercased text. Exactly ≡ [[tokenizeRef]] for EVERY
-    * input — the split class is a pure ASCII set, so a direct char test
-    * on the same lowercased string cannot disagree with the regex
-    * (lowercasing itself stays `String.toLowerCase`: char-by-char
+    * Locale.ROOT-lowercased text. Exactly ≡ the frozen regex form
+    * (MentionReference.tokenizeRef in the specs) for EVERY input — the
+    * split class is a pure ASCII set, so a direct char test on the same
+    * lowercased string cannot disagree with the regex (lowercasing
+    * itself stays `String.toLowerCase`: char-by-char
     * Character.toLowerCase would diverge on one-to-many mappings like
-    * İ → i+U+0307). The regex form is retained below as the spec
-    * reference and fuzz-compared — same discipline as the extraction
-    * scanners. Scanner because this runs once per PAGE over ~20 KB of
-    * text (ClusterPhaseBench: mention detection costs as much as
-    * extraction) and per alias row. */
+    * İ → i+U+0307). MentionLinkSpec fuzz-compares the two — same
+    * discipline as the extraction scanners. Scanner because this runs
+    * once per PAGE over ~20 KB of text (ClusterPhaseBench: mention
+    * detection costs as much as extraction) and per alias row. */
   def tokenize(text: String): Array[String] = {
     val lower = text.toLowerCase(Locale.ROOT)
     val n = lower.length
@@ -69,11 +68,6 @@ object Mention {
     }
     out.toArray
   }
-
-  /** The frozen-spec reference tokenizer (fuzz-pinned in
-    * MentionLinkSpec; [[tokenize]] must agree on every input). */
-  private[graft] def tokenizeRef(text: String): Array[String] =
-    text.toLowerCase(Locale.ROOT).split("[^a-z0-9]+").filter(_.nonEmpty)
 
   def aliasTokenCount(alias: String): Int = tokenize(alias).length
 
@@ -179,59 +173,5 @@ object Mention {
         }
         out
       }
-  }
-
-  /** The pre-round-6 explode→broadcast-join shape, retained as the
-    * agreement reference for [[detect]] (MentionLinkSpec fuzz-compares
-    * the two on adversarial dictionaries): every token n-gram surface is
-    * materialized as a string and probed against the broadcast
-    * dictionary relation. */
-  private[graft] def detectJoin(
-      extracted: Dataset[ExtractedPage],
-      dict: Dataset[AliasRow],
-      maxDictRows: Int = MaxDictRows): Dataset[CandidateRow] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-
-    // Longest alias in the dictionary bounds n-gram generation; the
-    // broadcast first-token set prunes start positions before any
-    // surface string is built (an n-gram can only match if its FIRST
-    // token starts some alias). Same shape as the reference's
-    // schema-version inference (clangd_index_yaml_parser.py:276-281).
-    val dictStats = dict
-      .map(a => (aliasTokenCount(a.alias), tokenize(a.alias).headOption.getOrElse("")))
-      .take(maxDictRows + 1)
-    if (dictStats.length > maxDictRows)
-      throw new IllegalStateException(
-        s"alias dictionary exceeds Mention.MaxDictRows = $maxDictRows rows " +
-          "(BROADCAST dictionary contract)")
-    if (dictStats.isEmpty) return spark.emptyDataset[CandidateRow]
-    val maxLen = dictStats.iterator.map(_._1).max
-    if (maxLen == 0) return spark.emptyDataset[CandidateRow]
-    val firstTokensB = spark.sparkContext.broadcast(dictStats.iterator.map(_._2).toSet)
-
-    val grams = extracted.select($"url", $"text").as[(String, String)]
-      .flatMap { case (url, text) =>
-        val toks = tokenize(text)
-        val ft = firstTokensB.value
-        Iterator.range(0, toks.length)
-          .filter(s => ft.contains(toks(s)))
-          .flatMap { s =>
-            // surfaces grow incrementally: surface(l) = surface(l-1) +
-            // " " + next token (identical strings to the slice+mkString
-            // shape, without re-joining the prefix per length)
-            val maxL = math.min(maxLen, toks.length - s)
-            val sb = new java.lang.StringBuilder(toks(s))
-            Iterator.range(1, maxL + 1).map { l =>
-              if (l > 1) sb.append(' ').append(toks(s + l - 1))
-              (url, s, l, sb.toString)
-            }
-          }
-      }.toDF("url", "tok_start", "tok_len", "surface")
-
-    grams
-      .join(broadcast(dict.toDF()), $"surface" === $"alias", "inner")
-      .select($"url", $"tok_start", $"tok_len", $"alias", $"entity_id", $"prior")
-      .as[CandidateRow]
   }
 }

@@ -17,7 +17,8 @@ object AnnOps {
 
   /** Cosine similarity between an embedding column and a literal query
     * vector, computed in double via the native vec_dot expression
-    * (bit-identical to the HOF fold it replaces — see dotHof). */
+    * (bit-identical to the HOF fold it replaces — OpsReference.dotHof in
+    * the specs). */
   def cosineToQuery(emb: Column, query: Array[Float]): Column = {
     val q = lit(query.map(_.toDouble))
     val dot = vec_dot(emb, q)
@@ -25,12 +26,6 @@ object AnnOps {
     val nQ = math.sqrt(query.map(x => x.toDouble * x.toDouble).sum)
     dot / (nEmb * lit(nQ))
   }
-
-  /** Built-ins-only reference for VecDot (interpreted HOF fold;
-    * spec-pinned bit-identical to the native expression). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** Exact brute-force top-k by cosine (deterministic tie-break on id).
     * TakeOrderedAndProject: per-partition heap + driver merge of k rows —
@@ -210,8 +205,8 @@ object AnnOps {
       df: DataFrame, idCol: String, embCol: String,
       tau: Double, seed: Long = 42L, nPlanes: Int = 6, dim: Int = 64): DataFrame = {
     // round 6: pairs per bucket from ONE exchange of the bucketed
-    // stream — the replaced self-join (retained below as
-    // [[cosinePairsJoin]], spec-pinned row-identical) computed every
+    // stream — the replaced self-join (OpsReference.cosinePairsJoin in
+    // the specs, pinned row-identical) computed every
     // SRP signature (nPlanes VecDots/row) twice and exchanged the
     // stream twice. A vector lives in exactly one bucket, so the pair
     // set needs no distinct in either shape; per-bucket fan-out is
@@ -226,23 +221,6 @@ object AnnOps {
         vec_dot(ea, eb) / (sqrt(vec_dot(ea, ea)) * sqrt(vec_dot(eb, eb))))
       .filter(col("cos") >= tau)
       .select(col("p.x.id").as("id_a"), col("p.y.id").as("id_b"),
-        round(col("cos"), 6).as("cos"))
-  }
-
-  /** The pre-round-6 bucket SELF-JOIN shape — agreement reference for
-    * [[cosinePairs]]. */
-  private[graft] def cosinePairsJoin(
-      df: DataFrame, idCol: String, embCol: String,
-      tau: Double, seed: Long = 42L, nPlanes: Int = 6, dim: Int = 64): DataFrame = {
-    val b = df.select(col(idCol).as("id"), col(embCol).as("emb"),
-      srpBucket(col(embCol), seed, nPlanes, dim).as("bucket"))
-    val dot = vec_dot(col("a.emb"), col("b.emb"))
-    def norm(c: Column) = sqrt(vec_dot(c, c))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .withColumn("cos", dot / (norm(col("a.emb")) * norm(col("b.emb"))))
-      .filter(col("cos") >= tau)
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
         round(col("cos"), 6).as("cos"))
   }
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.util.Det
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** Multimodal column plumbing: image/audio/video as opaque binary
   * columns with typed metadata.
@@ -621,29 +621,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Deterministic frame-sampling plan for a video payload: every
-    * `stride`-th frame offset of `nFrames` — pure plumbing (a real
-    * implementation would seek the container at these offsets). */
-  def frameSamplePlan(nFrames: Int, stride: Int): Seq[Int] =
-    0 until nFrames by math.max(1, stride)
-
-  /** Binary-file directory source (≙ source-tree scan S5,
-    * compilation_manager.py:44-54): one MediaRow per file, media_id =
-    * stable hash of the path, kind from the extension. */
-  def loadBinaryDir(spark: SparkSession, path: String): Dataset[MediaRow] = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    spark.read.format("binaryFile").load(path)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        when(lower(col("path")).rlike("\\.(png|jpe?g|gif|webp)$"), "image")
-          .when(lower(col("path")).rlike("\\.(wav|mp3|flac|ogg)$"), "audio")
-          .when(lower(col("path")).rlike("\\.(mp4|mkv|webm|avi)$"), "video")
-          .otherwise("unknown").as("kind"),
-        col("content").as("payload"))
-      .as[MediaRow]
   }
 
   // ---------------------------------------------------- header fixtures

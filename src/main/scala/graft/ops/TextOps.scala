@@ -73,27 +73,12 @@ object TextOps {
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "es" -> Seq("el", "los", "las", "una", "del"))
 
-  def markerCount(text: Column, words: Seq[String]): Column = {
-    val re = "\\b(" + words.mkString("|") + ")\\b"
-    size(regexp_extract_all(lower(text), lit(re), lit(1))).cast("long")
-  }
-
   /** Predicted language: argmax of marker counts, ties broken by the
     * Markers order, zero matches → "und". Native single-scan expression
-    * (graft.functions.LangId); the regex shape below is the spec-pinned
-    * agreement reference. */
+    * (graft.functions.LangId); the specs pin it equal to the regex shape
+    * it replaced, OpsReference.langIdSql. */
   def langId(text: Column): Column =
     graft.functions.LangId.lang_id(text)
-
-  /** Built-ins-only reference shape for LangId: 4 regex passes plus a
-    * CASE tree that re-evaluates each count (no CSE across branches). */
-  def langIdSql(text: Column): Column = {
-    val counts = Markers.map { case (l, ws) => l -> markerCount(text, ws) }
-    val best = greatest(counts.map(_._2): _*)
-    counts.foldRight(lit("und"): Column) { case ((l, c), els) =>
-      when(c > 0 && c === best, lit(l)).otherwise(els)
-    }
-  }
 
   /** Quality features: token count, lexical diversity, chars/token,
     * stop-punctuation density. All exact integer/ratio arithmetic. */

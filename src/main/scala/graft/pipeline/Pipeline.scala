@@ -34,7 +34,7 @@ object Pipeline {
   val EmitVersion = "emit-v3"
   /** v3 (both): the url-path hierarchy froze its messy-url policy —
     * query strings and fragments are dropped before prefix derivation
-    * (Hierarchy.QueryFragRe), so stores committed under v2 may hold
+    * (the Hierarchy Scaladoc), so stores committed under v2 may hold
     * SECTION nodes / roll-up parents that v3 never emits. */
   val EnrichVersion = "enrich-v3"
 

@@ -117,18 +117,7 @@ object StreamingIngest {
       ttlMs: Long = 60L * 60 * 1000): Dataset[ExtractedPage] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    import graft.ops.{DedupOps, TextOps}
-    val sigged = pages.toDF()
-      .withWatermark("warc_ts", lateness)
-      .withColumn("sig", concat_ws("|",
-        DedupOps.minhashSigFromShingles(
-          DedupOps.shingles(TextOps.tokens(col("text")), n), k)))
-      .select(col("sig"), col("warc_ts"),
-        struct(col("url"), col("site"), col("warc_ts"),
-          col("text"), col("lang"), col("links"), col("text_sha256"),
-          col("html_xxh64")).as("page"))
-      .as[SigPage]
-    sigged
+    sigPages(pages.withWatermark("warc_ts", lateness), n, k)
       .groupByKey(_.sig)
       .flatMapGroupsWithState[Long, ExtractedPage](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -166,10 +155,9 @@ object StreamingIngest {
     * EVENT-TIME eviction (round 6 — VERDICT r5 #5): the processor
     * mirrors [[nearDupGate]]'s policy exactly — state is evicted once
     * the watermark passes the key's last-seen max event time + ttl —
-    * via an explicit event-time timer per signature. The previous
-    * processing-time-TTL shape (retained below as
-    * [[nearDupGateTwsProcTime]]) kept EVERY signature's state live for
-    * a wall-clock hour regardless of event-time progress: replaying a
+    * via an explicit event-time timer per signature. The processing-time
+    * TTL shape it replaced kept EVERY signature's state live for a
+    * wall-clock hour regardless of event-time progress: replaying a
     * 10^12-doc backlog admits years of event time in minutes of wall
     * clock, so nothing ever evicted — the measured 106 vs 52 MB state
     * at 109k docs (BENCH/BASELINE.md) was a state blow-up in the
@@ -184,8 +172,8 @@ object StreamingIngest {
     * Operational caveats (measured, Spark 4.1):
     *  - event-time timers only fire as the watermark advances, so the
     *    query QUIESCES normally (processAllAvailable / AvailableNow
-    *    return) — the perpetual-timer-batch busy loop documented on
-    *    the processing-time shape does not apply here;
+    *    return) — unlike processing-time timers, which schedule a timer
+    *    batch after every batch, forever;
     *  - under many concurrent RocksDB snapshot uploads,
     *    spark.sql.streaming.checkpoint.fileChecksum.enabled=true (the
     *    default) deadlocked its own I/O pool in local[4] testing —
@@ -207,7 +195,7 @@ object StreamingIngest {
         OutputMode.Append())
   }
 
-  /** (sig, warc_ts, page) stream shared by both tws gate shapes. */
+  /** (sig, warc_ts, page) stream shared by both near-dup gates. */
   private def sigPages(
       pages: Dataset[ExtractedPage], n: Int, k: Int): Dataset[SigPage] = {
     val spark = pages.sparkSession
@@ -277,58 +265,6 @@ object StreamingIngest {
       // passed last-seen + ttl: forget the signature
       seen.clear()
       Iterator.empty
-    }
-  }
-
-  /** The pre-round-6 processing-time-TTL shape, retained as the
-    * measured reference (StreamGateBench's 106 vs 52 MB state row) and
-    * for ingests that genuinely want wall-clock eviction under
-    * arbitrary event-time skew. Operational caveat: processing-time
-    * timers make the engine schedule a micro-batch after every batch,
-    * forever — run it with a REAL trigger interval; the quiescence
-    * APIs (processAllAvailable, Trigger.AvailableNow) never return
-    * because another timer batch is always due. */
-  def nearDupGateTwsProcTime(
-      pages: Dataset[ExtractedPage],
-      n: Int = 3,
-      k: Int = 8,
-      ttl: java.time.Duration = java.time.Duration.ofHours(1)): Dataset[ExtractedPage] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    sigPages(pages, n, k)
-      .groupByKey(_.sig)
-      .transformWithState(new NearDupProcessorProcTime(ttl),
-        org.apache.spark.sql.streaming.TimeMode.ProcessingTime(),
-        OutputMode.Append())
-  }
-
-  /** StatefulProcessor for [[nearDupGateTwsProcTime]]: one TTL'd
-    * ValueState marker per signature; the engine evicts it. */
-  final class NearDupProcessorProcTime(ttl: java.time.Duration)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, SigPage, ExtractedPage] {
-    @transient private var seen: org.apache.spark.sql.streaming.ValueState[Long] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      seen = getHandle.getValueState[Long]("seen",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig(ttl))
-    }
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[SigPage],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ExtractedPage] = {
-      val rs = rows.toArray
-      val out =
-        if (seen.exists() || rs.isEmpty) Iterator.empty
-        else Iterator.single(rs
-          .minBy(sp => (sp.warc_ts.getTime, sp.page.html_xxh64, sp.page.url))
-          .page)
-      seen.update(1L) // refresh the TTL window on every sighting
-      out
     }
   }
 

@@ -32,8 +32,8 @@ final case class SynthConfig(
     headPageEvery: Int = 0,
     // > 0: every messyUrlEvery-th page gets a query string / fragment on
     // its url, with EMBEDDED SLASHES — the adversarial corpus for the
-    // frozen messy-url policy (Hierarchy.QueryFragRe: everything from
-    // the first '?' or '#' is NOT path). Default 0 keeps the fixture
+    // frozen messy-url policy (Hierarchy Scaladoc: everything from the
+    // first '?' or '#' is NOT path). Default 0 keeps the fixture
     // byte-identical to the golden-hashed corpus (urls appear in link
     // hrefs, so the extraction hashes depend on this knob).
     messyUrlEvery: Int = 0)

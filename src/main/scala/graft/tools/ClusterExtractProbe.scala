@@ -26,29 +26,18 @@ object ClusterExtractProbe {
     // shuffle-write bytes per timed block, summed from TaskEnd metrics
     // (the VERDICT "Done" evidence: key-width dedup must shuffle ~40 B
     // per row where the wide plan shuffled the full extracted record)
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) {
-            shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-            ()
-          }
-        }
-      })
+    val jobs = new JobCounter(spark.sparkContext)
 
     def t(name: String)(body: => Any): Unit = {
       body // warm
       val secs = (1 to 3).map { _ =>
         val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
       }.min
-      Thread.sleep(1000) // listener bus drain before reading the counter
-      shuffleBytes.set(0L)
+      jobs.sync()
+      val b0 = jobs.shuffleBytesWritten
       body
-      Thread.sleep(1000)
-      val mb = shuffleBytes.get() / 1e6
+      jobs.sync()
+      val mb = (jobs.shuffleBytesWritten - b0) / 1e6
       println(f"[cluster-extract-probe] $nWorkers x $coresPerWorker $name " +
         f"$secs%.2f s  shuffle-write $mb%.1f MB")
     }

@@ -4,7 +4,7 @@ import graft.model.PageRow
 import graft.pipeline.Pipeline
 import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Row, SparkSession}
 
 /** What the measuring tools share: the `local-cluster` session recipe,
@@ -110,15 +110,17 @@ object Harness {
   }
 }
 
-/** Counts the Spark jobs an action runs. Listener events arrive
-  * asynchronously, in order: `sync()` runs a one-task marker job and
-  * waits until the listener has seen it start, so every job submitted
-  * before the marker has been counted. The jobs of an action are the
-  * difference of the counts `sync()` returns around it; marker jobs are
-  * not counted. */
+/** Counts the Spark jobs an action runs and the shuffle bytes its tasks
+  * write. Listener events arrive asynchronously, in order: `sync()` runs
+  * a one-task marker job and waits until the listener has seen it start,
+  * so every job submitted and every task ended before the marker has
+  * been counted. The jobs of an action are the difference of the counts
+  * `sync()` returns around it; marker jobs are not counted (their one
+  * task writes no shuffle). */
 final class JobCounter(sc: SparkContext) extends SparkListener {
   private val Marker = "graft-job-counter-marker-"
   @volatile private var jobs = 0L
+  @volatile private var shuffleWritten = 0L
   private val markers = new java.util.concurrent.LinkedBlockingQueue[String]()
   private var nMarkers = 0
   sc.addSparkListener(this)
@@ -129,6 +131,14 @@ final class JobCounter(sc: SparkContext) extends SparkListener {
       case Some(m) => markers.put(m)
       case None => jobs += 1
     }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+    Option(e.taskMetrics).foreach(m =>
+      shuffleWritten += m.shuffleWriteMetrics.bytesWritten)
+
+  /** Shuffle bytes written by the tasks seen so far; read it after
+    * `sync()`. */
+  def shuffleBytesWritten: Long = shuffleWritten
 
   /** Jobs counted so far, once every earlier job has been seen. */
   def sync(): Long = {

@@ -17,11 +17,6 @@ import org.apache.spark.sql.streaming.Trigger
   * timers (round 6) — drains with AvailableNow like fmgws; the state
   * row of this bench is the bounded-live-state evidence (signatures
   * whose watermark passed last-seen + ttl are evicted mid-run).
-  * mode = twsproc: the retained processing-time-TTL shape.
-  * Processing-time timers never quiesce, so its drain is an interval
-  * trigger plus a listener that counts source rows until every landed
-  * row has been processed (the documented Spark 4.1 caveat; see
-  * StreamingIngest.nearDupGateTwsProcTime scaladoc).
   *
   * Drops overlap by 10%: each re-lands the tail of the previous drop,
   * so the gate has real suppression work (same text → same signature →
@@ -41,8 +36,7 @@ object StreamGateBench {
     val cpus = if (args.length > 2) args(2) else
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val mode = if (args.length > 3) args(3) else "fmgws"
-    require(mode == "fmgws" || mode == "tws" || mode == "twsproc",
-      s"unknown mode $mode")
+    require(mode == "fmgws" || mode == "tws", s"unknown mode $mode")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-stream-gate-bench")
@@ -57,7 +51,7 @@ object StreamGateBench {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    if (mode.startsWith("tws")) // changelog ckpt: no snapshot-zip storm
+    if (mode == "tws") // changelog ckpt: no snapshot-zip storm
       spark.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
@@ -94,51 +88,19 @@ object StreamGateBench {
       if (mode == "tws")
         StreamingIngest.nearDupGateTws(extracted,
           ttl = java.time.Duration.ofHours(1))
-      else if (mode == "twsproc") // retained processing-time-TTL shape
-        StreamingIngest.nearDupGateTwsProcTime(extracted,
-          ttl = java.time.Duration.ofHours(1))
       else StreamingIngest.nearDupGate(extracted)
 
-    // tws drain: processing-time timers never quiesce, so count source
-    // rows from progress events and stop once every landed row was read
-    val processed = new java.util.concurrent.atomic.AtomicLong
-    spark.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          processed.addAndGet(e.progress.sources.map(_.numInputRows).sum)
-          ()
-        }
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      })
-
     val t0 = System.nanoTime()
-    val writer = gated.writeStream
+    val q = gated.writeStream
       .foreachBatch { (batch: Dataset[graft.model.ExtractedPage], _: Long) =>
         batch.write.mode("append").parquet(outDir)
         ()
       }
       .option("checkpointLocation", ckptDir)
-    val q =
-      if (mode == "twsproc")
-        writer.trigger(Trigger.ProcessingTime("250 milliseconds")).start()
-      else
-        writer.trigger(Trigger.AvailableNow()).start() // event-time: quiesces
-    val wall =
-      if (mode == "twsproc") {
-        val deadline = t0 + 3600L * 1000 * 1000 * 1000
-        while (processed.get() < landed && System.nanoTime() < deadline)
-          Thread.sleep(100)
-        val w = (System.nanoTime() - t0) / 1e9
-        require(processed.get() >= landed,
-          s"tws drain timed out: processed ${processed.get()} of $landed")
-        q.stop()
-        w
-      } else {
-        q.awaitTermination()
-        (System.nanoTime() - t0) / 1e9
-      }
+      .trigger(Trigger.AvailableNow()) // event-time timeouts: quiesces
+      .start()
+    q.awaitTermination()
+    val wall = (System.nanoTime() - t0) / 1e9
 
     val admitted = spark.read.parquet(outDir).count()
     val progress = q.lastProgress

@@ -82,7 +82,7 @@ object NaiveKg {
     // …sections… → page), the frozen FOLDER-analog spec
     // (Hierarchy.scala scaladoc)
     def prefixes(url: String): Seq[String] = {
-      // frozen messy-url policy (Hierarchy.QueryFragRe): everything from
+      // frozen messy-url policy (Hierarchy Scaladoc): everything from
       // the first '?' or '#' is not path — re-derived here with the same
       // regex SHAPE as the DuckDB oracle, independent of PathPrefixes
       val path = url.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*://", "")

@@ -38,7 +38,7 @@ class EmitSpec extends SparkSpec {
     ).toDF("url")
     val rows = urls.select(
         Hierarchy.prefixesOf(col("url")).as("native"),
-        Hierarchy.prefixesOfSql(col("url")).as("ref"),
+        HierarchyReference.prefixesOfSql(col("url")).as("ref"),
         col("url"))
       .collect()
     rows.foreach { r =>

@@ -5,7 +5,8 @@ import scala.util.matching.Regex
 /** The ORIGINAL regex-cascade implementation of extractor-v1, retained
   * verbatim as the equivalence oracle for the fused-scanner rewrite in
   * HtmlText (same frozen policy, same VERSION). Any behavioral drift in
-  * the scanners fails HtmlTextEquivalenceSpec.
+  * the scanners fails HtmlTextEquivalenceSpec (text) or
+  * LinkExtractEquivalenceSpec (links).
   */
 object HtmlTextReference {
   private val comment: Regex = "(?s)<!--.*?-->".r
@@ -41,6 +42,19 @@ object HtmlTextReference {
         else "�"
       Regex.quoteReplacement(out)
     })
+  }
+
+  /** Regex reference for [[HtmlText.extractLinks]]: the scanner must
+    * agree value-for-value, order included. */
+  private val hrefRe: Regex = "(?i)<a\\b[^>]*\\bhref\\s*=\\s*(\"([^\"]*)\"|'([^']*)')".r
+  def extractLinksRef(html: Array[Byte]): Seq[String] = {
+    val s = HtmlText.decodeUtf8(html)
+    val seen = scala.collection.mutable.LinkedHashSet.empty[String]
+    hrefRe.findAllMatchIn(s).foreach { m =>
+      val v = if (m.group(2) != null) m.group(2) else m.group(3)
+      if (v != null && v.nonEmpty) seen += v
+    }
+    seen.toSeq
   }
 
   private def normalizeWs(s: String): String =

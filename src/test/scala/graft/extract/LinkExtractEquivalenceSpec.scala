@@ -14,7 +14,7 @@ class LinkExtractEquivalenceSpec extends AnyFunSuite with Matchers {
 
   private def both(html: String) = {
     val b = html.getBytes("UTF-8")
-    (HtmlText.extractLinksFromString(html), HtmlText.extractLinksRef(b))
+    (HtmlText.extractLinksFromString(html), HtmlTextReference.extractLinksRef(b))
   }
 
   test("fixed adversarial cases") {

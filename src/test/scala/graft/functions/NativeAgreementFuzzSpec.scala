@@ -1,8 +1,8 @@
 package graft.functions
 
 import graft.SparkSpec
-import graft.emit.Hierarchy
-import graft.ops.{AnnOps, DedupOps, TextOps}
+import graft.emit.{Hierarchy, HierarchyReference}
+import graft.ops.{DedupOps, OpsReference, TextOps}
 import graft.util.Det
 import org.apache.spark.sql.functions._
 
@@ -38,13 +38,13 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     val toks = TextOps.tokens(col("text"))
     val rows = texts.select(col("id"),
         DedupOps.shingles(toks, 2).as("sh_n"),
-        DedupOps.shinglesHof(toks, 2).as("sh_r"),
-        DedupOps.minhashSigFromShingles(DedupOps.shinglesHof(toks, 2), 8).as("mh_n"),
-        DedupOps.minhashSigHof(DedupOps.shinglesHof(toks, 2), 8).as("mh_r"),
+        OpsReference.shinglesHof(toks, 2).as("sh_r"),
+        DedupOps.minhashSigFromShingles(OpsReference.shinglesHof(toks, 2), 8).as("mh_n"),
+        OpsReference.minhashSigHof(OpsReference.shinglesHof(toks, 2), 8).as("mh_r"),
         TextOps.langId(col("text")).as("li_n"),
-        TextOps.langIdSql(col("text")).as("li_r"),
+        OpsReference.langIdSql(col("text")).as("li_r"),
         SimHash64.simhash64(toks).as("si_n"),
-        DedupOps.simhashUdf(toks).as("si_r"))
+        OpsReference.simhashUdf(toks).as("si_r"))
       .collect()
     rows.foreach { r =>
       val id = r.getLong(0)
@@ -69,7 +69,7 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     }.toDF("id", "a", "b")
     val rows = vecs.select(col("id"),
         VecDot.vec_dot(col("a"), col("b")).as("n"),
-        AnnOps.dotHof(col("a"), col("b")).as("r"))
+        OpsReference.dotHof(col("a"), col("b")).as("r"))
       .collect()
     rows.foreach { r =>
       val id = r.getLong(0)
@@ -109,7 +109,7 @@ class NativeAgreementFuzzSpec extends SparkSpec {
     }.toDF("id", "url")
     val rows = urls.select(col("id"),
         Hierarchy.prefixesOf(col("url")).as("n"),
-        Hierarchy.prefixesOfSql(col("url")).as("r"), col("url"))
+        HierarchyReference.prefixesOfSql(col("url")).as("r"), col("url"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[String](1) == r.getSeq[String](2),

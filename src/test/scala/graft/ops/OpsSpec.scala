@@ -92,20 +92,20 @@ class OpsSpec extends SparkSpec {
       df.collect().map(_.toSeq).map(_.toVector).sortBy(_.toString).toVector
     for (d <- Seq(docs, real)) {
       rows(DedupOps.jaccardPairs(d, "doc_id", "text", 3, 0.35)) shouldBe
-        rows(DedupOps.jaccardPairsJoin(d, "doc_id", "text", 3, 0.35))
+        rows(OpsReference.jaccardPairsJoin(d, "doc_id", "text", 3, 0.35))
       rows(DedupOps.jaccardPairs(d, "doc_id", "text", 3, 0.9, maxShingleDf = 2)) shouldBe
-        rows(DedupOps.jaccardPairsJoin(d, "doc_id", "text", 3, 0.9, maxShingleDf = 2))
+        rows(OpsReference.jaccardPairsJoin(d, "doc_id", "text", 3, 0.9, maxShingleDf = 2))
       rows(DedupOps.minhashCandidates(d, "doc_id", "text", 3, 4, 2)) shouldBe
-        rows(DedupOps.minhashCandidatesJoin(d, "doc_id", "text", 3, 4, 2))
+        rows(OpsReference.minhashCandidatesJoin(d, "doc_id", "text", 3, 4, 2))
       rows(DedupOps.simhashPairs(d, "doc_id", "text", 3)) shouldBe
-        rows(DedupOps.simhashPairsJoin(d, "doc_id", "text", 3))
+        rows(OpsReference.simhashPairsJoin(d, "doc_id", "text", 3))
     }
     // and the rewrite actually produces pairs on the fixture
     DedupOps.simhashPairs(docs, "doc_id", "text", 3).count() should be > 0L
     // cosinePairs: grouped-pair shape ≡ the bucket self-join reference
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     rows(AnnOps.cosinePairs(emb, "vec_id", "embedding", 0.2)) shouldBe
-      rows(AnnOps.cosinePairsJoin(emb, "vec_id", "embedding", 0.2))
+      rows(OpsReference.cosinePairsJoin(emb, "vec_id", "embedding", 0.2))
     AnnOps.cosinePairs(emb, "vec_id", "embedding", 0.2).count() should be > 0L
   }
 
@@ -156,8 +156,8 @@ class OpsSpec extends SparkSpec {
       (4L, Array(1.0f, 2.0f), Array(1.0f, 2.0f, 3.0f)) // length mismatch → null
     ).toDF("id", "a", "b")
     val got = rows.select($"id",
-        vec_dot($"a", $"b").as("native"), AnnOps.dotHof($"a", $"b").as("hof"),
-        vec_dot($"a", $"a").as("n_native"), AnnOps.dotHof($"a", $"a").as("n_hof"))
+        vec_dot($"a", $"b").as("native"), OpsReference.dotHof($"a", $"b").as("hof"),
+        vec_dot($"a", $"a").as("n_native"), OpsReference.dotHof($"a", $"a").as("n_hof"))
       .collect()
     got.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2) &&
@@ -169,7 +169,7 @@ class OpsSpec extends SparkSpec {
     // double-typed literal side (the query-vector shape)
     val q = Array(0.25, -0.5, 0.125)
     val lits = rows.filter($"id" < 3).select($"id",
-        vec_dot($"a", lit(q)).as("native"), AnnOps.dotHof($"a", lit(q)).as("hof"))
+        vec_dot($"a", lit(q)).as("native"), OpsReference.dotHof($"a", lit(q)).as("hof"))
       .collect()
     lits.foreach(r => assert(r.getDouble(1) == r.getDouble(2)))
   }
@@ -177,7 +177,7 @@ class OpsSpec extends SparkSpec {
   test("native SimHash64 equals the Scala UDF reference") {
     val both = docs.select($"doc_id",
         graft.functions.SimHash64.simhash64(TextOps.tokens($"text")).as("native"),
-        DedupOps.simhashUdf(TextOps.tokens($"text")).as("udf"))
+        OpsReference.simhashUdf(TextOps.tokens($"text")).as("udf"))
       .collect()
     both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"doc=${r.getLong(0)}"))
     // empty token set: both give the all-ties-zero signature
@@ -201,7 +201,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val both = docs.select($"doc_id", $"text").union(edge)
       .select($"doc_id", TextOps.langId($"text").as("native"),
-        TextOps.langIdSql($"text").as("ref"))
+        OpsReference.langIdSql($"text").as("ref"))
       .collect()
     both.foreach { r =>
       assert(r.getString(1) == r.getString(2), s"doc=${r.getLong(0)}")
@@ -220,7 +220,7 @@ class OpsSpec extends SparkSpec {
       val both = docs.select($"doc_id", $"text").union(edge)
         .select($"doc_id",
           DedupOps.shingles(TextOps.tokens($"text"), n).as("native"),
-          DedupOps.shinglesHof(TextOps.tokens($"text"), n).as("hof"))
+          OpsReference.shinglesHof(TextOps.tokens($"text"), n).as("hof"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -244,7 +244,7 @@ class OpsSpec extends SparkSpec {
     for (k <- Seq(1, 8, 32)) {
       val both = withSh.select($"doc_id",
           DedupOps.minhashSigFromShingles($"sh", k).as("native"),
-          DedupOps.minhashSigHof($"sh", k).as("hof"))
+          OpsReference.minhashSigHof($"sh", k).as("hof"))
         .collect()
       both.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -279,7 +279,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash: identical texts distance 0; near-dups within radius") {
-    DedupOps.simhash64(Seq("a", "b", "c")) shouldBe DedupOps.simhash64(Seq("a", "b", "c"))
+    OpsReference.simhash64(Seq("a", "b", "c")) shouldBe OpsReference.simhash64(Seq("a", "b", "c"))
     val pairs = DedupOps.simhashPairs(docs, "doc_id", "text", 3)
       .collect().map(x => (x.getAs[Long]("id_a"), x.getAs[Long]("id_b"),
         x.getAs[Number]("hamming").longValue()))

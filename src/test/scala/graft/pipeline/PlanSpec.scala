@@ -1,15 +1,18 @@
 package graft.pipeline
 
 import graft.SparkSpec
-import graft.mention.Mention
+import graft.mention.{Mention, MentionReference}
 import graft.ops.{AnnOps, TextOps}
 import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, NullsFirst}
-import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, MaxBy, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike, Partitioning, RangePartitioning}
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions — the ".explain and iterate" review frozen
@@ -23,14 +26,18 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   /** Every node of a physical plan, descending into AQE's current plan,
-    * its query stages and reused exchanges — but not into a cached
-    * relation's own plan, which the scan reads instead of running. */
+    * its query stages, reused exchanges and subquery plans — but not
+    * into a cached relation's own plan, which the scan reads instead of
+    * running. */
   private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
     case a: AdaptiveSparkPlanExec => a +: planNodes(a.executedPlan)
     case q: QueryStageExec => q +: planNodes(q.plan)
     case r: ReusedExchangeExec => r +: planNodes(r.child)
-    case o => o +: o.children.flatMap(planNodes)
+    case o => o +: (o.children ++ o.subqueries).flatMap(planNodes)
   }
+
+  private def nodesOf(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
+    planNodes(df.queryExecution.executedPlan)
 
   /** The caches an executed plan scans (their builders, compared by
     * identity). */
@@ -59,13 +66,13 @@ class PlanSpec extends SparkSpec {
     // round 6: the dictionary is a broadcast TRIE probed inside the
     // flatMap — the candidate stream is emitted map-side with no join
     // operator and no exchange at all (the previous explode→broadcast-
-    // join shape is retained as detectJoin, asserted below)
-    val p = plan(Mention.detect(ex, Synth.aliases(spark, cfg)).toDF())
-    p should not include "Exchange"
-    p should not include "Join"
-    val pj = plan(Mention.detectJoin(ex, Synth.aliases(spark, cfg)).toDF())
-    pj should include("BroadcastHashJoin")
-    pj should not include "SortMergeJoin"
+    // join shape is MentionReference.detectJoin, asserted below)
+    val p = nodesOf(Mention.detect(ex, Synth.aliases(spark, cfg)).toDF())
+    p.collect { case e @ (_: Exchange | _: ReusedExchangeExec) => e } shouldBe empty
+    p.filter(n => n.isInstanceOf[BaseJoinExec] || n.nodeName.contains("Join")) shouldBe empty
+    val pj = nodesOf(MentionReference.detectJoin(ex, Synth.aliases(spark, cfg)).toDF())
+    pj.collect { case j: BroadcastHashJoinExec => j } should not be empty
+    pj.collect { case j: SortMergeJoinExec => j } shouldBe empty
   }
 
   test("filter + projection push down to the parquet scan") {
@@ -306,14 +313,23 @@ class PlanSpec extends SparkSpec {
     // key-partitioned exchange — records never cross a KEY shuffle
     // (the old plan shuffled the full ~12 KB rows by url — the
     // measured cluster scaling tail)
-    val p = plan(graft.extract.Extract.run(Synth.pages(spark, cfg)).toDF())
-    p should not include "Exchange hashpartitioning"
-    p should not include "Exchange rangepartitioning"
-    p should include("BroadcastHashJoin")
+    val p = nodesOf(graft.extract.Extract.run(Synth.pages(spark, cfg)).toDF())
+    p.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .filter {
+        case _: HashPartitioningLike | _: RangePartitioning => true
+        case _ => false
+      } shouldBe empty
+    p.collect { case j: BroadcastHashJoinExec => j } should not be empty
     // the wide-shuffle fallback keeps its map-side combine: partial
     // max_by before the exchange, final after
-    val pw = plan(graft.extract.Extract.runWideShuffle(Synth.pages(spark, cfg)).toDF())
-    pw.split("Exchange").head should include("max_by")
+    def maxByModes(nodes: Seq[SparkPlan]): Set[AggregateMode] =
+      nodes.collect { case a: BaseAggregateExec => a.aggregateExpressions }
+        .flatten.filter(_.aggregateFunction.isInstanceOf[MaxBy]).map(_.mode).toSet
+    val pw = nodesOf(graft.extract.Extract.runWideShuffle(Synth.pages(spark, cfg)).toDF())
+    val first = pw.indexWhere(_.isInstanceOf[ShuffleExchangeExec])
+    first should be >= 0
+    maxByModes(pw.take(first)) should contain(Final)
+    maxByModes(planNodes(pw(first))) should contain(Partial)
   }
 
   test("extracted cache partitions track parallelism, not input file count") {

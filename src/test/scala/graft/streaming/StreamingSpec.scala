@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -255,19 +255,12 @@ class StreamingSpec extends SparkSpec {
       val out = StreamingIngest.nearDupGateTws(mem.toDS(), n = 3, k = 8,
         ttl = java.time.Duration.ofHours(2))
       val ckpt = Files.createTempDirectory("graft-tws-ckpt").toString
-      // interval trigger + deadline-poll (the harness shape the
-      // processing-time-TTL gate required; the event-time gate
-      // quiesces normally, and the poll is simply robust either way)
+      // event-time timers quiesce, so processAllAvailable drives each
+      // step, as in the flatMapGroupsWithState gate test
       val q = out.writeStream.format("memory").queryName("neardup_tws")
         .outputMode(OutputMode.Append())
         .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime("200 milliseconds"))
         .start()
-      def awaitRows(want: Long): Unit = {
-        val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
-        while (spark.table("neardup_tws").count() < want &&
-          System.nanoTime() < deadline) Thread.sleep(200)
-      }
       val textA = "the quick brown fox jumps over the lazy dog again and again"
       val textB = "a completely different document about spark catalyst plans"
       def page(url: String, ts: Long, text: String, xxh: Long = 0L) =
@@ -276,12 +269,12 @@ class StreamingSpec extends SparkSpec {
       mem.addData(page("u2", 60 * m, textA, xxh = 9L),
         page("u1", 60 * m, textA, xxh = 3L),
         page("u3", 61 * m, textB))
-      awaitRows(2)
+      q.processAllAvailable()
       // identical admission to the event-time gate: u1 by tie-break + u3
       spark.table("neardup_tws").collect().map(_.getString(0)).toSet shouldBe
         Set("u1", "u3")
       mem.addData(page("u4", 65 * m, textA)) // within TTL → suppressed
-      Thread.sleep(3000) // several trigger cycles for the would-be dup
+      q.processAllAvailable()
       spark.table("neardup_tws").count() shouldBe 2L
       // EVENT-TIME eviction (round 6): textA's timer expires at
       // last-seen-max (65m) + ttl (120m) = 185m. Advance the watermark
@@ -292,19 +285,19 @@ class StreamingSpec extends SparkSpec {
       val textC = "yet another unrelated page about parquet row groups"
       val textD = "and one more on shuffle partitions and exchange reuse"
       mem.addData(page("u5", 300 * m, textC)) // admits; wm → 270m after
-      awaitRows(3)
+      q.processAllAvailable()
       mem.addData(page("u6", 310 * m, textD)) // admits; textA timer fires
-      awaitRows(4)
+      q.processAllAvailable()
       mem.addData(page("u7", 320 * m, textA)) // state cleared → admitted
-      awaitRows(5)
+      q.processAllAvailable()
       spark.table("neardup_tws").collect().map(_.getString(0)).toSet shouldBe
         Set("u1", "u3", "u5", "u6", "u7")
       // a first-seen signature below the watermark (290m after u7) is
       // dropped as late, as the event-time gate drops it; u9 rides in the
-      // same batch, so once u9 lands u8 has been decided
+      // same batch, so the batch is observed
       mem.addData(page("u8", 100 * m, "an unseen page about late event-time rows"),
         page("u9", 330 * m, "a last fresh page on broadcast hash joins"))
-      awaitRows(6)
+      q.processAllAvailable()
       spark.table("neardup_tws").collect().map(_.getString(0)).toSet shouldBe
         Set("u1", "u3", "u5", "u6", "u7", "u9")
       q.stop()
