@@ -249,7 +249,7 @@ object Extract {
     import spark.implicits._
     val ex = pages.map(p => extractOne(p, extractor))
     ex.groupBy($"url")
-      .agg(max_by(struct(ex.columns.map(col): _*),
+      .agg(max_by(struct(ex.columns.toSeq.map(col): _*),
         struct($"warc_ts", $"html_xxh64")).as("r"))
       .select($"r.*")
       .as[ExtractedPage]

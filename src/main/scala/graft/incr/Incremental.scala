@@ -547,7 +547,7 @@ object Incremental {
         .collect().map(_.getLong(0)) // bounded by nCells
       val newCells = freshRows.select(col("cell").cast("long")).distinct()
         .collect().map(_.getLong(0))
-      val affected = (oldCells ++ newCells).distinct.sorted
+      val affected = (oldCells ++ newCells).distinct.sorted.toSeq
       if (affected.nonEmpty) {
         val keep = oldIdx.filter(col("cell").isin(affected: _*))
           .join(tid, Seq("id"), "left_anti")

@@ -111,8 +111,7 @@ object Link {
               val as = cur.iterator()
               while (as.hasNext) {
                 val a = as.next()
-                val prev = counts.get(a)
-                counts.put(a, (if (prev == null) 0L else prev.longValue()) + 1L)
+                counts.put(a, counts.getOrDefault(a, 0L) + 1L)
               }
               cur.clear()
             }

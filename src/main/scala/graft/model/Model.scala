@@ -37,10 +37,6 @@ final case class ExtractedPage(
   * Ambiguous aliases occur as multiple rows (linking fixture). */
 final case class AliasRow(alias: String, entity_id: Long, prior: Double)
 
-/** A detected mention: token n-gram [tok_start, tok_start+tok_len) of
-  * `url`'s text matched alias `alias`. Overlaps allowed by spec. */
-final case class MentionRow(url: String, tok_start: Int, tok_len: Int, alias: String)
-
 /** A mention joined with one dictionary candidate. */
 final case class CandidateRow(
     url: String, tok_start: Int, tok_len: Int, alias: String,

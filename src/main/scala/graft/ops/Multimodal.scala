@@ -355,7 +355,7 @@ object Multimodal {
       * (stands in for a real vision/audio model; deterministic so the
       * pipeline around it is testable). */
     def extractFeature(payload: Array[Byte]): Array[Float] = {
-      val base = Det.h(payload.take(32).map(_.toLong): _*)
+      val base = Det.h(payload.take(32).toSeq.map(_.toLong): _*)
       Array.tabulate(8)(i => (Det.unit(Det.h(base, i.toLong)) * 2 - 1).toFloat)
     }
   }
