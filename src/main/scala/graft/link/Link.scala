@@ -47,15 +47,16 @@ object Link {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** @param precomputedDf optional global alias→df map to use instead of
-    *        deriving df from `cands` — the staged build passes the
-    *        aliasdf-stage sum and the incremental updater the maintained
-    *        global df, so dirty-bucket relinks score against corpus-wide
-    *        document frequencies, not dirty-scope ones (incremental ≡
-    *        full-rebuild contract). Must cover every alias present in
-    *        `cands`; a miss fails the job loudly (it means a stale
-    *        aliasdf snapshot, e.g. the dictionary changed under an
-    *        unchanged snapshot id). Without it, df joins in lazily from
-    *        `cands` itself (coverage holds by construction). */
+    *        deriving df from `cands`. Its only caller is the incremental
+    *        updater, which passes the global df it maintains in the
+    *        aliasdf stage, so dirty-bucket relinks score against
+    *        corpus-wide document frequencies, not dirty-scope ones
+    *        (incremental ≡ full-rebuild contract). Must cover every alias
+    *        present in `cands`; a miss fails the job loudly (it means a
+    *        stale aliasdf snapshot, e.g. the dictionary changed under an
+    *        unchanged snapshot id). Without it, as in `Pipeline.run` and
+    *        `Pipeline.build`, df joins in lazily from `cands` itself
+    *        (coverage holds by construction). */
   def resolve(
       cands: Dataset[CandidateRow],
       nPages: Long,

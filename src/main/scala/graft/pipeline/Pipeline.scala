@@ -2,12 +2,12 @@ package graft.pipeline
 
 import graft.canon.ConnectedComponents
 import graft.emit.Emit
-import graft.extract.{Extract, HtmlText}
+import graft.extract.Extract
 import graft.link.Link
 import graft.mention.Mention
 import graft.meta.Snapshot
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -19,9 +19,12 @@ import scala.collection.immutable.ListMap
   *   pages ─dedup+extract─► extracted ─detect─► candidates ─link─►
   *   linked ─⋈ canon(CC over sameas)─► triples / nodes / adjacency
   *
-  * `run` is the in-memory dataflow (tests, bench); `build` adds the
-  * per-stage snapshot/commit/resume protocol with bucketed Parquet
-  * (explicit repartitioning by url-hash range, north_rule) + lineage.
+  * The chain is written once, in [[chain]]; it takes the way each stage
+  * is materialised, and has two drivers: `run` caches the stages that
+  * are read again (tests, bench, queries), and `build` commits every
+  * stage through the per-stage snapshot/commit/resume protocol with
+  * bucketed Parquet (explicit repartitioning by url-hash range,
+  * north_rule) + lineage, then adds its build-only side stages.
   */
 object Pipeline {
 
@@ -45,16 +48,17 @@ object Pipeline {
   val AnnDim = 384
 
   /** Every committed stage of `build` with its version string, in build
-    * order — the one list both `build` (its manifests) and the
-    * incremental updater (its crash / version guard and re-stamp) read.
-    * ann_ivf's version is derived from its codebook parameters inside
-    * AnnOps.buildIvfIndex; it is listed so the updater guards it too. */
+    * order (the chain, then the side stages) — the one list both `build`
+    * (its manifests) and the incremental updater (its crash / version
+    * guard and re-stamp) read. ann_ivf's version is derived from its
+    * codebook parameters inside AnnOps.buildIvfIndex; it is listed so the
+    * updater guards it too. */
   val StageVersions: ListMap[String, String] = ListMap(
-    "extracted" -> Extract.StageVersion, "urlhash" -> "diff-v1",
-    "candidates" -> "mention-v1", "aliasdf" -> "link-v1",
+    "extracted" -> Extract.StageVersion, "candidates" -> "mention-v1",
     "linked" -> "link-v1", "canon" -> "canon-v1",
     "triples" -> EmitVersion, "nodes" -> EmitVersion,
-    "adjacency" -> EmitVersion, "enriched" -> EnrichVersion,
+    "adjacency" -> EmitVersion, "urlhash" -> "diff-v1",
+    "aliasdf" -> "link-v1", "enriched" -> EnrichVersion,
     "ann_ivf" -> graft.ops.AnnOps.ivfVersion(AnnSeed, AnnCells, AnnDim))
 
   final case class Graph(
@@ -66,25 +70,74 @@ object Pipeline {
       adjacency: Dataset[AdjacencyRow],
       pageEntitySets: DataFrame,
       candidates: Dataset[CandidateRow]) {
-    /** (url, canon_id) exploded view of [[pageEntitySets]]. */
-    def pageEntities: DataFrame = Emit.explodePageEntitySets(pageEntitySets)
+    /** The caches `run` installs, in dependency order: each reads only
+      * the caches before it. */
+    def caches: Seq[(String, Dataset[_])] = Seq(
+      "extracted" -> extracted, "candidates" -> candidates,
+      "linked" -> linked, "canon" -> canon,
+      "pageEntitySets" -> pageEntitySets, "triples" -> triples)
     /** Release the caches `run` installed, dependents first: releasing
       * a cache re-plans every not-yet-filled cache built on top of it
       * (Spark's CacheManager), so upstream-first order would re-plan
       * `pageEntitySets` and `triples` once per upstream release. */
-    def unpersist(): Unit = {
-      triples.unpersist()
-      pageEntitySets.unpersist()
-      canon.unpersist()
-      linked.unpersist()
-      candidates.unpersist()
-      extracted.unpersist()
-    }
+    def unpersist(): Unit = caches.reverseIterator.foreach(_._2.unpersist())
   }
 
-  /** In-memory dataflow. Every frame read by more than one consumer is
-    * persisted (MEMORY_AND_DISK, filled lazily by the first action that
-    * reads it); call `Graph.unpersist()` when done:
+  /** How a driver materialises one stage of [[chain]] from its `body`.
+    * `reread` marks a stage that later stages or several outputs read;
+    * `bucketKey` is the column whose hash is the committed table's
+    * `bucket` column, and `parts` the partition columns ahead of it. */
+  private trait Materialise {
+    def apply[T: Encoder](name: String, reread: Boolean,
+        bucketKey: Option[String] = None, parts: Seq[String] = Nil)(
+        body: => Dataset[T]): Dataset[T]
+  }
+
+  /** The stage chain, the one place it is written. Each stage body runs
+    * only if `stage` asks for it (a resumed `build` stage reads its
+    * committed table instead). The page-entity sets are cached by both
+    * drivers and committed by neither: they feed the mentions and
+    * relates_to triple branches and the orphan-free node table, and are
+    * never computed when both of those resume.
+    *
+    * @param stamp the snapshot id stamped on the PROJECT node row. */
+  private def chain(
+      pages: Dataset[PageRow],
+      aliases: Dataset[AliasRow],
+      sameas: Dataset[SameAsEdge],
+      nPages: Long,
+      keepOrphans: Boolean,
+      stamp: Option[String])(stage: Materialise): Graph = {
+    val spark = pages.sparkSession
+    import spark.implicits._
+    val extracted = stage("extracted", reread = true, Some("url"))(Extract.run(pages))
+    val candidates = stage("candidates", reread = true, Some("url"))(
+      Mention.detect(extracted, aliases))
+    val linked = stage("linked", reread = true, Some("url"))(
+      Link.resolve(candidates, nPages))
+    val canon = stage("canon", reread = true)(canonOf(aliases, sameas))
+    val pe = Emit.pageEntitySets(linked, canon).persist(StorageLevel.MEMORY_AND_DISK)
+    // triples live as one sub-table per predicate, bucketed by subj hash:
+    // mentions/links_to are url-local (their partition = the url's
+    // bucket), so incremental updates overwrite exactly the dirty
+    // (pred, bucket) leaves; queries touching one predicate get partition
+    // pruning for free
+    val triples = stage("triples", reread = true, Some("subj"), Seq("pred"))(
+      Emit.triples(extracted, linked, canon, Some(pe)))
+    // partitioned by label so the incremental updater can refresh the
+    // one-row PROJECT leaf (snapshot stamp) without rewriting the rest
+    val nodes = stage("nodes", reread = false, parts = Seq("label"))(
+      if (keepOrphans) Emit.nodes(extracted, canon, stamp)
+      else Emit.connectedNodes(extracted, pe, stamp))
+    val adjacency = stage("adjacency", reread = false, Some("src"), Seq("pred"))(
+      Emit.adjacency(triples))
+    Graph(extracted, linked, canon, triples, nodes, adjacency, pe, candidates)
+  }
+
+  /** In-memory driver of [[chain]]. Every stage read by more than one
+    * consumer is persisted (MEMORY_AND_DISK, filled lazily by the first
+    * action that reads it); `nodes` and `adjacency` stay lazy. Call
+    * `Graph.unpersist()` when done:
     *  - `extracted`: triples, nodes and enrichment all re-read it, and
     *    without a cache each read re-extracts every page (extraction
     *    dominates cost at any scale);
@@ -111,8 +164,6 @@ object Pipeline {
       nPages: Long,
       keepOrphans: Boolean = false): Graph = {
     val spark = pages.sparkSession
-    import spark.implicits._
-
     // Coalesce to the session's shuffle parallelism before caching: the
     // key-width dedup keeps extraction at SCAN granularity (no shuffle),
     // so without this the cache inherits one partition per input split —
@@ -126,26 +177,17 @@ object Pipeline {
     // measured as the shuffle-partition sweet spot) — a bare 1×-cores
     // coalesce left single-wave extraction whose slowest task gated the
     // whole stage; never below the session's shuffle parallelism.
+    // (`build` needs none: its bucket repartition sets the layout.)
     val cacheParts = math.max(spark.sparkContext.defaultParallelism * 3,
       spark.sessionState.conf.numShufflePartitions)
-    val extracted = Extract.run(pages).coalesce(cacheParts)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // both resolve() reads of candidates happen inside the first action
-    // that touches `linked` (round 6 removed the eager driver collect
-    // that used to run here)
-    val cands = Mention.detect(extracted, aliases)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val linked = Link.resolve(cands, nPages).persist(StorageLevel.MEMORY_AND_DISK)
-    val canon = canonOf(aliases, sameas).persist(StorageLevel.MEMORY_AND_DISK)
-    val pe = Emit.pageEntitySets(linked, canon)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val triples = Emit.triples(extracted, linked, canon, Some(pe))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes =
-      if (keepOrphans) Emit.nodes(extracted, canon)
-      else Emit.connectedNodes(extracted, pe)
-    Graph(extracted, linked, canon, triples, nodes, Emit.adjacency(triples),
-      pe, cands)
+    chain(pages, aliases, sameas, nPages, keepOrphans, stamp = None)(new Materialise {
+      def apply[T: Encoder](name: String, reread: Boolean,
+          bucketKey: Option[String], parts: Seq[String])(
+          body: => Dataset[T]): Dataset[T] =
+        if (!reread) body
+        else (if (name == "extracted") body.coalesce(cacheParts) else body)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+    })
   }
 
   /** Number of url-hash buckets for partitioned table layout. At cluster
@@ -180,8 +222,12 @@ object Pipeline {
     aliasdf.groupBy(col("alias"))
       .agg(sum(col("df_b")).cast("long").as("alias_df"))
 
-  /** Staged build with checkpoints; every stage resumes from its last
-    * committed snapshot (kill-and-resume safe — SURVEY.md §7.6). */
+  /** Committed driver of [[chain]]: a staged build with checkpoints,
+    * where every stage resumes from its last committed snapshot
+    * (kill-and-resume safe — SURVEY.md §7.6). A stage with a bucket key
+    * gets its `bucket` column, is repartitioned by its partition columns
+    * and committed; later stages read the committed table without
+    * `bucket`. After the chain come the side stages only the store has. */
   def build(
       spark: SparkSession,
       pages: Dataset[PageRow],
@@ -192,17 +238,26 @@ object Pipeline {
       snapshotId: String,
       nBuckets: Int = 32,
       keepOrphans: Boolean = false): Unit = {
-    import spark.implicits._
-    def stage(name: String, partitionCols: Seq[String] = Nil)(
+    def commit(name: String, partitionCols: Seq[String])(
         body: => DataFrame): DataFrame =
       Snapshot.stage(spark, outDir, name, snapshotId, StageVersions(name),
         partitionCols)(body)
+    def bucketed(df: DataFrame, key: String): DataFrame =
+      df.withColumn("bucket", bucketOf(col(key), nBuckets))
 
-    val extracted = stage("extracted", Seq("bucket")) {
-      Extract.run(pages).toDF()
-        .withColumn("bucket", bucketOf(col("url"), nBuckets))
-        .repartition(col("bucket"))
-    }
+    val g = chain(pages, aliases, sameas, nPages, keepOrphans, Some(snapshotId))(
+      new Materialise {
+        def apply[T: Encoder](name: String, reread: Boolean,
+            bucketKey: Option[String], parts: Seq[String])(
+            body: => Dataset[T]): Dataset[T] = bucketKey match {
+          case Some(k) =>
+            val cols = parts :+ "bucket"
+            commit(name, cols)(bucketed(body.toDF(), k).repartition(cols.map(col): _*))
+              .drop("bucket").as[T]
+          case None => commit(name, parts)(body.toDF()).as[T]
+        }
+      })
+    g.pageEntitySets.unpersist() // the one cache the chain left
 
     // per-url winning html fingerprint — lets the NEXT update diff
     // against stored state instead of re-reading the old corpus
@@ -212,74 +267,17 @@ object Pipeline {
     // extracted.html_xxh64 IS the winning hash — value-identical to
     // Incremental.urlHashes(pages) without a second full corpus scan
     // (the scan+hash was ~12% of the 20k build by lineage wall_ms).
-    stage("urlhash", Seq("bucket")) {
-      extracted.select(col("url"), col("html_xxh64").as("h"), col("bucket"))
+    commit("urlhash", Seq("bucket")) {
+      bucketed(g.extracted.select(col("url"), col("html_xxh64").as("h")), "url")
     }
 
-    // mention candidates materialized once (≙ the reference's parse
-    // caches): url-local and bucket-keyed; reused by the aliasdf and
-    // linked stages (detection previously ran twice) and by the
-    // incremental updater, whose relink-only buckets read their stored
-    // candidates instead of re-detecting
-    val candidates = stage("candidates", Seq("bucket")) {
-      val ex = extracted.drop("bucket").as[ExtractedPage]
-      Mention.detect(ex, aliases).toDF()
-        .withColumn("bucket", bucketOf(col("url"), nBuckets))
-        .repartition(col("bucket"))
-    }
-
-    // per-bucket alias document frequency: urls are bucket-disjoint, so
-    // the global df is the exact per-bucket sum — the incremental updater
-    // maintains this table per dirty bucket and detects which aliases'
-    // global df changed (those buckets must relink)
-    val aliasdf = stage("aliasdf", Seq("bucket")) {
-      bucketAliasDf(candidates).repartition(col("bucket"))
-    }
-
-    val linked = stage("linked", Seq("bucket")) {
-      val cands = candidates.drop("bucket").as[CandidateRow]
-      Link.resolve(cands, nPages,
-        Some(Link.collectAliasDf(globalAliasDf(aliasdf)))).toDF()
-        .withColumn("bucket", bucketOf(col("url"), nBuckets))
-        .repartition(col("bucket"))
-    }
-
-    val canon = stage("canon")(canonOf(aliases, sameas).toDF())
-
-    // triples live as one sub-table per predicate, bucketed by subj hash:
-    // mentions/links_to are url-local (their partition = the url's
-    // bucket), so incremental updates overwrite exactly the dirty
-    // (pred, bucket) leaves; queries touching one predicate get partition
-    // pruning for free
-    // shared by the mentions and relates_to branches inside the triples
-    // stage write and by the orphan-free nodes stage (run() persists the
-    // same frame for the same reason); never materialized at all when
-    // both stages resume from their manifests
-    val peShared = Emit.pageEntitySets(
-        linked.drop("bucket").as[LinkedMention], canon.as[CanonRow])
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val triples = stage("triples", Seq("pred", "bucket")) {
-      val ex = extracted.drop("bucket").as[ExtractedPage]
-      val lk = linked.drop("bucket").as[LinkedMention]
-      Emit.triples(ex, lk, canon.as[CanonRow], Some(peShared)).toDF()
-        .withColumn("bucket", bucketOf(col("subj"), nBuckets))
-        .repartition(col("pred"), col("bucket"))
-    }
-
-    // partitioned by label so the incremental updater can refresh the
-    // one-row PROJECT leaf (snapshot stamp) without rewriting the rest
-    stage("nodes", Seq("label")) {
-      val ex = extracted.drop("bucket").as[ExtractedPage]
-      if (keepOrphans) Emit.nodes(ex, canon.as[CanonRow], Some(snapshotId)).toDF()
-      else Emit.connectedNodes(ex, peShared, Some(snapshotId)).toDF()
-    }
-    peShared.unpersist()
-
-    stage("adjacency", Seq("pred", "bucket")) {
-      val td = triples.select(col("subj"), col("pred"), col("obj")).as[TripleRow]
-      Emit.adjacency(td).toDF()
-        .withColumn("bucket", bucketOf(col("src"), nBuckets))
-        .repartition(col("pred"), col("bucket"))
+    // per-bucket alias document frequency, for the incremental updater
+    // only: it maintains this table per dirty bucket and detects which
+    // aliases' global df changed (those buckets must relink). urls are
+    // bucket-disjoint, so its per-bucket sum is the df the linked stage
+    // derived from the same candidates.
+    commit("aliasdf", Seq("bucket")) {
+      bucketAliasDf(bucketed(g.candidates.toDF(), "url")).repartition(col("bucket"))
     }
 
     // enriched node properties (summary + embedding + neighbor context)
@@ -287,11 +285,10 @@ object Pipeline {
     // onto FUNCTION/FILE/FOLDER/PROJECT nodes. PAGE rows are bucketed by
     // url hash (incrementally maintainable); SITE/PROJECT roll-up rows
     // live in bucket -1.
-    stage("enriched", Seq("bucket")) {
-      val ex = extracted.drop("bucket").as[ExtractedPage]
-      val lt = triples
+    commit("enriched", Seq("bucket")) {
+      val lt = g.triples
         .filter(col("pred") === Pred.LinksTo).select(col("subj"), col("obj"))
-      graft.enrich.Enrich.nodeEnrichment(ex, lt)
+      graft.enrich.Enrich.nodeEnrichment(g.extracted, lt)
         .withColumn("bucket",
           when(col("label") === lit(graft.model.Label.Page),
             bucketOf(col("node_id"), nBuckets)).otherwise(lit(-1L)))
@@ -304,8 +301,7 @@ object Pipeline {
     // vector index (neo4j_manager.py:226-230), as a first-class
     // resumable stage; probes (AnnOps.ivfTopKIndexed) get partition
     // pruning. Map-side embed + cell assignment; one partitioned write.
-    graft.ops.AnnOps.buildIvfIndex(spark, outDir,
-      pageTextEmbeddings(extracted.drop("bucket").as[ExtractedPage]),
+    graft.ops.AnnOps.buildIvfIndex(spark, outDir, pageTextEmbeddings(g.extracted),
       "id", "emb", snapshotId,
       seed = AnnSeed, nCells = AnnCells, dim = AnnDim)
     ()

@@ -86,14 +86,8 @@ object Harness {
     (r, Step(name, secs, jobs.sync() - n0))
   }
 
-  /** The caches `Pipeline.run` installs, in dependency order. */
-  def stageCaches(g: Pipeline.Graph): Seq[(String, Dataset[_])] = Seq(
-    "extracted" -> g.extracted, "candidates" -> g.candidates,
-    "linked" -> g.linked, "canon" -> g.canon,
-    "pageEntitySets" -> g.pageEntitySets, "triples" -> g.triples)
-
   /** Times `construct` (a `Pipeline.run` call), then fills each cache of
-    * the graph it returns in dependency order, so a step's wall and jobs
+    * the graph it returns in dependency order (`Graph.caches`), so a step's wall and jobs
     * are its own stage's work: every input it reads is already cached.
     * Each step goes to `report` as it ends. Returns the graph; the caller
     * unpersists it. */
@@ -101,7 +95,7 @@ object Harness {
       construct: => Pipeline.Graph): Pipeline.Graph = {
     val (g, built) = measure(jobs, "construct")(construct)
     report(built)
-    stageCaches(g).foreach { case (name, ds) =>
+    g.caches.foreach { case (name, ds) =>
       report(measure(jobs, name) {
         ds.toDF().foreachPartition((_: Iterator[Row]) => ())
       }._2)

@@ -18,7 +18,7 @@ class KgOracleCfgSpec extends SparkSpec {
     val g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
       Synth.sameAs(spark, cfg), cfg.nPages)
     try {
-      val perUrl = g.pageEntities.groupBy(col("url"))
+      val perUrl = Emit.explodePageEntitySets(g.pageEntitySets).groupBy(col("url"))
         .agg(countDistinct(col("canon_id")).as("n")).cache()
       val maxDistinct = perUrl.agg(max(col("n"))).head().getLong(0)
       // the glossary head pages exceed the cap — the oracle's rn<=cap

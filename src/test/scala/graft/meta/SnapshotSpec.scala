@@ -3,6 +3,7 @@ package graft.meta
 import java.nio.file.Files
 
 import graft.SparkSpec
+import graft.model.{Label, NodeRow}
 import graft.pipeline.Pipeline
 import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.sql.functions._
@@ -117,5 +118,24 @@ class SnapshotSpec extends SparkSpec {
 
     // bucketed layout present (explicit url-hash-range partitioning)
     spark.read.parquet(s"$dir/triples/data").columns should contain("bucket")
+
+    // build ≡ run: the committed triples, adjacency and nodes (props
+    // included) are Pipeline.run's on the same input; the only
+    // difference is the snapshot stamp on the PROJECT row
+    val g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
+      Synth.sameAs(spark, cfg), cfg.nPages)
+    try {
+      import spark.implicits._
+      def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+        df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+      t1 shouldBe rows(g.triples.toDF(), "subj", "pred", "obj")
+      rows(spark.read.parquet(s"$dir/adjacency/data"), "src", "dst", "pred") shouldBe
+        rows(g.adjacency.toDF(), "src", "dst", "pred")
+      spark.read.parquet(s"$dir/nodes/data").as[NodeRow].collect().toSet shouldBe
+        g.nodes.collect().map { n =>
+          if (n.label == Label.Project) n.copy(props = n.props + ("snapshot_id" -> "snap-1"))
+          else n
+        }.toSet
+    } finally g.unpersist()
   }
 }

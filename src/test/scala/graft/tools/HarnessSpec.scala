@@ -27,7 +27,7 @@ class HarnessSpec extends SparkSpec {
       // after each step exactly the caches up to its own are loaded:
       // each step fills its stage, and no step fills a later one
       val done = order.indexOf(step.name) + 1
-      val caches = Harness.stageCaches(built)
+      val caches = built.caches
       withClue(s"after ${step.name}: ") {
         caches.map { case (n, ds) => n -> loaded(ds) } shouldBe
           order.zipWithIndex.map { case (n, i) => n -> (i < done) }
