@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.SparkEntry
 import graft.pipeline.Pipeline
-import graft.synth.Synth
+import graft.synth.{BenchInput, Synth}
 import graft.util.Checksum
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, to_json}
@@ -13,8 +13,13 @@ import org.apache.spark.sql.functions.{col, to_json}
   * without touching it).
   *
   * Modes (args(0)):
-  *  - `plans <tag> [qname...]`: write `.explain("formatted")` of each
-  *    declared query to plans/r06/<qname>_<tag>.txt (default: all).
+  *  - `plans <tag> [name...]`: write the plans of each declared query
+  *    (`.explain("formatted")`) and the optimized and executed plans of
+  *    `Pipeline.run`'s triples, nodes and adjacency on
+  *    `BenchInput.cfg(1000)` (`run_triples`, `run_nodes`,
+  *    `run_adjacency`) to plans/<tag>/<name>.txt (default: all), with
+  *    run-dependent ids normalised ([[normalisePlan]]). "Plans
+  *    unchanged" is then `diff -r plans/<tag1> plans/<tag2>`.
   *  - `queries [qname...]`: noop-sink-isolated min-of-3 per query
   *    (guide §1.4 — times the computation, not the count() shortcut).
   *  - `phases [nPages]`: per-stage wall time and Spark job count of
@@ -51,21 +56,32 @@ object BenchExtra {
     args.headOption.getOrElse("queries") match {
       case "plans" =>
         val tag = args(1)
+        val dir = new java.io.File(s"plans/$tag")
+        dir.mkdirs()
+        def write(name: String, plan: String): Unit = {
+          val out = new java.io.PrintWriter(new java.io.File(dir, s"$name.txt"))
+          try out.println(normalisePlan(plan)) finally out.close()
+          println(s"[plans] wrote $tag/$name.txt")
+        }
+        val runOutputs = Seq("run_triples", "run_nodes", "run_adjacency")
         val wanted =
           if (args.length > 2) args.drop(2).toSet
-          else SparkEntry.queries.keySet
-        val dir = new java.io.File("plans/r06")
-        dir.mkdirs()
+          else SparkEntry.queries.keySet ++ runOutputs
         SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-          if (wanted(name)) {
-            val df = fn(spark, sfDir)
-            val txt = df.queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
-            val out = new java.io.PrintWriter(
-              new java.io.File(dir, s"${name}_$tag.txt"))
-            try out.println(txt) finally out.close()
-            println(s"[plans] wrote ${name}_$tag.txt")
-          }
+          if (wanted(name)) write(name, fn(spark, sfDir).queryExecution
+            .explainString(org.apache.spark.sql.execution.FormattedMode))
+        }
+        if (runOutputs.exists(wanted)) {
+          val cfg = BenchInput.cfg(1000L)
+          val g = Pipeline.run(Synth.pages(spark, cfg), Synth.aliases(spark, cfg),
+            Synth.sameAs(spark, cfg), cfg.nPages)
+          try runOutputs.zip(Seq(g.triples.toDF(), g.nodes.toDF(), g.adjacency.toDF()))
+            .foreach { case (name, df) =>
+              if (wanted(name)) write(name,
+                "== Optimized Logical Plan ==\n" + df.queryExecution.optimizedPlan +
+                  "\n== Physical Plan ==\n" + df.queryExecution.executedPlan)
+            }
+          finally g.unpersist()
         }
 
       case "queries" =>
@@ -86,8 +102,8 @@ object BenchExtra {
       case "phases" =>
         import spark.implicits._
         val nPages = if (args.length > 1) args(1).toLong else 20000L
-        val cfg = graft.synth.BenchInput.cfg(nPages)
-        val inputDir = graft.synth.BenchInput.ensure(spark, nPages)
+        val cfg = BenchInput.cfg(nPages)
+        val inputDir = BenchInput.ensure(spark, nPages)
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "512")
         def construct(): Pipeline.Graph = Pipeline.run(
           spark.read.parquet(inputDir).as[graft.model.PageRow],
@@ -145,4 +161,18 @@ object BenchExtra {
     }
     spark.stop()
   }
+
+  /** `plan` with what differs between two runs of the same plan replaced
+    * by placeholders: expression ids (`#12`), plan ids (`plan_id=3`), RDD
+    * ids and call-site lines of checkpointed scans (`MapPartitionsRDD[148]
+    * at localCheckpoint at X.scala:92`), lambda class names and object
+    * hashes (`$$Lambda/0x...@1f2e`) and lambda-variable counters (`x_7`). */
+  def normalisePlan(plan: String): String = Seq(
+    """#\d+""" -> "#N",
+    """plan_id=\d+""" -> "plan_id=N",
+    """RDD\[\d+\]""" -> "RDD[N]",
+    """\.scala:\d+""" -> ".scala:N",
+    """\$\$Lambda[^\s,)\]]*""" -> "\\$\\$Lambda",
+    """@[0-9a-f]{4,}\b""" -> "@H",
+    """\bx_\d+""" -> "x_K").foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 }
