@@ -4,16 +4,18 @@ import graft.SparkSpec
 import graft.mention.{Mention, MentionReference}
 import graft.ops.{AnnOps, TextOps}
 import graft.synth.{Synth, SynthConfig}
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, NullsFirst}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Expression, GreaterThan, IsNotNull, Literal, NullsFirst}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateMode, Final, MaxBy, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, HashPartitioningLike, Partitioning, RangePartitioning}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, ProjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.python.BatchEvalPythonExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Physical-plan assertions — the ".explain and iterate" review frozen
   * as tests, so a regression in join strategy / pushdown / codegen
@@ -21,9 +23,6 @@ import org.apache.spark.sql.functions._
   */
 class PlanSpec extends SparkSpec {
   import spark.implicits._
-
-  private def plan(df: org.apache.spark.sql.DataFrame): String =
-    df.queryExecution.executedPlan.toString
 
   /** Every node of a physical plan, descending into AQE's current plan,
     * its query stages, reused exchanges and subquery plans — but not
@@ -38,6 +37,56 @@ class PlanSpec extends SparkSpec {
 
   private def nodesOf(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] =
     planNodes(df.queryExecution.executedPlan)
+
+  /** [[planNodes]], also descending into the plans of the caches it
+    * scans (the plan that fills each cache). */
+  private def nodesWithCaches(p: SparkPlan): Seq[SparkPlan] = planNodes(p).flatMap {
+    case s: InMemoryTableScanExec => s +: nodesWithCaches(s.relation.cacheBuilder.cachedPlan)
+    case o => Seq(o)
+  }
+
+  /** Every ProjectExec of a plan and its caches' plans, each with whether
+    * it runs inside whole-stage codegen (below a WholeStageCodegenExec
+    * and above that stage's InputAdapter boundary). */
+  private def projects(p: SparkPlan, inStage: Boolean = false): Seq[(ProjectExec, Boolean)] =
+    p match {
+      case w: WholeStageCodegenExec => projects(w.child, inStage = true)
+      case i: InputAdapter => projects(i.child)
+      case a: AdaptiveSparkPlanExec => projects(a.executedPlan)
+      case q: QueryStageExec => projects(q.plan)
+      case r: ReusedExchangeExec => projects(r.child)
+      case s: InMemoryTableScanExec => projects(s.relation.cacheBuilder.cachedPlan)
+      case o =>
+        val here = o match {
+          case pr: ProjectExec => Seq(pr -> inStage)
+          case _ => Nil
+        }
+        here ++ o.children.flatMap(projects(_, inStage)) ++ o.subqueries.flatMap(projects(_))
+    }
+
+  /** The graft native expressions (graft.functions) by name. */
+  private val native = Seq("path_prefixes", "array_pairs", "minhash_sig",
+    "simhash64", "lang_id", "word_shingles", "vec_dot", "percent_decode")
+
+  private def evaluatesNative(p: ProjectExec): Boolean =
+    p.projectList.exists(_.exists(e => native.contains(e.prettyName)))
+
+  /** The projections of `df` that evaluate a native expression outside
+    * whole-stage codegen, i.e. through interpreted eval(). */
+  private def interpretedNative(df: org.apache.spark.sql.DataFrame): Seq[ProjectExec] =
+    projects(df.queryExecution.executedPlan).collect {
+      case (p, false) if evaluatesNative(p) => p
+    }
+
+  /** `df` projects inside whole-stage codegen, and evaluates no native
+    * expression outside it. */
+  private def assertCodegenProject(df: org.apache.spark.sql.DataFrame): Unit = {
+    val ps = projects(df.queryExecution.executedPlan)
+    withClue(s"${df.queryExecution.executedPlan}\n") {
+      ps.exists(_._2) shouldBe true
+      interpretedNative(df) shouldBe empty
+    }
+  }
 
   /** The caches an executed plan scans (their builders, compared by
     * identity). */
@@ -79,34 +128,40 @@ class PlanSpec extends SparkSpec {
     val li = spark.read.parquet(s"$sf/lineitem.parquet")
       .filter($"l_quantity" > 30.0)
       .select($"l_orderkey", $"l_quantity")
-    val p = plan(li)
-    p should include("PushedFilters: [IsNotNull(l_quantity), GreaterThan(l_quantity,30.0)]")
+    val scans = nodesOf(li).collect { case s: FileSourceScanExec => s }
+    scans should have size 1
+    // both predicates reach the scan as data filters (pushed to parquet)
+    scans.head.dataFilters.map {
+      case IsNotNull(a: Attribute) => ("IsNotNull", a.name, None)
+      case GreaterThan(a: Attribute, Literal(v, _)) => ("GreaterThan", a.name, Some(v))
+      case other => (other.toString, "", None)
+    } shouldBe Seq(("IsNotNull", "l_quantity", None), ("GreaterThan", "l_quantity", Some(30.0)))
     // column pruning: the scan must read exactly the two needed columns
-    p should include("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>")
+    scans.head.requiredSchema.map(f => f.name -> f.dataType) shouldBe
+      Seq("l_orderkey" -> LongType, "l_quantity" -> DoubleType)
   }
 
   test("brute-force cosine top-k compiles to TakeOrderedAndProject, not a global Sort") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = emb.filter($"vec_id" === 0).head().getAs[Seq[Float]]("embedding").toArray
-    val p = plan(AnnOps.bruteForceTopK(emb, "vec_id", "embedding", q, 10))
-    p should include("TakeOrderedAndProject")
+    val p = nodesOf(AnnOps.bruteForceTopK(emb, "vec_id", "embedding", q, 10))
+    p.collect { case t: TakeOrderedAndProjectExec => t } should not be empty
+    p.collect { case s: SortExec if s.global => s } shouldBe empty
   }
 
   test("small-dim enrichment join broadcasts (q05 shape)") {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     val cust = spark.read.parquet(s"$sf/customer.parquet")
     val j = orders.join(broadcast(cust), $"o_custkey" === $"c_custkey", "left")
-    plan(j) should include("BroadcastHashJoin")
+    nodesOf(j).collect { case b: BroadcastHashJoinExec => b } should not be empty
   }
 
   test("text quality features stay inside WholeStageCodegen (no UDF break)") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val q = TextOps.qualityFeatures($"text")
     val df = docs.select(col("doc_id") +: q.map { case (n, c) => c.as(n) }: _*)
-    val p = plan(df)
-    // '*(n)' prefixes mark WholeStageCodegen stages in the plan string
-    p should include("*(1) Project")
-    p should not include "BatchEvalPython"
+    assertCodegenProject(df)
+    nodesOf(df).collect { case b: BatchEvalPythonExec => b } shouldBe empty
   }
 
   test("native expressions (shingles/minhash/vec_dot) stay inside WholeStageCodegen") {
@@ -114,49 +169,39 @@ class PlanSpec extends SparkSpec {
     val sig = docs.select(graft.ops.DedupOps.minhashSigFromShingles(
       graft.ops.DedupOps.shingles(TextOps.tokens($"text"), 3), 8).as("sig"))
     // round 3 left these CodegenFallback: the Project around them fell
-    // out of whole-stage codegen ('Project' without the '*(n)' prefix).
+    // out of whole-stage codegen (no WholeStageCodegenExec above it).
     // round 4's doGenCode calls compute() from generated code instead.
-    val p1 = plan(sig)
-    p1 should include("*(1) Project")
+    assertCodegenProject(sig)
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val p2 = plan(emb.select(
+    assertCodegenProject(emb.select(
       AnnOps.srpBucket($"embedding", 42L, 8, 64).as("b")))
-    p2 should include("*(1) Project")
   }
 
   test("round-5 codegen tier: path_prefixes/simhash64/lang_id/array_pairs stay inside WholeStageCodegen") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    plan(docs.select(graft.functions.PathPrefixes.path_prefixes(
-      concat(lit("https://ex.com/"), $"doc_id")).as("p"))) should include("*(1) Project")
-    plan(docs.select(graft.functions.SimHash64.simhash64(
-      TextOps.tokens($"text")).as("s"))) should include("*(1) Project")
-    plan(docs.select(graft.functions.LangId.lang_id($"text").as("l"))) should
-      include("*(1) Project")
-    plan(docs.select(graft.functions.ArrayPairs.array_pairs(
-      array(xxhash64($"doc_id"), xxhash64($"text"))).as("pr"))) should
-      include("*(1) Project")
+    assertCodegenProject(docs.select(graft.functions.PathPrefixes.path_prefixes(
+      concat(lit("https://ex.com/"), $"doc_id")).as("p")))
+    assertCodegenProject(docs.select(graft.functions.SimHash64.simhash64(
+      TextOps.tokens($"text")).as("s")))
+    assertCodegenProject(docs.select(graft.functions.LangId.lang_id($"text").as("l")))
+    assertCodegenProject(docs.select(graft.functions.ArrayPairs.array_pairs(
+      array(xxhash64($"doc_id"), xxhash64($"text"))).as("pr")))
   }
 
   test("no interpreted boundary on the flagship emit/enrich hot path (all native exprs codegen)") {
-    // the full projections the KG build runs per row/page: every plan
-    // line that evaluates one of the native expressions must carry the
-    // '*(n)' WholeStageCodegen prefix — an interpreted Project sneaking
-    // in would put an eval() boundary on the 10^12-row path
-    val native = Seq("path_prefixes", "array_pairs", "minhash_sig",
-      "simhash64", "lang_id", "word_shingles", "vec_dot", "percent_decode")
+    // the full projections the KG build runs per row/page, caches
+    // included: every Project that evaluates one of the native
+    // expressions must run inside WholeStageCodegen — an interpreted
+    // Project sneaking in would put an eval() boundary on the
+    // 10^12-row path
     def assertNoInterpretedNative(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       // execute THIS frame first (collect, not count — count builds its
-      // own QueryExecution): under AQE the '*(n)' codegen markers exist
-      // only on the FINALIZED plan — pre-execution every Project prints
-      // bare and the assert would see false positives
+      // own QueryExecution): under AQE the codegen stages exist only in
+      // the FINALIZED plan — pre-execution no Project is inside one and
+      // the assert would see false positives
       df.collect()
-      // drop AQE's echoed "== Initial Plan ==" section — only the final
-      // (executed) operators carry codegen markers
-      val lines = plan(df).split("== Initial Plan ==").head.linesIterator.toSeq
-      val offenders = lines.filter(l =>
-        native.exists(l.contains) &&
-          l.contains("Project [") && !l.contains("*("))
-      withClue(s"$name interpreted-Project lines:\n${offenders.mkString("\n")}\n") {
+      val offenders = interpretedNative(df)
+      withClue(s"$name interpreted Projects:\n${offenders.mkString("\n")}\n") {
         offenders shouldBe empty
       }
     }
@@ -278,11 +323,13 @@ class PlanSpec extends SparkSpec {
     // BroadcastNestedLoopJoin may appear in ANY SparkEntry query plan or
     // in the pipeline's emitted-table plans — a non-equi join sneaking in
     // would be quadratic at scale
-    val bad = Seq("CartesianProduct", "BroadcastNestedLoopJoin")
-    def assertClean(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val p = plan(df)
-      withClue(s"$name: ") { bad.foreach(b => p should not include b) }
-    }
+    def assertClean(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      withClue(s"$name: ") {
+        nodesWithCaches(df.queryExecution.executedPlan).collect {
+          case c: CartesianProductExec => c
+          case b: BroadcastNestedLoopJoinExec => b
+        } shouldBe empty
+      }
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       assertClean(name, fn(spark, sf))
     }
