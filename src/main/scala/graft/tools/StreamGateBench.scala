@@ -28,6 +28,9 @@ import org.apache.spark.sql.streaming.Trigger
   * concurrent snapshot zip uploads the checksum writer deadlocked its
   * own I/O pool (measured, Spark 4.1; see StreamingIngest scaladoc).
   * Changelog checkpointing is the alternative fix.
+  *
+  * Its scratch dirs go under `BenchInput.root` (`/dev/shm` unless
+  * `SPARK_GRAFT_BENCH_INPUT_ROOT` names another directory).
   */
 object StreamGateBench {
   def main(args: Array[String]): Unit = {
@@ -56,7 +59,7 @@ object StreamGateBench {
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
 
-    val base = s"/dev/shm/graft-stream-gate-$nPages"
+    val base = s"${graft.synth.BenchInput.root}/graft-stream-gate-$nPages"
     val inDir = s"$base/in"
     val outDir = s"$base/out"
     val ckptDir = s"$base/ckpt"
