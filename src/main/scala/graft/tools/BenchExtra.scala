@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.{col, to_json}
   *    `Pipeline.run`'s triples, nodes and adjacency on
   *    `BenchInput.cfg(1000)` (`run_triples`, `run_nodes`,
   *    `run_adjacency`) to plans/<tag>/<name>.txt (default: all), with
-  *    run-dependent ids normalised ([[normalisePlan]]). "Plans
+  *    run-dependent ids normalised (`normalisePlan`). "Plans
   *    unchanged" is then `diff -r plans/<tag1> plans/<tag2>`.
   *  - `queries [qname...]`: noop-sink-isolated min-of-3 per query
   *    (guide §1.4 — times the computation, not the count() shortcut).
@@ -167,7 +167,7 @@ object BenchExtra {
     * ids and call-site lines of checkpointed scans (`MapPartitionsRDD[148]
     * at localCheckpoint at X.scala:92`), lambda class names and object
     * hashes (`$$Lambda/0x...@1f2e`) and lambda-variable counters (`x_7`). */
-  def normalisePlan(plan: String): String = Seq(
+  private def normalisePlan(plan: String): String = Seq(
     """#\d+""" -> "#N",
     """plan_id=\d+""" -> "plan_id=N",
     """RDD\[\d+\]""" -> "RDD[N]",

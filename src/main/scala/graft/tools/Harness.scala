@@ -87,10 +87,10 @@ object Harness {
   }
 
   /** Times `construct` (a `Pipeline.run` call), then fills each cache of
-    * the graph it returns in dependency order (`Graph.caches`), so a step's wall and jobs
-    * are its own stage's work: every input it reads is already cached.
-    * Each step goes to `report` as it ends. Returns the graph; the caller
-    * unpersists it. */
+    * the graph it returns in dependency order (`Graph.caches`), so a
+    * step's wall and jobs are its own stage's work: every input it reads
+    * is already cached. Each step goes to `report` as it ends. Returns the
+    * graph; the caller unpersists it. */
   def timeStages(jobs: JobCounter, report: Step => Unit)(
       construct: => Pipeline.Graph): Pipeline.Graph = {
     val (g, built) = measure(jobs, "construct")(construct)
