@@ -112,6 +112,13 @@ class IncrementalSpec extends SparkSpec {
       .select("id", "cell").collect().map(_.toSeq).toSet
     annOf(incDir) shouldBe annOf(fullDir)
 
+    // and every committed table agrees on every column, partition
+    // columns (bucket, pred, label, cell) included
+    val (incRows, fullRows) = (storeRows(incDir), storeRows(fullDir))
+    for (stage <- Pipeline.StageVersions.keys) withClue(s"$stage: ") {
+      incRows(stage) shouldBe fullRows(stage)
+    }
+
     // deleted page really gone; changed page's new mention present
     val t = triplesOf(incDir)
     t.exists(r => r.head.toString.endsWith("/7")) shouldBe false
@@ -128,6 +135,19 @@ class IncrementalSpec extends SparkSpec {
     triplesOf(incDir) shouldBe triplesOf(fullDir)
     nodesOf(incDir) shouldBe nodesOf(fullDir)
   }
+
+  /** Every row of every committed table of a store as JSON over its
+    * sorted columns, partition columns included; a table with no data
+    * file has no rows. */
+  private def storeRows(dir: String): Map[String, Set[String]] =
+    Pipeline.StageVersions.keys.map { stage =>
+      val data = s"$dir/$stage/data"
+      stage -> (if (fileSet(data).isEmpty) Set.empty[String] else {
+        val df = spark.read.parquet(data)
+        df.select(to_json(struct(df.columns.sorted.map(col).toSeq: _*)))
+          .collect().map(_.getString(0)).toSet
+      })
+    }.toMap
 
   private def fileSet(dir: String): Set[String] = {
     val p = java.nio.file.Paths.get(dir)
