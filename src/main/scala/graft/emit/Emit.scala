@@ -258,8 +258,8 @@ object Emit {
   /** Adjacency is the triple table reordered to (src, dst, pred): a
     * narrow projection with no shuffle. Triples are already distinct on
     * (subj, pred, obj) — see the object doc; PipelineSpec pins it — and
-    * the incremental updater writes the same shape
-    * (Incremental.adjacencyFor). */
+    * the incremental updater writes the same shape, each predicate's
+    * adjacency rows from the triple rows it commits. */
   def adjacency(triples: Dataset[TripleRow]): Dataset[AdjacencyRow] = {
     val spark = triples.sparkSession
     import spark.implicits._

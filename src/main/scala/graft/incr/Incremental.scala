@@ -8,8 +8,9 @@ import graft.model._
 import graft.pipeline.Pipeline
 import graft.emit.Emit
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
 
 /** Incremental rebuild — the Spark shape of the reference's GraphUpdater
   * (clangd_graph_rag_updater.py:43-82, SURVEY.md §3.2):
@@ -49,8 +50,9 @@ import org.apache.spark.sql.functions._
   *    the materialized page summaries (pruned scan, no text).
   *
   * Change short-circuits: every derived table is a pure function of
-  * named inputs, so each rebuild is guarded by an order-insensitive
-  * checksum of those inputs — candidates unchanged ⇒ aliasdf + linked
+  * named inputs, and every commit compares its new rows with what its
+  * scope held (per partition, order-insensitive row hashes) and writes
+  * nothing when they agree — candidates unchanged ⇒ aliasdf + linked
   * skipped; (linked, canon) unchanged ⇒ mentions + relates_to + their
   * adjacency skipped; (link arrays, url set) unchanged ⇒ links_to
   * skipped; page (url, lang, text_sha256) props unchanged on top of all
@@ -61,6 +63,11 @@ import org.apache.spark.sql.functions._
   * mention and no link rewrites only extracted, nodes and enriched PAGE
   * rows; an extraction-invariant html edit (comment/script-only)
   * rewrites only extracted.
+  *
+  * Layout: where each table lives, how it is partitioned and bucketed
+  * and what its rows are is declared once, in `Pipeline.Layouts`, which
+  * `Pipeline.build` commits through too; every read and write here goes
+  * through it (the private `Store`).
   *
   * `nPages` is the score-normalization constant and must equal the value
   * used at full-build time; changing it rescales every idf and requires a
@@ -131,8 +138,7 @@ object Incremental {
       newSnapshotId: String,
       nBuckets: Int = 32,
       keepOrphans: Boolean = false): Seq[Long] = {
-    val oldH = spark.read.schema(urlhashSchema)
-      .parquet(s"$outDir/urlhash/data")
+    val oldH = new Store(spark, outDir, nBuckets, force = false).read("urlhash")
       .select(col("url"), col("h").as("old_h"))
     updateCore(spark, oldH, newPages, aliases, sameas, nPages, outDir,
       newSnapshotId, nBuckets, keepOrphans)
@@ -203,6 +209,8 @@ object Incremental {
     // reconciles any crash point against ANY new snapshot (this also
     // makes the empty-diff crash rerun a real recovery, not an error).
     val dirty = if (force) allBuckets else dirtyActual
+    val store = new Store(spark, outDir, nBuckets, force)
+    def in(buckets: Seq[Long]): Scope = Seq("bucket" -> buckets)
 
     // urls whose EXISTENCE changed (drives links_to/contains scoping) and
     // urls touched in any way (drives the enriched neighbor scope)
@@ -217,225 +225,105 @@ object Incremental {
     // (they are re-stamped with the new snapshot id at the end)
     stageVersions.foreach { case (s, _) => Snapshot.invalidate(s"$outDir/$s") }
 
-    val exDir = s"$outDir/extracted/data"
-    val adfDir = s"$outDir/aliasdf/data"
-    val triplesDir = s"$outDir/triples/data"
-    val adjDir = s"$outDir/adjacency/data"
-    val enrichedDir = s"$outDir/enriched/data"
-
-    // snapshots of pre-update state this update still needs (collected /
-    // eager — all dictionary- or bucket-count-sized). Under force every
-    // change short-circuit is disabled AND the pre-state may be partial
-    // or even missing (the crash could have struck mid-overwrite), so
-    // none of these are read then.
-    val zeroCk = (0L, 0L)
-    val oldDfMap =
-      if (force) Map.empty[String, Long] else collectGlobalAliasDf(spark, adfDir)
+    // snapshots of pre-update state this update still needs (collected —
+    // dictionary- or bucket-count-sized). Under force the pre-state may
+    // be partial or even missing, so neither is read then.
+    def globalDf() = Link.collectAliasDf(Pipeline.globalAliasDf(store.read("aliasdf")))
+    def linksTo() = store.read("triples").filter(col("pred") === Pred.LinksTo)
+      .select(col("subj"), col("obj"))
+    val oldDfMap = if (force) Map.empty[String, Long] else globalDf()
     val oldLinksNbrBuckets =
-      if (force) Nil
-      else nbrBucketsOf(
-        readPred(spark, triplesDir, "links_to").select(col("subj"), col("obj")),
-        touchedUrls, nBuckets)
-    val oldCanonCk =
-      if (force) zeroCk
-      else checksumOf(
-        spark.read.parquet(s"$outDir/canon/data"),
-        Seq("entity_id", "canon_id"))
-
-    val candDir = s"$outDir/candidates/data"
-    val candValueCols =
-      Seq("url", "tok_start", "tok_len", "alias", "entity_id", "prior")
-    def candCk(df: DataFrame) = checksumOf(df, candValueCols)
-    def linksArrCk(buckets: Seq[Long]) = checksumOf(
-      spark.read.parquet(exDir)
-        .filter(col("bucket").isin(buckets: _*))
-        .select(col("url"), concat_ws("\u0001", col("links")).as("l")),
-      Seq("url", "l"))
-
-    // pre-update checksums of what the dirty buckets held — each derived
-    // table below is rebuilt ONLY if its actual inputs changed, so e.g.
-    // a body-text edit that leaves mentions and links alone touches
-    // nothing but extracted/nodes/enriched
-    val preCandCk =
-      if (force) zeroCk
-      else candCk(
-        spark.read.schema(candSchema).parquet(candDir)
-          .filter(col("bucket").isin(dirty: _*)))
-    val preLinksArrCk = if (force) zeroCk else linksArrCk(dirty)
-    // node-table props per dirty-bucket page (extraction only changes in
-    // dirty buckets, so the dirty-scope checksum decides whether any PAGE
-    // node row moved)
-    val nodePropCols = Seq("url", "lang", "text_sha256")
-    val preNodePropsCk =
-      if (force) zeroCk
-      else checksumOf(
-        spark.read.parquet(exDir).filter(col("bucket").isin(dirty: _*)),
-        nodePropCols)
+      if (force) Nil else nbrBucketsOf(linksTo(), touchedUrls, nBuckets)
 
     // ---- extracted: rebuild the FULL dirty buckets from the new
     // snapshot; a bucket is the overwrite unit, and one left with zero
-    // urls is deleted outright (stale-partition bug otherwise)
+    // urls is deleted outright (stale-partition bug otherwise). The
+    // commit also reports whether the node-table props and the link
+    // arrays of the dirty pages moved.
     val inDirty = Pipeline.bucketOf(col("url"), nBuckets).isin(dirty: _*)
-    val extractedDirty = Extract.run(newPages.filter(inDirty)).toDF()
-      .withColumn("bucket", Pipeline.bucketOf(col("url"), nBuckets))
-      .cache()
-    overwriteBuckets(spark, extractedDirty, exDir, dirty)
-    // while the cache is hot (extractedDirty is unpersisted after the
-    // candidates pass)
-    val postNodePropsCk = checksumOf(extractedDirty, nodePropCols)
+    val ex = store.commit("extracted", in(dirty), Seq("url", "lang", "text_sha256"),
+      Seq("url", "links"))(Extract.run(newPages.filter(inDirty)).toDF())
+    val Seq(propsChanged, linkArraysChanged) = ex.watched
 
     // ---- candidates (the parse-cache analog): re-detect dirty buckets
-    // only; relink-only buckets read their stored candidates later
-    val exDirtyDs = extractedDirty.drop("bucket").as[ExtractedPage]
-    val candidatesDirty = Mention.detect(exDirtyDs, aliases).toDF()
-      .withColumn("bucket", Pipeline.bucketOf(col("url"), nBuckets))
-      .cache()
-    val candidatesChanged = force || candCk(candidatesDirty) != preCandCk
-    if (candidatesChanged) {
-      overwriteBuckets(spark, candidatesDirty, candDir, dirty)
-      // aliasdf: same dirty buckets (df_b is bucket-local)
-      overwriteBuckets(spark, Pipeline.bucketAliasDf(candidatesDirty),
-        adfDir, dirty)
-    }
-    candidatesDirty.unpersist()
-    extractedDirty.unpersist()
+    // only; relink-only buckets read their stored candidates later.
+    // aliasdf: same dirty buckets (df_b is bucket-local)
+    val cands = store.commit("candidates", in(dirty))(
+      Mention.detect(ex.rows.as[ExtractedPage], aliases).toDF())
+    if (cands.changed)
+      store.commit("aliasdf", in(dirty))(Pipeline.bucketAliasDf(cands.rows, nBuckets))
 
     // ---- relink scope: dirty ∪ buckets containing a changed-df alias
-    val newDfMap =
-      if (candidatesChanged) collectGlobalAliasDf(spark, adfDir) else oldDfMap
+    val newDfMap = if (cands.changed) globalDf() else oldDfMap
     val changedAliases = (oldDfMap.keySet ++ newDfMap.keySet)
       .filter(a => oldDfMap.getOrElse(a, 0L) != newDfMap.getOrElse(a, 0L))
     val relink: Seq[Long] =
       if (force) allBuckets // crash-rerun: stale linked rows possible anywhere
       else if (changedAliases.isEmpty) dirty
       else {
-        val chDf = changedAliases.toSeq.toDF("alias")
-        val extra = readAliasDf(spark, adfDir)
-          .join(broadcast(chDf), Seq("alias"), "left_semi")
-          .select(col("bucket").cast("long")).distinct()
-          .collect().map(_.getLong(0)).toSeq
+        val extra = store.read("aliasdf")
+          .join(broadcast(changedAliases.toSeq.toDF("alias")), Seq("alias"), "left_semi")
+          .select(col("bucket")).distinct().collect().map(_.getLong(0)).toSeq
         (dirty ++ extra).distinct.sorted
       }
-
-    def readExtracted(buckets: Seq[Long]): Dataset[ExtractedPage] =
-      spark.read.parquet(exDir)
-        .filter(col("bucket").isin(buckets: _*))
-        .drop("bucket").as[ExtractedPage]
 
     // ---- relink against the GLOBAL df (incremental ≡ full rebuild);
     // candidates come from storage — no page is re-tokenized just
     // because some alias's df changed. Skipped entirely when candidates
     // (and hence every df) are byte-identical: linking is a pure
     // function of (candidates, df, nPages).
-    val linkedCols =
-      Seq("url", "tok_start", "tok_len", "alias", "entity_id", "score")
-    val linkedChanged =
-      if (!candidatesChanged) false
-      else {
-        val preLinkedCk =
-          if (force) zeroCk // pre-state may be partial or missing
-          else checksumOf(
-            spark.read.schema(linkedSchema)
-              .parquet(s"$outDir/linked/data")
-              .filter(col("bucket").isin(relink: _*)), linkedCols)
-        val candsRelink = spark.read.schema(candSchema).parquet(candDir)
-          .filter(col("bucket").isin(relink: _*))
-          .drop("bucket").as[CandidateRow]
-        val newLinked =
-          Link.resolve(candsRelink, nPages, Some(newDfMap)).toDF()
-            .withColumn("bucket", Pipeline.bucketOf(col("url"), nBuckets))
-            .localCheckpoint()
-        overwriteBuckets(spark, newLinked, s"$outDir/linked/data", relink)
-        force || checksumOf(newLinked, linkedCols) != preLinkedCk
-      }
+    val linkedChanged = cands.changed && store.commit("linked", in(relink))(
+      Link.resolve(store.read("candidates", in(relink)).as[CandidateRow], nPages,
+        Some(newDfMap)).toDF()).changed
 
     // ---- canon: recompute; a changed map moves mentions/relates rows in
     // every bucket, so compare before deciding the mentions scope
-    val canonNew = Pipeline.canonOf(aliases, sameas).toDF().localCheckpoint()
-    val canonChanged = force ||
-      checksumOf(canonNew, Seq("entity_id", "canon_id")) != oldCanonCk
-    canonNew.write.mode(SaveMode.Overwrite).parquet(s"$outDir/canon/data")
-
-    val ex = spark.read.parquet(exDir)
-    val canon = spark.read.parquet(s"$outDir/canon/data")
+    val canon = store.commit("canon", Nil)(Pipeline.canonOf(aliases, sameas).toDF())
+    val exAll = store.read("extracted")
 
     // each derived table rebuilds only if its inputs changed
-    val mentionsNeeded = canonChanged || linkedChanged
-    val linksChanged =
-      force || existenceChanged || linksArrCk(dirty) != preLinksArrCk
+    val mentionsNeeded = canon.changed || linkedChanged
+    val linksChanged = force || existenceChanged || linkArraysChanged
 
-    // ---- triples: pred=mentions (url-local given canon) and
+    // ---- triples + adjacency: pred=mentions (url-local given canon) and
     // pred=relates_to (global by nature: cross-page co-mention dedup),
-    // both from ONE page-entity-set frame over the stored linked + canon
-    // tables, as Pipeline.build shares it; a pure function of (linked,
-    // canon), so skipped when neither changed. Column-pruned, no text.
-    val mentionScope: Seq[Long] = if (canonChanged) allBuckets else relink
+    // both from ONE page-entity-set frame over the stored linked table
+    // and the canon map, as Pipeline.build shares it; a pure function of
+    // (linked, canon), so skipped when neither changed. Column-pruned, no
+    // text.
+    val mentionScope: Seq[Long] = if (canon.changed) allBuckets else relink
     // one materialization feeds the mentions and relates_to writes and the
     // orphan-free node table's ENTITY rows; built on first use, after the
     // linked and canon writes above
-    lazy val sets = Emit.pageEntitySets(
-        spark.read.schema(linkedSchema).parquet(s"$outDir/linked/data")
-          .drop("bucket").as[LinkedMention],
-        canon.as[CanonRow])
-      .localCheckpoint()
+    lazy val sets = Emit.pageEntitySets(store.read("linked").as[LinkedMention],
+      canon.rows.as[CanonRow]).localCheckpoint()
     if (mentionsNeeded) {
-      overwriteBuckets(spark,
-        Emit.mentionsFromSets(sets.filter(
-            Pipeline.bucketOf(col("url"), nBuckets).isin(mentionScope: _*)))
-          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-        s"$triplesDir/pred=mentions", mentionScope)
-      replaceSubtree(
-        Emit.relatesFromSets(sets)
-          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-        s"$triplesDir/pred=relates_to")
+      store.commitEdges(Pred.Mentions, mentionScope)(Emit.mentionsFromSets(
+        sets.filter(Pipeline.bucketOf(col("url"), nBuckets).isin(mentionScope: _*))))
+      store.commitEdges(Pred.RelatesTo, allBuckets)(Emit.relatesFromSets(sets))
     }
 
-    // ---- triples: pred=links_to (validity depends on target existence:
-    // the scoped pages' links are checked against the full url set)
+    // ---- pred=links_to (validity depends on target existence: the
+    // scoped pages' links are checked against the full url set)
     val linkScope: Seq[Long] =
       if (force) allBuckets
       else if (!existenceChanged) dirty
       else {
         // pages holding a link to an added/deleted url
-        val affected = Emit.linksTo(ex, changedUrls)
+        val affected = Emit.linksTo(exAll, changedUrls)
           .select(Pipeline.bucketOf(col("subj"), nBuckets).as("b"))
           .distinct().collect().map(_.getLong(0)).toSeq
         (dirty ++ affected).distinct.sorted
       }
-    if (linksChanged) overwriteBuckets(spark,
-      Emit.linksTo(ex.filter(col("bucket").isin(linkScope: _*)), ex)
-        .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-      s"$triplesDir/pred=links_to", linkScope)
+    if (linksChanged) store.commitEdges(Pred.LinksTo, linkScope)(
+      Emit.linksTo(store.read("extracted", in(linkScope)), exAll))
 
-    // ---- triples: pred=contains — only if the url set changed (a
-    // changed-only update leaves the hierarchy untouched); the full
+    // ---- pred=contains — only if the url set changed (a changed-only
+    // update leaves the hierarchy untouched); the full
     // root→site→sections→page chain derives from a column-pruned url
     // scan, no text
-    if (existenceChanged) {
-      replaceSubtree(
-        graft.emit.Hierarchy.containsEdges(ex.select(col("url")))
-          .withColumn("bucket", Pipeline.bucketOf(col("subj"), nBuckets)),
-        s"$triplesDir/pred=contains")
-    }
-
-    // ---- adjacency mirrors the triples writes 1:1 (each pred sub-table
-    // is already distinct on (subj, obj), so adjacency is a reorder)
-    def adjacencyFor(pred: String, scope: Option[Seq[Long]]): Unit = {
-      val t = readPred(spark, triplesDir, pred)
-      val rows = scope.map(bs => t.filter(col("bucket").isin(bs: _*)))
-        .getOrElse(t)
-        .select(col("subj").as("src"), col("obj").as("dst"), col("bucket"))
-      scope match {
-        case Some(bs) => overwriteBuckets(spark, rows, s"$adjDir/pred=$pred", bs)
-        case None => replaceSubtree(rows, s"$adjDir/pred=$pred")
-      }
-    }
-    if (mentionsNeeded) {
-      adjacencyFor("mentions", Some(mentionScope))
-      adjacencyFor("relates_to", None)
-    }
-    if (linksChanged) adjacencyFor("links_to", Some(linkScope))
-    if (existenceChanged) adjacencyFor("contains", None)
+    if (existenceChanged) store.commitEdges(Pred.Contains, allBuckets)(
+      graft.emit.Hierarchy.containsEdges(exAll.select(col("url"))))
 
     // ---- nodes: global but column-pruned (url/props scan + the
     // page-entity sets; no stored triple is read). Skipped when every
@@ -443,118 +331,77 @@ object Incremental {
     // extraction doesn't) rewrites extracted but leaves nodes alone; only
     // the one-row PROJECT leaf is refreshed with the new snapshot stamp
     // (the table is partitioned by label for exactly this).
-    val nodesNeeded = force || existenceChanged || canonChanged ||
-      mentionsNeeded || linksChanged || postNodePropsCk != preNodePropsCk
+    val nodesNeeded = force || existenceChanged || canon.changed ||
+      mentionsNeeded || linksChanged || propsChanged
     if (nodesNeeded) {
-      val exAll = ex.drop("bucket").as[ExtractedPage]
-      val out =
-        if (keepOrphans)
-          Emit.nodes(exAll, canon.as[CanonRow], Some(newSnapshotId)).toDF()
-        else Emit.connectedNodes(exAll, sets, Some(newSnapshotId)).toDF()
-      out.write.mode(SaveMode.Overwrite).partitionBy("label")
-        .parquet(s"$outDir/nodes/data")
-    } else withDynamicOverwrite(spark) {
-      Emit.rootNode(spark, Some(newSnapshotId))
-        .write.mode(SaveMode.Overwrite).partitionBy("label")
-        .parquet(s"$outDir/nodes/data")
-    }
+      val exPages = exAll.as[ExtractedPage]
+      store.commit("nodes", Nil)(
+        if (keepOrphans) Emit.nodes(exPages, canon.rows.as[CanonRow], Some(newSnapshotId)).toDF()
+        else Emit.connectedNodes(exPages, sets, Some(newSnapshotId)).toDF())
+    } else store.commit("nodes", Seq("label" -> Seq(Label.Project)))(
+      Emit.rootNode(spark, Some(newSnapshotId)))
 
     // ---- enriched: PAGE rows for dirty ∪ link-neighbor buckets (old and
     // new edges); clean summaries reused, roll-ups from materialized
     // summaries
-    val linksToNew = readPred(spark, triplesDir, "links_to")
-      .select(col("subj"), col("obj"))
+    val linksToNew = linksTo()
     val enrScope =
       if (force) allBuckets
       else (dirty ++ oldLinksNbrBuckets ++
         nbrBucketsOf(linksToNew, touchedUrls, nBuckets)).distinct.sorted
-    // the internal roll-up is a pure function of the PAGE (node_id,
-    // summary) leaf set — checksum it before and after the PAGE-row
-    // overwrite and skip the roll-up when the leaves are unchanged
-    // (covers added/deleted urls too: the leaf SET moves)
-    def leafCk() = checksumOf(
-      spark.read.parquet(enrichedDir)
-        .filter(col("label") === Label.Page)
-        .select(col("node_id"), col("summary")),
-      Seq("node_id", "summary"))
-    val preLeafCk = if (force) zeroCk else leafCk()
-    val scopeSums = graft.enrich.Enrich.pageSummaries(readExtracted(enrScope))
-    // under force the scope is every bucket, so there are no clean rows
-    // to reuse — and the stored table may be partial/missing anyway
-    val cleanSums =
-      if (force)
-        scopeSums.select(col("url"), col("summary")).limit(0)
-      else spark.read.parquet(enrichedDir)
-        .filter(col("label") === Label.Page &&
-          !col("bucket").isin(enrScope: _*))
-        .select(col("node_id").as("url"), col("summary"))
+    val scopeSums = graft.enrich.Enrich.pageSummaries(
+      store.read("extracted", in(enrScope)).as[ExtractedPage])
+    // PAGE rows live in the url buckets, the roll-ups in bucket -1
+    val cleanSums = store.read("enriched", in(allBuckets.diff(enrScope)))
+      .select(col("node_id").as("url"), col("summary"))
     val allSums = scopeSums.select(col("url"), col("summary")).union(cleanSums)
-    overwriteBuckets(spark,
-      graft.enrich.Enrich.pageNodeRows(scopeSums, linksToNew, Some(allSums))
-        .withColumn("bucket", Pipeline.bucketOf(col("node_id"), nBuckets))
-        .localCheckpoint(), // sever lineage: reads the table it rewrites
-      enrichedDir, enrScope)
-    if (force || leafCk() != preLeafCk) {
+    // the internal roll-up is a pure function of the PAGE (node_id,
+    // summary) leaf set — skipped when the leaves are unchanged (covers
+    // added/deleted urls too: the leaf SET moves)
+    val pageRows = store.commit("enriched", in(enrScope), Seq("node_id", "summary"))(
+      graft.enrich.Enrich.pageNodeRows(scopeSums, linksToNew, Some(allSums)))
+    if (pageRows.watched.head) {
       // the page's roll-up parent derives from its url alone — no join
       // back to extracted needed
-      val leaves = spark.read.parquet(enrichedDir)
-        .filter(col("label") === Label.Page)
+      val leaves = store.read("enriched").filter(col("label") === Label.Page)
         .select(col("node_id").as("node"),
           graft.emit.Hierarchy.parentOf(col("node_id")).as("parent"),
           col("summary"))
-      val internalRows = graft.enrich.Enrich.internalNodeRows(leaves)
-        .withColumn("bucket", lit(-1L)).localCheckpoint()
-      withDynamicOverwrite(spark) {
-        internalRows.write.mode(SaveMode.Overwrite)
-          .partitionBy("bucket").parquet(enrichedDir)
-      }
+      store.commit("enriched", in(Seq(-1L)))(graft.enrich.Enrich.internalNodeRows(leaves))
     }
 
     // ---- ann_ivf: the content-embedding index is a pure function of
     // the page (url, text) set — refreshed when any text or the url set
-    // moved (the same postNodePropsCk that drives the PAGE node props),
+    // moved (the same props change that drives the PAGE node rows),
     // skipped (manifest restamp only) otherwise. CELL-granular: cells
     // are content-derived (an edited page can hop cells), but only the
     // dirty pages' OLD cells and NEW cells change, and the stored rows
     // already carry their embeddings — so the update re-embeds ONLY the
     // dirty pages, reads only the affected cells (partition-pruned;
-    // ≤ nCells, collected), and dynamic-overwrites those cell
-    // partitions: keep = stored affected-cell rows minus touched ids,
-    // plus fresh rows. At 10^12 docs this touches ~|dirty|/|corpus| of
-    // the index instead of rebuilding it. Force (crash) rebuilds fully
-    // — the stored index is untrusted then.
-    val annDir = s"$outDir/ann_ivf/data"
-    if (force) {
-      graft.ops.AnnOps.buildIvfIndex(spark, outDir,
-        Pipeline.pageTextEmbeddings(ex.drop("bucket").as[ExtractedPage]),
-        "id", "emb", newSnapshotId,
-        seed = Pipeline.AnnSeed, nCells = Pipeline.AnnCells,
-        dim = Pipeline.AnnDim)
-    } else if (existenceChanged || postNodePropsCk != preNodePropsCk) {
-      val freshRows = graft.ops.AnnOps.assignCells(
-        Pipeline.pageTextEmbeddings(
-          readExtracted(dirty).join(touchedUrls, Seq("url"), "left_semi")
-            .as[ExtractedPage]),
+    // ≤ nCells, collected), and overwrites those cell partitions: keep =
+    // stored affected-cell rows minus touched ids, plus fresh rows. At
+    // 10^12 docs this touches ~|dirty|/|corpus| of the index instead of
+    // rebuilding it. Force (crash) rebuilds every cell from every page —
+    // the stored index is untrusted then.
+    if (force || existenceChanged || propsChanged) {
+      val pages =
+        if (force) exAll
+        else store.read("extracted", in(dirty)).join(touchedUrls, Seq("url"), "left_semi")
+      val fresh = graft.ops.AnnOps.assignCells(
+        Pipeline.pageTextEmbeddings(pages.as[ExtractedPage]),
         "id", "emb", Pipeline.AnnSeed, Pipeline.AnnCells, Pipeline.AnnDim)
         .localCheckpoint()
-      // explicit schema like every other stage read here: a legitimately
-      // empty index (zero-page corpus) holds only _SUCCESS and a
-      // schema-less read fails with UNABLE_TO_INFER_SCHEMA
-      val oldIdx = spark.read.schema(annIvfSchema).parquet(annDir)
+      def cellsOf(df: DataFrame) = // bounded by nCells
+        df.select(col("cell")).distinct().collect().map(_.getInt(0)).toSeq
       val tid = touchedUrls.withColumnRenamed("url", "id")
-      val oldCells = oldIdx.join(tid, Seq("id"), "left_semi")
-        .select(col("cell").cast("long")).distinct()
-        .collect().map(_.getLong(0)) // bounded by nCells
-      val newCells = freshRows.select(col("cell").cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      val affected = (oldCells ++ newCells).distinct.sorted.toSeq
-      if (affected.nonEmpty) {
-        val keep = oldIdx.filter(col("cell").isin(affected: _*))
-          .join(tid, Seq("id"), "left_anti")
-        // overwriteBucketsBy checkpoints first, severing the self-read
-        overwriteBucketsBy(spark, keep.unionByName(freshRows),
-          annDir, affected, "cell")
-      }
+      val cells =
+        if (force) 0 until Pipeline.AnnCells
+        else (cellsOf(store.read("ann_ivf").join(tid, Seq("id"), "left_semi")) ++
+          cellsOf(fresh)).distinct.sorted
+      val scope = Seq("cell" -> cells)
+      if (cells.nonEmpty) store.commit("ann_ivf", scope)(
+        if (force) fresh
+        else store.read("ann_ivf", scope).join(tid, Seq("id"), "left_anti").unionByName(fresh))
     }
 
     // ---- urlhash: rewritten LAST of all data dirs. It is the diff base
@@ -564,11 +411,7 @@ object Incremental {
     // update unrecoverable (rerun would see an empty diff). With it
     // last, any crash before this point leaves the diff base intact and
     // a rerun redoes the same update (force-mode, see above).
-    overwriteBuckets(spark,
-      newH.select(col("url"), col("new_h").as("h"))
-        .withColumn("bucket", Pipeline.bucketOf(col("url"), nBuckets))
-        .filter(col("bucket").isin(dirty: _*)),
-      s"$outDir/urlhash/data", dirty)
+    store.commit("urlhash", in(dirty))(newH.select(col("url"), col("new_h").as("h")))
 
     // stamp manifests with the new snapshot id (≙ PROJECT.commit_hash
     // stamp, clangd_graph_rag_builder.py:112-122)
@@ -580,55 +423,9 @@ object Incremental {
 
   // ------------------------------------------------------------ helpers
 
-  // explicit read schemas: a stage that legitimately holds zero rows
-  // (e.g. no mention candidates anywhere) has a _SUCCESS-only data dir,
-  // and a schema-less parquet read would fail with UNABLE_TO_INFER_SCHEMA
-  private val candSchema =
-    org.apache.spark.sql.Encoders.product[CandidateRow].schema
-      .add("bucket", org.apache.spark.sql.types.LongType)
-  private val linkedSchema =
-    org.apache.spark.sql.Encoders.product[LinkedMention].schema
-      .add("bucket", org.apache.spark.sql.types.LongType)
-  private val aliasdfSchema = new org.apache.spark.sql.types.StructType()
-    .add("alias", org.apache.spark.sql.types.StringType)
-    .add("df_b", org.apache.spark.sql.types.LongType)
-    .add("bucket", org.apache.spark.sql.types.LongType)
-  private val urlhashSchema = new org.apache.spark.sql.types.StructType()
-    .add("url", org.apache.spark.sql.types.StringType)
-    .add("h", org.apache.spark.sql.types.LongType)
-    .add("bucket", org.apache.spark.sql.types.LongType)
-  private val annIvfSchema = new org.apache.spark.sql.types.StructType()
-    .add("id", org.apache.spark.sql.types.StringType)
-    .add("emb", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.FloatType, containsNull = false))
-    .add("cell", org.apache.spark.sql.types.IntegerType)
-
-  private def readAliasDf(spark: SparkSession, adfDir: String): DataFrame =
-    spark.read.schema(aliasdfSchema).parquet(adfDir)
-
-  private def collectGlobalAliasDf(
-      spark: SparkSession, adfDir: String): Map[String, Long] =
-    Pipeline.globalAliasDf(readAliasDf(spark, adfDir))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  private def checksumOf(df: DataFrame, cols: Seq[String]): (Long, Long) =
-    graft.util.Checksum.of(df, cols)
-
-  /** Read one pred sub-table, tolerating a predicate that has never had
-    * any rows: its directory may not exist (partitionBy never creates
-    * empty leaves — e.g. a corpus with only external links has no
-    * pred=links_to), or may hold only a _SUCCESS marker after an empty
-    * rewrite. Returns an empty (subj, obj, bucket) frame then. */
-  private def readPred(
-      spark: SparkSession, triplesDir: String, pred: String): DataFrame = {
-    import spark.implicits._
-    val p = new Path(s"$triplesDir/pred=$pred")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && fs.listStatus(p)
-      .exists(s => s.isDirectory || s.getPath.getName.endsWith(".parquet"))
-    if (hasData) spark.read.parquet(p.toString)
-    else Seq.empty[(String, String, Long)].toDF("subj", "obj", "bucket")
-  }
+  /** The partitions a read or commit covers: each partition column with
+    * the values it takes, in the layout's order; empty = the whole table. */
+  private type Scope = Seq[(String, Seq[Any])]
 
   /** Buckets of link-neighbors (either direction) of `urls`. */
   private def nbrBucketsOf(
@@ -641,49 +438,102 @@ object Incremental {
       .select(Pipeline.bucketOf(col("u"), nBuckets).as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq
 
-  /** Dynamic-partition-overwrite `df` (which carries a `bucket` column)
-    * into `dir`, then DELETE every `scope` bucket directory that received
-    * no rows — a bucket whose rows all vanished must not survive stale. */
-  private def overwriteBuckets(
-      spark: SparkSession, df: DataFrame, dir: String,
-      scope: Seq[Long]): Unit =
-    overwriteBucketsBy(spark, df, dir, scope, "bucket")
+  /** Rows of a scoped commit: `placed` (checkpointed, with their
+    * derived bucket) and `rows` (without it), the partitions they fill,
+    * and whether they differ from what the scope held — over all
+    * columns, and over each watched column list. */
+  private final case class Staged(placed: DataFrame, rows: DataFrame,
+      scope: Scope, filled: Set[Seq[Any]], changed: Boolean, watched: Seq[Boolean])
 
-  /** Same dynamic-partition-overwrite + delete-emptied-partitions
-    * protocol over an arbitrary partition column (the ann index
-    * partitions by `cell`, everything else by `bucket`). */
-  private def overwriteBucketsBy(
-      spark: SparkSession, df: DataFrame, dir: String,
-      scope: Seq[Long], pcol: String): Unit = {
-    val dfc = df.localCheckpoint() // one materialization; severs self-reads
-    val written = dfc.select(col(pcol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    withDynamicOverwrite(spark) {
-      dfc.repartition(col(pcol)).write.mode(SaveMode.Overwrite)
-        .partitionBy(pcol).parquet(dir)
+  /** The updater's one way into and out of a `Pipeline.build` store: its
+    * tables are read and committed as `Pipeline.Layouts` declares them.
+    * Under `force` (a crashed update) the stored scopes are untrusted: no
+    * commit compares against them, and every commit counts as a change. */
+  private final class Store(
+      spark: SparkSession, outDir: String, nBuckets: Int, force: Boolean) {
+    private def dir(stage: String) = s"$outDir/$stage/data"
+    private def within(scope: Scope): Column =
+      scope.map { case (c, vs) => col(c).isin(vs: _*) }.foldLeft(lit(true))(_ && _)
+    private def stored(stage: String, scope: Scope): DataFrame =
+      spark.read.schema(Pipeline.Layouts(stage).schema).parquet(dir(stage))
+        .filter(within(scope))
+    private def unplaced(stage: String, df: DataFrame): DataFrame =
+      if (Pipeline.Layouts(stage).bucket.isEmpty) df else df.drop("bucket")
+
+    /** The rows `scope` of `stage` holds, without a derived `bucket`. A
+      * declared schema reads an empty table too (its data dir holds only
+      * _SUCCESS, or no leaf of a partition never written). */
+    def read(stage: String, scope: Scope = Nil): DataFrame =
+      unplaced(stage, stored(stage, scope))
+
+    /** Commits `rows` (without a derived `bucket`) to `scope` of `stage`:
+      * places them, keeps those inside the scope, checkpoints them once
+      * and compares them per partition with what the scope holds. If they
+      * differ, the scope is overwritten — dynamically, partition by
+      * partition, and the scope partitions that got no rows are deleted;
+      * the whole table for the empty scope. */
+    def commit(stage: String, scope: Scope, watch: Seq[String]*)(
+        rows: DataFrame): Staged = {
+      val s = staged(stage, scope, watch)(rows)
+      if (s.changed) write(stage, s)
+      s
     }
-    scope.filterNot(written).foreach(b => deletePath(spark, s"$dir/$pcol=$b"))
-  }
 
-  /** Full replace of one pred sub-table (still bucket-partitioned). */
-  private def replaceSubtree(df: DataFrame, dir: String): Unit =
-    df.repartition(col("bucket")).write.mode(SaveMode.Overwrite)
-      .partitionBy("bucket").parquet(dir)
+    /** Commits the (subj, obj) edges of `pred` to `buckets` of the
+      * triples table and, from the same checkpointed rows, of its mirror,
+      * the adjacency table (bucketed by src = subj). */
+    def commitEdges(pred: String, buckets: Seq[Long])(edges: DataFrame): Unit = {
+      val s = staged("triples", Seq("pred" -> Seq(pred), "bucket" -> buckets), Nil)(
+        edges.select(col("subj"), lit(pred).as("pred"), col("obj")))
+      if (s.changed) {
+        write("triples", s)
+        write("adjacency", s.copy(placed = s.placed.select(col("subj").as("src"),
+          col("obj").as("dst"), col("pred"), col("bucket"))))
+      }
+    }
 
-  private def deletePath(spark: SparkSession, path: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    ()
-  }
+    private def staged(stage: String, scope: Scope, watch: Seq[Seq[String]])(
+        rows: DataFrame): Staged = {
+      val l = Pipeline.Layouts(stage)
+      val placed = l.placed(rows, nBuckets).filter(within(scope)).localCheckpoint()
+      val sets = l.row.fieldNames.toSeq +: watch
+      def hashable(c: String) = l.row(c).dataType match {
+        case _: MapType => array_sort(map_entries(col(c))) // maps do not hash
+        case _ => col(c)
+      }
+      def hashed(df: DataFrame, side: Int) = df.select(lit(side).as("side") +:
+        (l.parts.map(col) ++ sets.map(cs => xxhash64(cs.map(hashable): _*))): _*)
+        .toDF(("side" +: l.parts) ++ sets.indices.map(i => s"h$i"): _*)
+      val both = if (force) hashed(placed, 1)
+        else hashed(placed, 1).union(hashed(stored(stage, scope), 0))
+      // one job: per side and partition, the row count and an xor of row
+      // hashes for each column list (Checksum.of's order-insensitive sum)
+      val got = both.groupBy(("side" +: l.parts).map(col): _*)
+        .agg(count(lit(1)), sets.indices.map(i => bit_xor(col(s"h$i"))): _*)
+        .collect().map(_.toSeq).groupBy(_.head).withDefaultValue(Array.empty)
+      val nParts = l.parts.size
+      def sums(side: Int, i: Int) = got(side).map(r =>
+        r.slice(1, 1 + nParts) -> (r(1 + nParts), r(2 + nParts + i))).toMap
+      val diffs = sets.indices.map(i => force || sums(0, i) != sums(1, i))
+      Staged(placed, unplaced(stage, placed), scope, sums(1, 0).keySet,
+        diffs.head, diffs.tail)
+    }
 
-  private def withDynamicOverwrite[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    private def write(stage: String, s: Staged): Unit = {
+      val l = Pipeline.Layouts(stage)
+      val w0 = l.arranged(s.placed).write.mode(SaveMode.Overwrite)
+      val w = if (l.parts.isEmpty) w0 else w0.partitionBy(l.parts: _*)
+      if (s.scope.isEmpty) w.parquet(dir(stage))
+      else {
+        w.option("partitionOverwriteMode", "dynamic").parquet(dir(stage))
+        val fs = new Path(dir(stage)).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        s.scope.foldLeft(Seq(Seq.empty[Any])) { case (ps, (_, vs)) =>
+          for (p <- ps; v <- vs) yield p :+ v
+        }.filterNot(s.filled).foreach { p =>
+          fs.delete(new Path(dir(stage), s.scope.map(_._1).zip(p)
+            .map { case (c, v) => s"$c=$v" }.mkString("/")), true)
+        }
+      }
     }
   }
 }

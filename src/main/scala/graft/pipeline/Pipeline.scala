@@ -7,11 +7,13 @@ import graft.link.Link
 import graft.mention.Mention
 import graft.meta.Snapshot
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ListMap
+import scala.reflect.runtime.universe.TypeTag
 
 /** End-to-end KG construction (the Spark shape of the reference's
   * GraphBuilder.build, clangd_graph_rag_builder.py:48-76):
@@ -24,7 +26,9 @@ import scala.collection.immutable.ListMap
   * are read again (tests, bench, queries), and `build` commits every
   * stage through the per-stage snapshot/commit/resume protocol with
   * bucketed Parquet (explicit repartitioning by url-hash range,
-  * north_rule) + lineage, then adds its build-only side stages.
+  * north_rule) + lineage, then adds its build-only side stages. How each
+  * committed table is laid out is declared once, in [[Layouts]], which
+  * `build` and the incremental updater both read and write through.
   */
 object Pipeline {
 
@@ -47,19 +51,57 @@ object Pipeline {
   val AnnCells = 16
   val AnnDim = 384
 
-  /** Every committed stage of `build` with its version string, in build
-    * order (the chain, then the side stages) — the one list both `build`
-    * (its manifests) and the incremental updater (its crash / version
-    * guard and re-stamp) read. ann_ivf's version is derived from its
-    * codebook parameters inside AnnOps.buildIvfIndex; it is listed so the
-    * updater guards it too. */
-  val StageVersions: ListMap[String, String] = ListMap(
-    "extracted" -> Extract.StageVersion, "candidates" -> "mention-v1",
-    "linked" -> "link-v1", "canon" -> "canon-v1",
-    "triples" -> EmitVersion, "nodes" -> EmitVersion,
-    "adjacency" -> EmitVersion, "urlhash" -> "diff-v1",
-    "aliasdf" -> "link-v1", "enriched" -> EnrichVersion,
-    "ann_ivf" -> graft.ops.AnnOps.ivfVersion(AnnSeed, AnnCells, AnnDim))
+  /** The layout of one committed table:
+    *  - `version`: its stage version (the manifest's, and the updater's
+    *    version guard's);
+    *  - `row`: the schema of its rows, with the partition columns they
+    *    carry (pred, label, aliasdf's bucket, ann_ivf's cell);
+    *  - `parts`: its partition columns, the `bucket` (`cell`) last;
+    *  - `bucket`: how a `bucket` the rows do not carry follows from a row
+    *    (a url, subj or src hash; enriched's PAGE-or-−1 rule). canon and
+    *    nodes have no bucket. */
+  final case class Layout(version: String, row: StructType,
+      parts: Seq[String] = Nil, bucket: Option[Int => Column] = None) {
+    /** The schema a read of the stored files uses. */
+    def schema: StructType = bucket.fold(row)(_ => row.add("bucket", LongType))
+    /** `rows` with their derived `bucket`. */
+    def placed(rows: DataFrame, nBuckets: Int): DataFrame =
+      bucket.fold(rows)(b => rows.withColumn("bucket", b(nBuckets)))
+    /** `placed` rows as they are written: a table with a bucket (or a
+      * cell) is repartitioned by its partition columns. */
+    def arranged(placed: DataFrame): DataFrame =
+      if (parts.lastOption.exists(Set("bucket", "cell"))) placed.repartition(parts.map(col): _*)
+      else placed
+  }
+
+  private def hashOf(c: String): Option[Int => Column] = Some(n => bucketOf(col(c), n))
+  private def rowOf[T <: Product: TypeTag]: StructType = Encoders.product[T].schema
+
+  /** Every committed stage of `build` with its layout, in build order (the
+    * chain, then the side stages). ann_ivf's version is derived from its
+    * codebook parameters. */
+  val Layouts: ListMap[String, Layout] = ListMap(
+    "extracted" -> Layout(Extract.StageVersion, rowOf[ExtractedPage], Seq("bucket"), hashOf("url")),
+    "candidates" -> Layout("mention-v1", rowOf[CandidateRow], Seq("bucket"), hashOf("url")),
+    "linked" -> Layout("link-v1", rowOf[LinkedMention], Seq("bucket"), hashOf("url")),
+    "canon" -> Layout("canon-v1", rowOf[CanonRow]),
+    "triples" -> Layout(EmitVersion, rowOf[TripleRow], Seq("pred", "bucket"), hashOf("subj")),
+    "nodes" -> Layout(EmitVersion, rowOf[NodeRow], Seq("label")),
+    "adjacency" -> Layout(EmitVersion, rowOf[AdjacencyRow], Seq("pred", "bucket"), hashOf("src")),
+    "urlhash" -> Layout("diff-v1", StructType.fromDDL("url STRING, h BIGINT"),
+      Seq("bucket"), hashOf("url")),
+    "aliasdf" -> Layout("link-v1",
+      StructType.fromDDL("bucket BIGINT, alias STRING, df_b BIGINT"), Seq("bucket")),
+    "enriched" -> Layout(EnrichVersion, StructType.fromDDL("node_id STRING, " +
+      "label STRING, summary STRING, summaryEmbedding ARRAY<FLOAT>, " +
+      "neighborSummaries ARRAY<STRING>"), Seq("bucket"), Some(n =>
+        when(col("label") === lit(Label.Page), bucketOf(col("node_id"), n))
+          .otherwise(lit(-1L)))),
+    "ann_ivf" -> Layout(graft.ops.AnnOps.ivfVersion(AnnSeed, AnnCells, AnnDim),
+      StructType.fromDDL("id STRING, emb ARRAY<FLOAT>, cell INT"), Seq("cell")))
+
+  /** Every committed stage with its version string, in build order. */
+  val StageVersions: ListMap[String, String] = Layouts.map { case (s, l) => s -> l.version }
 
   final case class Graph(
       extracted: Dataset[ExtractedPage],
@@ -84,13 +126,9 @@ object Pipeline {
   }
 
   /** How a driver materialises one stage of [[chain]] from its `body`.
-    * `reread` marks a stage that later stages or several outputs read;
-    * `bucketKey` is the column whose hash is the committed table's
-    * `bucket` column, and `parts` the partition columns ahead of it. */
+    * `reread` marks a stage that later stages or several outputs read. */
   private trait Materialise {
-    def apply[T: Encoder](name: String, reread: Boolean,
-        bucketKey: Option[String] = None, parts: Seq[String] = Nil)(
-        body: => Dataset[T]): Dataset[T]
+    def apply[T: Encoder](name: String, reread: Boolean)(body: => Dataset[T]): Dataset[T]
   }
 
   /** The stage chain, the one place it is written. Each stage body runs
@@ -110,11 +148,9 @@ object Pipeline {
       stamp: Option[String])(stage: Materialise): Graph = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val extracted = stage("extracted", reread = true, Some("url"))(Extract.run(pages))
-    val candidates = stage("candidates", reread = true, Some("url"))(
-      Mention.detect(extracted, aliases))
-    val linked = stage("linked", reread = true, Some("url"))(
-      Link.resolve(candidates, nPages))
+    val extracted = stage("extracted", reread = true)(Extract.run(pages))
+    val candidates = stage("candidates", reread = true)(Mention.detect(extracted, aliases))
+    val linked = stage("linked", reread = true)(Link.resolve(candidates, nPages))
     val canon = stage("canon", reread = true)(canonOf(aliases, sameas))
     val pe = Emit.pageEntitySets(linked, canon).persist(StorageLevel.MEMORY_AND_DISK)
     // triples live as one sub-table per predicate, bucketed by subj hash:
@@ -122,15 +158,14 @@ object Pipeline {
     // bucket), so incremental updates overwrite exactly the dirty
     // (pred, bucket) leaves; queries touching one predicate get partition
     // pruning for free
-    val triples = stage("triples", reread = true, Some("subj"), Seq("pred"))(
+    val triples = stage("triples", reread = true)(
       Emit.triples(extracted, linked, canon, Some(pe)))
     // partitioned by label so the incremental updater can refresh the
     // one-row PROJECT leaf (snapshot stamp) without rewriting the rest
-    val nodes = stage("nodes", reread = false, parts = Seq("label"))(
+    val nodes = stage("nodes", reread = false)(
       if (keepOrphans) Emit.nodes(extracted, canon, stamp)
       else Emit.connectedNodes(extracted, pe, stamp))
-    val adjacency = stage("adjacency", reread = false, Some("src"), Seq("pred"))(
-      Emit.adjacency(triples))
+    val adjacency = stage("adjacency", reread = false)(Emit.adjacency(triples))
     Graph(extracted, linked, canon, triples, nodes, adjacency, pe, candidates)
   }
 
@@ -181,8 +216,7 @@ object Pipeline {
     val cacheParts = math.max(spark.sparkContext.defaultParallelism * 3,
       spark.sessionState.conf.numShufflePartitions)
     chain(pages, aliases, sameas, nPages, keepOrphans, stamp = None)(new Materialise {
-      def apply[T: Encoder](name: String, reread: Boolean,
-          bucketKey: Option[String], parts: Seq[String])(
+      def apply[T: Encoder](name: String, reread: Boolean)(
           body: => Dataset[T]): Dataset[T] =
         if (!reread) body
         else (if (name == "extracted") body.coalesce(cacheParts) else body)
@@ -207,12 +241,13 @@ object Pipeline {
       aliases.map(a => java.lang.Long.valueOf(a.entity_id)).distinct(), sameas)
   }
 
-  /** Per-bucket alias document frequency (bucket, alias, df_b) from a
-    * bucketed candidates table: urls are bucket-disjoint, so the global
+  /** Per-bucket alias document frequency (bucket, alias, df_b) of the
+    * candidates, bucketed by url: urls are bucket-disjoint, so the global
     * df is the exact per-bucket sum ([[globalAliasDf]]) and a bucket's
     * rows change only when its own candidates do. */
-  def bucketAliasDf(candidates: DataFrame): DataFrame =
-    candidates.select(col("bucket"), col("url"), col("alias")).distinct()
+  def bucketAliasDf(candidates: DataFrame, nBuckets: Int): DataFrame =
+    candidates.select(bucketOf(col("url"), nBuckets).as("bucket"), col("url"),
+        col("alias")).distinct()
       .groupBy(col("bucket"), col("alias"))
       .agg(count(lit(1)).as("df_b"))
 
@@ -224,10 +259,11 @@ object Pipeline {
 
   /** Committed driver of [[chain]]: a staged build with checkpoints,
     * where every stage resumes from its last committed snapshot
-    * (kill-and-resume safe — SURVEY.md §7.6). A stage with a bucket key
-    * gets its `bucket` column, is repartitioned by its partition columns
-    * and committed; later stages read the committed table without
-    * `bucket`. After the chain come the side stages only the store has. */
+    * (kill-and-resume safe — SURVEY.md §7.6). Each stage is committed as
+    * its [[Layouts]] entry declares: it gets its derived `bucket`, a
+    * bucketed stage is repartitioned by its partition columns, and later
+    * stages read the committed table without `bucket`. After the chain
+    * come the side stages only the store has. */
   def build(
       spark: SparkSession,
       pages: Dataset[PageRow],
@@ -238,24 +274,18 @@ object Pipeline {
       snapshotId: String,
       nBuckets: Int = 32,
       keepOrphans: Boolean = false): Unit = {
-    def commit(name: String, partitionCols: Seq[String])(
-        body: => DataFrame): DataFrame =
-      Snapshot.stage(spark, outDir, name, snapshotId, StageVersions(name),
-        partitionCols)(body)
-    def bucketed(df: DataFrame, key: String): DataFrame =
-      df.withColumn("bucket", bucketOf(col(key), nBuckets))
+    def commit(name: String, arrange: Boolean = true)(body: => DataFrame): DataFrame = {
+      val l = Layouts(name)
+      val placed = l.placed(body, nBuckets)
+      Snapshot.stage(spark, outDir, name, snapshotId, l.version, l.parts)(
+        if (arrange) l.arranged(placed) else placed)
+    }
 
     val g = chain(pages, aliases, sameas, nPages, keepOrphans, Some(snapshotId))(
       new Materialise {
-        def apply[T: Encoder](name: String, reread: Boolean,
-            bucketKey: Option[String], parts: Seq[String])(
-            body: => Dataset[T]): Dataset[T] = bucketKey match {
-          case Some(k) =>
-            val cols = parts :+ "bucket"
-            commit(name, cols)(bucketed(body.toDF(), k).repartition(cols.map(col): _*))
-              .drop("bucket").as[T]
-          case None => commit(name, parts)(body.toDF()).as[T]
-        }
+        def apply[T: Encoder](name: String, reread: Boolean)(
+            body: => Dataset[T]): Dataset[T] =
+          commit(name)(body.toDF()).drop("bucket").as[T]
       })
     g.pageEntitySets.unpersist() // the one cache the chain left
 
@@ -266,34 +296,25 @@ object Pipeline {
     // on the same frozen (warc_ts, xxhash64(html)) key, so
     // extracted.html_xxh64 IS the winning hash — value-identical to
     // Incremental.urlHashes(pages) without a second full corpus scan
-    // (the scan+hash was ~12% of the 20k build by lineage wall_ms).
-    commit("urlhash", Seq("bucket")) {
-      bucketed(g.extracted.select(col("url"), col("html_xxh64").as("h")), "url")
-    }
+    // (the scan+hash was ~12% of the 20k build by lineage wall_ms). The
+    // committed extracted files it reads are one bucket each, so it is
+    // written without a repartition.
+    commit("urlhash", arrange = false)(g.extracted.select(col("url"), col("html_xxh64").as("h")))
 
     // per-bucket alias document frequency, for the incremental updater
     // only: it maintains this table per dirty bucket and detects which
     // aliases' global df changed (those buckets must relink). urls are
     // bucket-disjoint, so its per-bucket sum is the df the linked stage
     // derived from the same candidates.
-    commit("aliasdf", Seq("bucket")) {
-      bucketAliasDf(bucketed(g.candidates.toDF(), "url")).repartition(col("bucket"))
-    }
+    commit("aliasdf")(bucketAliasDf(g.candidates.toDF(), nBuckets))
 
     // enriched node properties (summary + embedding + neighbor context)
     // — ≙ the reference's RAG pass 7 writing summary/summaryEmbedding
     // onto FUNCTION/FILE/FOLDER/PROJECT nodes. PAGE rows are bucketed by
     // url hash (incrementally maintainable); SITE/PROJECT roll-up rows
     // live in bucket -1.
-    commit("enriched", Seq("bucket")) {
-      val lt = g.triples
-        .filter(col("pred") === Pred.LinksTo).select(col("subj"), col("obj"))
-      graft.enrich.Enrich.nodeEnrichment(g.extracted, lt)
-        .withColumn("bucket",
-          when(col("label") === lit(graft.model.Label.Page),
-            bucketOf(col("node_id"), nBuckets)).otherwise(lit(-1L)))
-        .repartition(col("bucket"))
-    }
+    commit("enriched")(graft.enrich.Enrich.nodeEnrichment(g.extracted,
+      g.triples.filter(col("pred") === Pred.LinksTo).select(col("subj"), col("obj"))))
 
     // ann_ivf: cell-partitioned IVF index over page-CONTENT embeddings
     // (the summary embeddings are fake-constant here, so the content
@@ -301,9 +322,8 @@ object Pipeline {
     // vector index (neo4j_manager.py:226-230), as a first-class
     // resumable stage; probes (AnnOps.ivfTopKIndexed) get partition
     // pruning. Map-side embed + cell assignment; one partitioned write.
-    graft.ops.AnnOps.buildIvfIndex(spark, outDir, pageTextEmbeddings(g.extracted),
-      "id", "emb", snapshotId,
-      seed = AnnSeed, nCells = AnnCells, dim = AnnDim)
+    commit("ann_ivf")(graft.ops.AnnOps.assignCells(pageTextEmbeddings(g.extracted),
+      "id", "emb", AnnSeed, AnnCells, AnnDim))
     ()
   }
 

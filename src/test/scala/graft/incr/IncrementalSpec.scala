@@ -149,6 +149,23 @@ class IncrementalSpec extends SparkSpec {
       })
     }.toMap
 
+  test("update to an empty snapshot == fresh full build of the empty snapshot") {
+    // every page deleted: every table ends empty except what a build of
+    // no pages writes too (the PROJECT root and its roll-up)
+    val incDir = copyOf(oldStore, "graft-empty")
+    Incremental.update(spark, oldPages, oldPages.limit(0),
+      Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages,
+      incDir, "snap-empty", N) should not be empty
+    val fullDir = Files.createTempDirectory("graft-empty-full").toString
+    Pipeline.build(spark, oldPages.limit(0), Synth.aliases(spark, cfg),
+      Synth.sameAs(spark, cfg), cfg.nPages, fullDir, "snap-empty", N)
+    val (incRows, fullRows) = (storeRows(incDir), storeRows(fullDir))
+    for (stage <- Pipeline.StageVersions.keys) withClue(s"$stage: ") {
+      incRows(stage) shouldBe fullRows(stage)
+    }
+    incRows("triples") shouldBe empty
+  }
+
   private def fileSet(dir: String): Set[String] = {
     val p = java.nio.file.Paths.get(dir)
     if (!Files.exists(p)) Set.empty
