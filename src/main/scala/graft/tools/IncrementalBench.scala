@@ -17,7 +17,8 @@ import org.apache.spark.sql.SparkSession
   * bucket design optimizes for. A mutation that changes a head alias's
   * document frequency correctly forces a global relink instead
   * (incremental ≡ full rebuild comes first); UpdateKg demos that path.
-  * Prints one JSON line with both walls.
+  * Prints one JSON line with both walls and both Spark job counts
+  * (`Harness.measure`).
   */
 object IncrementalBench {
   def main(args: Array[String]): Unit = {
@@ -52,25 +53,24 @@ object IncrementalBench {
 
     val outDir = java.nio.file.Files
       .createTempDirectory("graft-incr-bench").toString
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    val fullSecs = time {
+    val jobs = new JobCounter(spark.sparkContext)
+    val (_, full) = Harness.measure(jobs, "build") {
       Pipeline.build(spark, oldPages(), Synth.aliases(spark, cfg),
         Synth.sameAs(spark, cfg), cfg.nPages, outDir, "snap-old", nBuckets)
     }
-    var dirty = Seq.empty[Long]
-    val updSecs = time {
-      // production path: diff against the persisted urlhash stage — the
-      // old corpus is never read
-      dirty = Incremental.updateFromStored(spark, newPages(),
+    // production path: diff against the persisted urlhash stage — the
+    // old corpus is never read
+    val (dirty, upd) = Harness.measure(jobs, "update") {
+      Incremental.updateFromStored(spark, newPages(),
         Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages,
         outDir, "snap-new", nBuckets)
     }
+    jobs.close()
     println(f"""{"bench":"incremental","pages":$nPages,"buckets":$nBuckets,""" +
       f""""changed_pages":$nChanged,"dirty_buckets":${dirty.size},""" +
-      f""""full_build_secs":$fullSecs%.2f,"update_secs":$updSecs%.2f,""" +
-      f""""speedup":${fullSecs / updSecs}%.2f}""")
+      f""""full_build_secs":${full.secs}%.2f,"update_secs":${upd.secs}%.2f,""" +
+      f""""build_jobs":${full.jobs},"update_jobs":${upd.jobs},""" +
+      f""""speedup":${full.secs / upd.secs}%.2f}""")
     spark.stop()
   }
 }
