@@ -507,7 +507,7 @@ object Incremental {
       val both = if (force) hashed(placed, 1)
         else hashed(placed, 1).union(hashed(stored(stage, scope), 0))
       // one job: per side and partition, the row count and an xor of row
-      // hashes for each column list (Checksum.of's order-insensitive sum)
+      // hashes for each column list (Checksum.of, grouped by partition)
       val got = both.groupBy(("side" +: l.parts).map(col): _*)
         .agg(count(lit(1)), sets.indices.map(i => bit_xor(col(s"h$i"))): _*)
         .collect().map(_.toSeq).groupBy(_.head).withDefaultValue(Array.empty)

@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Order-insensitive (count, xor-of-row-hashes) table checksum — one
-  * cheap aggregate, used both for fixpoint convergence detection
-  * (ConnectedComponents) and for did-this-table-change decisions
-  * (Incremental). bit_xor is overflow-free under ANSI mode (sum over
-  * xxhash64 is not). */
+  * cheap aggregate, used for fixpoint convergence detection
+  * (ConnectedComponents); the incremental updater's did-this-scope-change
+  * check computes the same pair per partition. bit_xor is overflow-free
+  * under ANSI mode (sum over xxhash64 is not). */
 object Checksum {
   def of(df: DataFrame, cols: Seq[String]): (Long, Long) = {
     val r = df.agg(
