@@ -119,6 +119,9 @@ class IncrementalSpec extends SparkSpec {
       incRows(stage) shouldBe fullRows(stage)
     }
 
+    // the build records what it committed
+    assertRecorded(fullDir)
+
     // deleted page really gone; changed page's new mention present
     val t = triplesOf(incDir)
     t.exists(r => r.head.toString.endsWith("/7")) shouldBe false
@@ -148,6 +151,26 @@ class IncrementalSpec extends SparkSpec {
           .collect().map(_.getString(0)).toSet
       })
     }.toMap
+
+  /** Every committed stage of a store records what it holds: the
+    * manifest's rows are the table's count, and the lineage rows of the
+    * manifest's snapshot id are its rows per bucket (one partition-0 row
+    * for a table without a bucket). */
+  private def assertRecorded(dir: String): Unit = {
+    val lineage = spark.read.parquet(s"$dir/lineage")
+    for ((stage, l) <- Pipeline.Layouts) withClue(s"$stage: ") {
+      val m = graft.meta.Snapshot.readManifest(s"$dir/$stage").get
+      val rows = spark.read.schema(l.schema).parquet(s"$dir/$stage/data")
+      m.rows shouldBe rows.count()
+      val perBucket =
+        if (l.parts.contains("bucket")) rows.groupBy(col("bucket").cast("int")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq
+        else Seq(0 -> m.rows)
+      lineage.filter(col("stage") === stage && col("snapshot_id") === m.snapshotId)
+        .select(col("partition_id"), col("rows_out")).collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toSeq.sorted shouldBe perBucket.sorted
+    }
+  }
 
   test("update to an empty snapshot == fresh full build of the empty snapshot") {
     // every page deleted: every table ends empty except what a build of
