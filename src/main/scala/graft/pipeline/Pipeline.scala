@@ -276,7 +276,9 @@ object Pipeline {
       keepOrphans: Boolean = false): Unit = {
     def commit(name: String, arrange: Boolean = true)(body: => DataFrame): DataFrame = {
       val l = Layouts(name)
-      val placed = l.placed(body, nBuckets)
+      // a def, evaluated only inside the stage body: a resumed stage runs
+      // none of its body's jobs
+      def placed = l.placed(body, nBuckets)
       Snapshot.stage(spark, outDir, name, snapshotId, l.version, l.parts)(
         if (arrange) l.arranged(placed) else placed)
     }

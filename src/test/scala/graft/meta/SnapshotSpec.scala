@@ -110,8 +110,15 @@ class SnapshotSpec extends SparkSpec {
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
     t2 shouldBe t1
 
-    // full re-run with same snapshot id recomputes nothing and changes nothing
-    buildOnce()
+    // full re-run with same snapshot id recomputes nothing and changes
+    // nothing: no stage body runs, each stage only reads its committed
+    // table's schema (one job), and no lineage row is added
+    val lineageRows = spark.read.parquet(s"$dir/lineage").count()
+    val jobs = new graft.tools.JobCounter(spark.sparkContext)
+    val (_, resumed) =
+      try graft.tools.Harness.measure(jobs, "resume")(buildOnce()) finally jobs.close()
+    resumed.jobs should be <= Pipeline.Layouts.size.toLong
+    spark.read.parquet(s"$dir/lineage").count() shouldBe lineageRows
     val t3 = spark.read.parquet(s"$dir/triples/data")
       .select("subj", "pred", "obj").collect().map(_.toSeq).toSet
     t3 shouldBe t1
