@@ -7,10 +7,11 @@ import graft.meta.Snapshot
 import graft.model._
 import graft.pipeline.Pipeline
 import graft.emit.Emit
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MapType
+
+import scala.collection.mutable
 
 /** Incremental rebuild — the Spark shape of the reference's GraphUpdater
   * (clangd_graph_rag_updater.py:43-82, SURVEY.md §3.2):
@@ -413,19 +414,16 @@ object Incremental {
     // a rerun redoes the same update (force-mode, see above).
     store.commit("urlhash", in(dirty))(newH.select(col("url"), col("new_h").as("h")))
 
-    // stamp manifests with the new snapshot id (≙ PROJECT.commit_hash
+    // record every stage under the new snapshot id (≙ PROJECT.commit_hash
     // stamp, clangd_graph_rag_builder.py:112-122)
-    stageVersions.foreach {
-      case (stage, v) => Snapshot.stamp(spark, outDir, stage, newSnapshotId, v)
-    }
+    store.record(newSnapshotId)
     dirty
   }
 
   // ------------------------------------------------------------ helpers
 
-  /** The partitions a read or commit covers: each partition column with
-    * the values it takes, in the layout's order; empty = the whole table. */
-  private type Scope = Seq[(String, Seq[Any])]
+  /** The partitions a read or commit covers (`Snapshot.Scope`). */
+  private type Scope = Snapshot.Scope
 
   /** Buckets of link-neighbors (either direction) of `urls`. */
   private def nbrBucketsOf(
@@ -446,12 +444,15 @@ object Incremental {
       scope: Scope, filled: Set[Seq[Any]], changed: Boolean, watched: Seq[Boolean])
 
   /** The updater's one way into and out of a `Pipeline.build` store: its
-    * tables are read and committed as `Pipeline.Layouts` declares them.
+    * tables are read and committed as `Pipeline.Layouts` declares them,
+    * replaced with `Snapshot.replace` and recorded with `Snapshot.record`.
     * Under `force` (a crashed update) the stored scopes are untrusted: no
     * commit compares against them, and every commit counts as a change. */
   private final class Store(
       spark: SparkSession, outDir: String, nBuckets: Int, force: Boolean) {
     private def dir(stage: String) = s"$outDir/$stage/data"
+    /** Wall ms of the commits that rewrote each stage. */
+    private val wallMs = mutable.Map.empty[String, Long].withDefaultValue(0L)
     private def within(scope: Scope): Column =
       scope.map { case (c, vs) => col(c).isin(vs: _*) }.foldLeft(lit(true))(_ && _)
     private def stored(stage: String, scope: Scope): DataFrame =
@@ -473,23 +474,36 @@ object Incremental {
       * partition, and the scope partitions that got no rows are deleted;
       * the whole table for the empty scope. */
     def commit(stage: String, scope: Scope, watch: Seq[String]*)(
-        rows: DataFrame): Staged = {
+        rows: => DataFrame): Staged = {
+      val t0 = System.nanoTime()
       val s = staged(stage, scope, watch)(rows)
-      if (s.changed) write(stage, s)
+      if (s.changed) replace(stage, s, t0)
       s
     }
 
     /** Commits the (subj, obj) edges of `pred` to `buckets` of the
       * triples table and, from the same checkpointed rows, of its mirror,
       * the adjacency table (bucketed by src = subj). */
-    def commitEdges(pred: String, buckets: Seq[Long])(edges: DataFrame): Unit = {
-      val s = staged("triples", Seq("pred" -> Seq(pred), "bucket" -> buckets), Nil)(
+    def commitEdges(pred: String, buckets: Seq[Long])(edges: => DataFrame): Unit = {
+      val s = commit("triples", Seq("pred" -> Seq(pred), "bucket" -> buckets))(
         edges.select(col("subj"), lit(pred).as("pred"), col("obj")))
-      if (s.changed) {
-        write("triples", s)
-        write("adjacency", s.copy(placed = s.placed.select(col("subj").as("src"),
-          col("obj").as("dst"), col("pred"), col("bucket"))))
-      }
+      if (s.changed) replace("adjacency", s.copy(placed = s.placed.select(col("subj").as("src"),
+        col("obj").as("dst"), col("pred"), col("bucket"))), System.nanoTime())
+    }
+
+    /** Records every declared stage under `snapshotId` (`Snapshot.record`):
+      * its rows per lineage partition, counted over the stored tables in
+      * one job that reads only partition columns, and the wall of the
+      * commits that rewrote it in this update (0 if none did). */
+    def record(snapshotId: String): Unit = {
+      val counted = Pipeline.Layouts.map { case (stage, l) =>
+        stored(stage, Nil).select(lit(stage).as("stage"),
+          Snapshot.lineagePartition(l.parts).as("pid"))
+      }.reduce(_ union _).groupBy(col("stage"), col("pid")).count().collect()
+        .groupMap(_.getString(0))(r => r.getInt(1) -> r.getLong(2)).withDefaultValue(Array.empty)
+      Snapshot.record(spark, outDir, snapshotId, Pipeline.Layouts.map { case (stage, l) =>
+        Snapshot.Commit(stage, l.version, l.parts, counted(stage).toMap, wallMs(stage))
+      }.toSeq)
     }
 
     private def staged(stage: String, scope: Scope, watch: Seq[Seq[String]])(
@@ -519,21 +533,10 @@ object Incremental {
         diffs.head, diffs.tail)
     }
 
-    private def write(stage: String, s: Staged): Unit = {
+    private def replace(stage: String, s: Staged, t0: Long): Unit = {
       val l = Pipeline.Layouts(stage)
-      val w0 = l.arranged(s.placed).write.mode(SaveMode.Overwrite)
-      val w = if (l.parts.isEmpty) w0 else w0.partitionBy(l.parts: _*)
-      if (s.scope.isEmpty) w.parquet(dir(stage))
-      else {
-        w.option("partitionOverwriteMode", "dynamic").parquet(dir(stage))
-        val fs = new Path(dir(stage)).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        s.scope.foldLeft(Seq(Seq.empty[Any])) { case (ps, (_, vs)) =>
-          for (p <- ps; v <- vs) yield p :+ v
-        }.filterNot(s.filled).foreach { p =>
-          fs.delete(new Path(dir(stage), s.scope.map(_._1).zip(p)
-            .map { case (c, v) => s"$c=$v" }.mkString("/")), true)
-        }
-      }
+      Snapshot.replace(l.arranged(s.placed), dir(stage), l.parts, s.scope, s.filled)
+      wallMs(stage) += (System.nanoTime() - t0) / 1000000L
     }
   }
 }

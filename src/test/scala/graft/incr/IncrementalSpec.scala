@@ -126,9 +126,11 @@ class IncrementalSpec extends SparkSpec {
     val t = triplesOf(incDir)
     t.exists(r => r.head.toString.endsWith("/7")) shouldBe false
 
-    // manifests stamped with the new snapshot id
+    // manifests stamped with the new snapshot id, and the update records
+    // what it committed as the build does
     graft.meta.Snapshot.readManifest(s"$incDir/extracted").get.snapshotId shouldBe "snap-new"
     graft.meta.Snapshot.readManifest(s"$incDir/triples").get.snapshotId shouldBe "snap-new"
+    assertRecorded(incDir)
 
     // re-running the SAME update is a no-op-equivalent (kill-and-rerun
     // safety: a crashed update is recovered by running it again)
@@ -506,7 +508,8 @@ class IncrementalSpec extends SparkSpec {
     val incDir = copyOf(oldStore, "graft-verm")
     // forge a store committed by an OLDER engine: same snapshot id,
     // different stage version string
-    graft.meta.Snapshot.stamp(spark, incDir, "triples", "snap-old", "emit-v1")
+    graft.meta.Snapshot.record(spark, incDir, "snap-old", Seq(graft.meta.Snapshot.Commit(
+      "triples", "emit-v1", Pipeline.Layouts("triples").parts, Map.empty, 0L)))
     val e = intercept[IllegalStateException] {
       Incremental.update(spark, oldPages, newPages,
         Synth.aliases(spark, cfg), Synth.sameAs(spark, cfg), cfg.nPages,
