@@ -138,10 +138,11 @@ object StreamingIngest {
             // the current watermark: a re-arrival more than ttl older
             // than the watermark would otherwise compute a timeout in
             // the past and the engine rejects it (found by the
-            // 100k-corpus StreamGateBench; in the MemoryStream specs
-            // such a row arrives below the watermark and is dropped as
-            // late before the gate). Such a key is evictable at the
-            // very next trigger, which the +1 encodes.
+            // 100k-corpus StreamGateBench). Such a row passes the late
+            // filter, which uses the previous batch's watermark, when no
+            // empty batch advanced that watermark first; StreamingSpec
+            // builds that case. Such a key is evictable at the very next
+            // trigger, which the +1 encodes.
             if (rs.nonEmpty)
               state.setTimeoutTimestamp(
                 math.max(rs.map(_.warc_ts.getTime).max + ttlMs,

@@ -202,32 +202,44 @@ class StreamingSpec extends SparkSpec {
     // the current watermark, whose naive event-time+ttl timeout lies in
     // the past — the engine rejects past timeouts, so the gate must
     // clamp (regression: found by StreamGateBench at 100k, crashed the
-    // query). Here the old row arrives below the watermark and is
-    // dropped as late before the gate, so this pins only that the query
-    // survives it.
+    // query). A micro-batch filters late rows against the PREVIOUS
+    // batch's watermark, while the gate's getCurrentWatermarkMs is
+    // already this batch's. With no-data batches off, no empty batch
+    // advances the late filter between a1's batch and a2's, so a2 passes
+    // it (late-filter watermark 0) and reaches the gate, whose watermark
+    // is 50 min: the timeout is clamped and a2 is admitted.
     import java.sql.Timestamp
     import graft.model.ExtractedPage
     implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[ExtractedPage]
-    val out = StreamingIngest.nearDupGate(mem.toDS(),
-      n = 3, k = 8, lateness = "10 minutes", ttlMs = 30L * 60 * 1000)
-    val q = out.writeStream.format("memory").queryName("neardup_late")
-      .outputMode(OutputMode.Append()).start()
-    val m = 60L * 1000L
-    def page(url: String, ts: Long, text: String) =
-      ExtractedPage(url, "s", new Timestamp(ts), text, "en", Nil, "sha", 0L)
-    mem.addData(page("a1", 60 * m, "alpha doc one two three four"))
-    q.processAllAvailable()
-    // watermark now ≈ 50 min; replay a row from t=5 min (55 min late,
-    // ttl is 30 min → naive timeout 35 min < watermark): must not crash
-    mem.addData(page("a2", 5 * m, "very old replayed doc six seven eight"))
-    q.processAllAvailable()
-    mem.addData(page("a3", 120 * m, "fresh doc nine ten eleven twelve"))
-    q.processAllAvailable()
-    val urls = spark.table("neardup_late").collect().map(_.getString(0)).toSet
-    q.stop()
-    urls should contain("a1")
-    urls should contain("a3")
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val prevNoData = spark.conf.getOption(noData)
+    spark.conf.set(noData, "false")
+    try {
+      val mem = MemoryStream[ExtractedPage]
+      val out = StreamingIngest.nearDupGate(mem.toDS(),
+        n = 3, k = 8, lateness = "10 minutes", ttlMs = 30L * 60 * 1000)
+      val q = out.writeStream.format("memory").queryName("neardup_late")
+        .outputMode(OutputMode.Append()).start()
+      val m = 60L * 1000L
+      def page(url: String, ts: Long, text: String) =
+        ExtractedPage(url, "s", new Timestamp(ts), text, "en", Nil, "sha", 0L)
+      mem.addData(page("a1", 60 * m, "alpha doc one two three four"))
+      q.processAllAvailable()
+      // watermark now 50 min; replay a row from t=5 min (55 min late,
+      // ttl is 30 min → naive timeout 35 min < watermark): must not crash
+      mem.addData(page("a2", 5 * m, "very old replayed doc six seven eight"))
+      q.processAllAvailable()
+      mem.addData(page("a3", 120 * m, "fresh doc nine ten eleven twelve"))
+      q.processAllAvailable()
+      val urls = spark.table("neardup_late").collect().map(_.getString(0)).toSet
+      q.stop()
+      urls should contain("a1")
+      urls should contain("a2") // reached the gate: its timeout was clamped
+      urls should contain("a3")
+    } finally prevNoData match {
+      case Some(v) => spark.conf.set(noData, v)
+      case None => spark.conf.unset(noData)
+    }
   }
 
   test("transformWithState near-dup gate admits the same pages (RocksDB TTL state)") {
