@@ -19,7 +19,8 @@ import scala.collection.mutable
   *   snapshot diff (≙ git diff-tree J13) → dirty-scope expansion →
   *   per-bucket dynamic partition OVERWRITE of every url-local table
   *   (≙ purge-stale + rebuild-dirty) → global recompute ONLY of the
-  *   tables that are global by nature → stamp the new snapshot id.
+  *   tables that are global by nature → record every table under the
+  *   new snapshot id.
   *
   * Scope discipline (what is rebuilt, and why it equals a full rebuild):
   *  - extracted / aliasdf: the dirty url-hash buckets only (extraction is
@@ -169,7 +170,7 @@ object Incremental {
     val dirtyActual = dirtyBuckets(d, nBuckets)
 
     // crash detection: a prior update invalidates every manifest up
-    // front and re-stamps them only on completion, so any missing
+    // front and records them again only on completion, so any missing
     // manifest means a previous run died mid-update and the derived
     // tables may be part-old/part-new. The change short-circuits below
     // compare against that mixed pre-state, so they are all DISABLED and
@@ -223,7 +224,7 @@ object Incremental {
 
     // mark every stage in-progress BEFORE any data dir is touched: a kill
     // mid-update must not leave old manifests pointing at mixed data
-    // (they are re-stamped with the new snapshot id at the end)
+    // (they are recorded under the new snapshot id at the end)
     stageVersions.foreach { case (s, _) => Snapshot.invalidate(s"$outDir/$s") }
 
     // snapshots of pre-update state this update still needs (collected —
@@ -374,7 +375,7 @@ object Incremental {
     // ---- ann_ivf: the content-embedding index is a pure function of
     // the page (url, text) set — refreshed when any text or the url set
     // moved (the same props change that drives the PAGE node rows),
-    // skipped (manifest restamp only) otherwise. CELL-granular: cells
+    // skipped (recorded only) otherwise. CELL-granular: cells
     // are content-derived (an edited page can hop cells), but only the
     // dirty pages' OLD cells and NEW cells change, and the stored rows
     // already carry their embeddings — so the update re-embeds ONLY the
