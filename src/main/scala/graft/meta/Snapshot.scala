@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * No Iceberg/Delta jars ship in this image, so snapshot/resume is a
   * small explicit protocol on plain Parquet:
   *  - a stage table lives at {base}/{stage}/data (Parquet, optionally
-  *    partitioned, a `bucket` column last);
+  *    partitioned; a bucketed table's last partition column is `bucket`);
   *  - Spark's committer writes via _temporary + rename and drops
   *    _SUCCESS only on full commit;
   *  - the write counts the rows it writes per bucket (an observed
